@@ -121,7 +121,8 @@ def q_w_main_page(spark: SparkSession, sf_dir: str) -> DataFrame:
       recursive CTE over the {301,302,307} first-wins edge map."""
     from warc2zim_spark.operators.gather import main_page_candidate, main_page_resolved
 
-    content = _content(spark, sf_dir)
+    # materialized once: the J5 walk scans the stream once per hop
+    content = _content(spark, sf_dir).localCheckpoint()
     auto = main_page_candidate(content).select(
         F.lit("auto").alias("kind"), "zim_path", "url"
     )
@@ -218,19 +219,21 @@ def q_w_rewrite_js(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_w_illustration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 full + C11 — favicon payload capture (broadcast semi-join of the
-    main page's icon candidates against the record stream), stdlib dimension
-    sniffing, A9 ranking, best-icon selection. Oracle re-derives the ranking
+    """J3 full + C11 — favicon payload capture (broadcast join of the main
+    page's icon candidates against the narrow record stream, payloads
+    fetched by (file_seq, rec_seq)), stdlib dimension sniffing, A9 ranking,
+    best-icon selection. Oracle re-derives the ranking
     in SQL over the icons_fixture table (captured candidates + dims)."""
     from warc2zim_spark.operators.favicon import best_illustration
     from warc2zim_spark.operators.gather import main_page_candidate
     from warc2zim_spark.operators.records import content_records
 
-    content = content_records(_records(spark, sf_dir), with_payload=True)
+    records = _records(spark, sf_dir)
+    content = content_records(records)
     main = main_page_candidate(content).select(
         "zim_path", F.col("url")
     )
-    return best_illustration(content, main).select(
+    return best_illustration(content, main, records=records).select(
         "icon_url", "fmt", "width", "height"
     )
 

@@ -79,6 +79,27 @@ class TestResume:
         ).collect()
         assert schedule_key(resumed) == schedule_key(full)
 
+    def test_uncommitted_wave_not_read_back(self, spark, web_tables, tmp_path):
+        """A wave dir whose write landed but whose _SUCCESS_WAVE marker did
+        not (crash in between) is not part of the crawl's result."""
+        seeds, robots, pages = web_tables
+        ckpt = tmp_path / "stale"
+        committed = run_crawl(
+            spark, seeds, pages, robots, str(ckpt),
+            max_waves=2, host_budget=4, wave_budget=50,
+        ).collect()
+        spark.createDataFrame(
+            [(2, "https://stale.example/x", "stale.example/x", "stale.example", 9, 0.5)],
+            "wave int, url string, surt_key string, host string, hops int, score double",
+        ).write.parquet(str(ckpt / "wave=2"))
+        assert last_committed_wave(str(ckpt)) == 1
+        resumed = resume_crawl(
+            spark, seeds, pages, robots, str(ckpt),
+            max_waves=2, host_budget=4, wave_budget=50,
+        ).collect()
+        assert all(r.wave != 2 for r in resumed)
+        assert schedule_key(resumed) == schedule_key(committed)
+
     def test_metrics_written(self, spark, web_tables, tmp_path):
         import json
 
@@ -89,6 +110,50 @@ class TestResume:
         )
         metrics = json.loads((tmp_path / "m" / "wave=0._metrics.json").read_text())
         assert metrics["scheduled"] > 0 and metrics["hosts"] > 0
+
+
+def _analyzed(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+class TestEnvCaps:
+    def test_caps_read_at_call_time(self, spark, monkeypatch):
+        """A changed cap takes effect on the next call, without a re-import:
+        the top-k leaves orderBy+limit for the windowed rank, and the fetch
+        join loses its broadcast hint."""
+        from warc2zim_spark.frontier.crawl import _normalize, crawl_wave
+        from warc2zim_spark.frontier.politeness import prioritize
+
+        cands = spark.createDataFrame(
+            [("a.example/1", 0, 1.0), ("a.example/2", 0, 0.5)],
+            "surt_key string, hops int, score double",
+        )
+        pages = spark.createDataFrame(
+            [("https://a.example/p1", bytearray(b"<html></html>"))],
+            "url string, html binary",
+        )
+        frontier = _normalize(spark.createDataFrame(
+            [("https://a.example/p1", 0, 1.0)], "url string, hops int, score double"
+        ))
+        seen = spark.createDataFrame([], "surt_key string")
+        robots = spark.createDataFrame(
+            [], "host string, rule_type string, path_prefix string, crawl_delay_ms int"
+        )
+
+        def shapes():
+            topk = prioritize(cands, wave_budget=1)
+            _, nxt = crawl_wave(frontier, seen, pages, robots, wave_budget=1)
+            return (
+                "GlobalLimit" in _analyzed(topk),
+                "strategy=broadcast" in _analyzed(nxt),
+            )
+
+        monkeypatch.delenv("W2ZS_TOPK_LIMIT_MAX", raising=False)
+        monkeypatch.delenv("W2ZS_FETCH_BROADCAST_MAX", raising=False)
+        assert shapes() == (True, True)
+        monkeypatch.setenv("W2ZS_TOPK_LIMIT_MAX", "0")
+        monkeypatch.setenv("W2ZS_FETCH_BROADCAST_MAX", "0")
+        assert shapes() == (False, False)
 
 
 class TestSaltedPoliteness:

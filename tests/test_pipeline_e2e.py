@@ -134,6 +134,27 @@ class TestRunPipeline:
                 continue_on_error=True,
             )
 
+    def test_job_count_pinned(self, spark, webdata, tmp_path):
+        """Each intermediate is derived once: one redirect fixpoint, one
+        bounded main-page walk, payloads fetched by position. A cold call on
+        this fixture runs 62 Spark jobs (127 when the fixpoint, the walk and
+        the payload-carrying content stream were each derived twice); any
+        re-derivation pushes it over the ceiling."""
+        from warc2zim_spark.plans.pipeline import run_pipeline
+
+        sc = spark.sparkContext
+        sc.setJobGroup("run_pipeline_jobs", "job-count pin")
+        try:
+            run_pipeline(
+                spark, webdata, str(tmp_path / "out_jobs"), name="n",
+                custom_css=b"body{}", continue_on_error=True,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("run_pipeline_jobs"))
+        assert 0 < n_jobs <= 64, n_jobs
+
     def test_favicon_override_with_fallback(self, spark, webdata, tmp_path):
         """--favicon pointing at a URL with no status-200 record: the
         override path runs, captures nothing, and the transparent fallback

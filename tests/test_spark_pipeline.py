@@ -232,6 +232,12 @@ class TestMainPageRedirect:
             # 308 must NOT participate in the main-page follow
             (0, 5, "response", 308, "https://m.example/perm", "m.example/perm", "/elsewhere"),
             (0, 6, "response", 200, "https://m.example/plain", "m.example/plain", None),
+            # cycles: loop-a ↔ loop-b; tail → ring-1 → ring-2 → ring-1
+            (0, 7, "response", 302, "https://m.example/loop-a", "m.example/loop-a", "/loop-b"),
+            (0, 8, "response", 301, "https://m.example/loop-b", "m.example/loop-b", "/loop-a"),
+            (0, 9, "response", 302, "https://m.example/tail", "m.example/tail", "/ring-1"),
+            (0, 10, "response", 301, "https://m.example/ring-1", "m.example/ring-1", "/ring-2"),
+            (0, 11, "response", 307, "https://m.example/ring-2", "m.example/ring-2", "/ring-1"),
         ]
         return spark.createDataFrame(
             rows,
@@ -260,6 +266,26 @@ class TestMainPageRedirect:
         ).collect()
         assert out[0].zim_path == "m.example/perm"
 
+    def test_cycle_lands_where_pointer_doubling_did(self, spark):
+        """A redirect cycle never terminates; the walk stops at f^MAX_CHAIN
+        (MAX_CHAIN = 32 = 2^5), the node the former 5-round pointer doubling
+        over the whole edge graph landed on."""
+        from warc2zim_spark.operators.gather import main_page_resolved
+
+        content = self._content(spark)
+        landed = {
+            start: main_page_resolved(
+                content, self._main(spark, f"m.example/{start}", f"https://m.example/{start}")
+            ).collect()[0].zim_path
+            for start in ("loop-a", "loop-b", "tail", "ring-1")
+        }
+        assert landed == {
+            "loop-a": "m.example/loop-a",  # even hop count returns home
+            "loop-b": "m.example/loop-b",
+            "tail": "m.example/ring-2",  # tail, then 31 hops round a 2-ring
+            "ring-1": "m.example/ring-1",
+        }
+
     def test_non_redirect_passthrough(self, spark):
         from warc2zim_spark.operators.gather import main_page_resolved
 
@@ -279,9 +305,11 @@ class TestIllustration:
         from warc2zim_spark.operators.records import content_records, load_records
         from warc2zim_spark.kernels.imagemeta import image_dims
 
-        content = content_records(load_records(spark, webdata), with_payload=True)
+        # narrow stream; payloads fetched from the raw records by position
+        records = load_records(spark, webdata)
+        content = content_records(records)
         main = main_page_candidate(content).select("zim_path", "url")
-        rows = best_illustration(content, main).collect()
+        rows = best_illustration(content, main, records=records).collect()
         assert len(rows) == 1
         best = rows[0]
         # datagen fixture: favicon0.ico=96px, alt.ico=48px → exact-48 tier wins
@@ -289,6 +317,22 @@ class TestIllustration:
         assert best.fmt == "PNG"
         # already PNG 48x48 → byte-identical passthrough of the record payload
         assert image_dims(bytes(best.illustration)) == ("PNG", 48, 48)
+
+    def test_payload_carrying_stream_same_pick(self, spark, webdata):
+        """Without ``records`` the stream's own payload column is the fetch
+        source — same icon as the positional fetch."""
+        from warc2zim_spark.operators.favicon import best_illustration
+        from warc2zim_spark.operators.gather import main_page_candidate
+        from warc2zim_spark.operators.records import content_records, load_records
+
+        records = load_records(spark, webdata)
+        narrow = content_records(records)
+        wide = content_records(records, with_payload=True)
+        main = main_page_candidate(narrow).select("zim_path", "url")
+        assert (
+            best_illustration(wide, main).collect()
+            == best_illustration(narrow, main, records=records).collect()
+        )
 
     def test_unparseable_payload_skipped(self, spark):
         from warc2zim_spark.operators.favicon import ranked_icons

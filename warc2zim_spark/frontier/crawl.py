@@ -21,7 +21,6 @@ ties broken by surt_key.
 from __future__ import annotations
 
 import json
-import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +28,7 @@ from pyspark.sql import functions as F
 
 from warc2zim_spark.frontier.politeness import (
     DEFAULT_SALT_PARTITIONS,
+    env_cap,
     politeness_budget,
     prioritize,
     robots_allowed,
@@ -38,14 +38,13 @@ from warc2zim_spark.functions import udfs
 
 SCORE_DECAY = 0.5
 
-# scale guards for the broadcast fast paths (r06). Wave schedules and
-# exact-mode seen sets are broadcast-joined while they provably fit (keys
-# only, ~100 B/row → ≤ a few hundred MB at these caps); beyond them the
-# plain shuffle joins (and, for seen, the partitioned-bloom mode — the
-# actual 10^10-key design point) take over. Env-overridable for cluster
+# scale guards for the broadcast fast paths (r06), read per call with
+# env_cap: wave schedules (W2ZS_FETCH_BROADCAST_MAX) and exact-mode seen sets
+# (W2ZS_SEEN_BROADCAST_MAX) are broadcast-joined while they provably fit
+# (keys only, ~100 B/row → ≤ a few hundred MB at the default caps); beyond
+# them the plain shuffle joins (and, for seen, the partitioned-bloom mode —
+# the actual 10^10-key design point) take over. Env-overridable for cluster
 # tiers with more executor memory.
-_FETCH_BROADCAST_MAX = int(os.environ.get("W2ZS_FETCH_BROADCAST_MAX", "2000000"))
-_SEEN_BROADCAST_MAX = int(os.environ.get("W2ZS_SEEN_BROADCAST_MAX", "2000000"))
 
 
 # rows whose url failed canonicalization or host extraction (UDFs return
@@ -168,7 +167,7 @@ def crawl_wave(
     # one task — guide §8: decide with small rows, move big rows once).
     page_keyed = pages_keyed if pages_keyed is not None else page_lookup(pages)
     hits = scheduled.join(page_keyed, "surt_key")
-    if wave_budget is not None and wave_budget <= _FETCH_BROADCAST_MAX:
+    if wave_budget is not None and wave_budget <= env_cap("W2ZS_FETCH_BROADCAST_MAX"):
         hits = F.broadcast(hits)
     fetched = hits.join(
         pages.select(F.col("url").alias("page_url"), "html"), "page_url"
@@ -307,7 +306,9 @@ def run_crawl(
                 salt_partitions if frontier_count >= salt_min_candidates else 0
             )
             seen_for_wave = (
-                F.broadcast(seen) if seen_count <= _SEEN_BROADCAST_MAX else seen
+                F.broadcast(seen)
+                if seen_count <= env_cap("W2ZS_SEEN_BROADCAST_MAX")
+                else seen
             )
             scheduled, next_frontier = crawl_wave(
                 frontier, seen_for_wave, pages, robots,
@@ -382,7 +383,12 @@ def run_crawl(
             frontier = frontier_ckpt.filter(_valid())
         warm_lookup.result()
     pages_keyed.unpersist()
-    waves = sorted(int(p.name.split("=")[1]) for p in ckpt.glob("wave=*") if p.is_dir())
+    # committed waves only: a wave dir whose write finished but whose marker
+    # never landed (crash in between) is not part of the crawl
+    waves = sorted(
+        int(p.name.split("=")[1]) for p in ckpt.glob("wave=*")
+        if p.is_dir() and (ckpt / f"{p.name}._SUCCESS_WAVE").exists()
+    )
     return (
         spark.read.parquet(*[str(ckpt / f"wave={w}") for w in waves])
         if waves

@@ -19,6 +19,8 @@ robots):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -28,12 +30,16 @@ WAVE_MS = 30_000              # nominal wall-clock per wave for delay budgeting
 # kills the zipf-hot-host straggler (one host holding 30% of candidates would
 # otherwise serialize into a single window task). Result provably identical.
 DEFAULT_SALT_PARTITIONS = 32
-# largest wave budget served by orderBy+limit (TakeOrderedAndProject): the
-# per-partition top-k queue holds `budget` rows, so the cap bounds per-task
-# memory at ~budget × rowsize; larger budgets take the windowed-rank path.
-import os as _os
 
-_TOPK_LIMIT_MAX = int(_os.environ.get("W2ZS_TOPK_LIMIT_MAX", "2000000"))
+
+def env_cap(name: str) -> int:
+    """A fast-path row cap from the environment (default 2,000,000), read at
+    call time so a changed value takes effect without a re-import.
+    ``W2ZS_TOPK_LIMIT_MAX``: largest wave budget served by orderBy+limit
+    (TakeOrderedAndProject) — the per-partition top-k queue holds `budget`
+    rows, so the cap bounds per-task memory at ~budget × rowsize; larger
+    budgets take the windowed-rank path."""
+    return int(os.environ.get(name, "2000000"))
 
 
 def robots_allowed(candidates: DataFrame, robots: DataFrame, path_col: str = "surt_key") -> DataFrame:
@@ -186,7 +192,7 @@ def prioritize(
     # budget would pin ~GBs per task — beyond the cap, fall back to the
     # windowed global rank over the salt-shrunk survivors (the pre-phase
     # above bounds that window's input at salt_partitions × budget).
-    if wave_budget <= _TOPK_LIMIT_MAX:
+    if wave_budget <= env_cap("W2ZS_TOPK_LIMIT_MAX"):
         return df.orderBy(
             F.asc("hops"), F.desc("score"), F.asc("surt_key")
         ).limit(wave_budget)

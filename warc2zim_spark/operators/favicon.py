@@ -11,8 +11,10 @@ that converts to a 48×48 PNG becomes the ZIM illustration, else the default
 transparent fallback.
 
 Spark shape: candidates are a ~5-row frame (one main page) — they broadcast
-into a semi-join against the record stream (J3's payload-capture join; the
-stream is never collected); dimension sniffing is a pandas UDF over the few
+into a join against the narrow content stream (J3's capture join; the stream
+is never collected), which yields record positions; the few payloads are then
+fetched from the raw records by (file_seq, rec_seq)
+(``records.fetch_payloads``); dimension sniffing is a pandas UDF over the few
 captured payloads using the stdlib header parser (kernels/imagemeta — REAL
 dimensions, not a stub); ranking is the same Catalyst expression the
 w_icon_rank query pins.
@@ -37,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from warc2zim_spark.functions import udfs
+from warc2zim_spark.operators.records import fetch_payloads
 
 ZIM_ILLUSTRATION_SIZE = 48
 
@@ -60,23 +63,29 @@ def _image_dims(payloads: pd.Series) -> pd.DataFrame:
 
 
 def favicon_candidates(
-    records_with_payload: DataFrame, main: DataFrame, decode_options=None
+    content: DataFrame, main: DataFrame, decode_options=None,
+    records: DataFrame | None = None,
 ) -> DataFrame:
     """(icon_url, icon_path) — the main page's declared icons resolved
     absolute + canonicalized, fallback /favicon.ico (converter.py:716-733).
     ``main``: 1-row (zim_path, url). Output is a tiny frame.
     ``decode_options`` tunes the main-page HTML decode the icon scan reads
-    (same knobs as the quarantine probe — main.py:113-158)."""
+    (same knobs as the quarantine probe — main.py:113-158).
+    ``content``: the record stream, payload-free is enough; the main page's
+    payload is fetched by position from ``records`` (default: ``content``,
+    when that stream carries ``payload``)."""
     mp = main.limit(1).select(F.col("zim_path").alias("mp_path"),
                               F.col("url").alias("mp_url"))
-    mp_record = (
-        records_with_payload.join(
+    mp_pos = (
+        content.join(
             F.broadcast(mp), F.col("zim_path") == F.col("mp_path"), "inner"
         )
         .filter(F.col("rec_type") == "response")
         .orderBy("file_seq", "rec_seq")
         .limit(1)
+        .select("file_seq", "rec_seq", "mp_url")
     )
+    mp_record = fetch_payloads(records if records is not None else content, mp_pos)
     decode_udf = (
         udfs.decode_payload if decode_options is None
         else udfs.make_decode_payload_udf(decode_options)
@@ -105,32 +114,32 @@ def favicon_candidates(
 
 
 def favicon_payloads(
-    records_with_payload: DataFrame, candidates: DataFrame
+    content: DataFrame, candidates: DataFrame, records: DataFrame | None = None
 ) -> DataFrame:
     """J3's capture join: status-200 response payloads at candidate paths
-    (converter.py:548-556). The tiny candidate frame broadcasts; the record
+    (converter.py:548-556). The tiny candidate frame broadcasts; the content
     stream streams through the hash join unshuffled. Last record per path
-    wins (dict-overwrite)."""
+    wins (dict-overwrite). The winners' payloads are fetched by position
+    from ``records`` (default: ``content``, as in ``favicon_candidates``)."""
     hits = (
-        records_with_payload.filter(F.col("rec_type") == "response")
+        content.filter(F.col("rec_type") == "response")
         .filter(F.col("status") == 200)
         .join(
             F.broadcast(candidates),
             F.col("zim_path") == F.col("icon_path"),
             "inner",
         )
-        .select("icon_url", "icon_path", "payload", "file_seq", "rec_seq")
+        .select("icon_url", "icon_path", "file_seq", "rec_seq")
     )
     from pyspark.sql import Window
 
     w = Window.partitionBy("icon_path").orderBy(
         F.desc("file_seq"), F.desc("rec_seq")
     )
-    return (
-        hits.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "file_seq", "rec_seq")
-    )
+    last = hits.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
+    return fetch_payloads(
+        records if records is not None else content, last.drop("_rn")
+    ).select("icon_url", "icon_path", "payload")
 
 
 def ranked_icons(captured: DataFrame) -> DataFrame:
@@ -178,42 +187,8 @@ def _to_illustration(payloads: pd.Series, fmts: pd.Series, widths: pd.Series,
     return pd.Series(out)
 
 
-def illustration_from_url(
-    records_with_payload: DataFrame, icon_url: str
-) -> DataFrame:
-    """--favicon override (main.py:40, converter.py:716-733 'try user icon
-    first'): skip discovery, capture + size + convert the record at the
-    user-given URL. 0 rows when the archive holds no such record (caller
-    falls back to discovery/transparent default)."""
-    from warc2zim_spark.kernels.surt import canonicalize
-
-    spark = records_with_payload.sparkSession
-    icon_path = canonicalize(icon_url)
-    if icon_path is None:
-        raise ValueError(f"favicon url does not canonicalize: {icon_url!r}")
-    cand = spark.createDataFrame(
-        [(icon_url, icon_path)], "icon_url string, icon_path string"
-    )
-    return (
-        ranked_icons(favicon_payloads(records_with_payload, cand))
-        .filter(F.col("pref_rank") == 1)
-        .select(
-            "icon_url", "fmt", "width", "height",
-            _to_illustration(
-                F.col("payload"), F.col("fmt"), F.col("width"), F.col("height")
-            ).alias("illustration"),
-        )
-    )
-
-
-def best_illustration(
-    records_with_payload: DataFrame, main: DataFrame, decode_options=None
-) -> DataFrame:
-    """1-row (icon_url, fmt, width, height, illustration) — or 0 rows when
-    no candidate parses (caller falls back to the default transparent PNG,
-    converter.py:920-924)."""
-    candidates = favicon_candidates(records_with_payload, main, decode_options)
-    captured = favicon_payloads(records_with_payload, candidates)
+def _best_of(captured: DataFrame) -> DataFrame:
+    """Rank-1 capture → 1-row (icon_url, fmt, width, height, illustration)."""
     return (
         ranked_icons(captured)
         .filter(F.col("pref_rank") == 1)
@@ -224,3 +199,37 @@ def best_illustration(
             ).alias("illustration"),
         )
     )
+
+
+def illustration_from_url(
+    content: DataFrame, icon_url: str, records: DataFrame | None = None
+) -> DataFrame:
+    """--favicon override (main.py:40, converter.py:716-733 'try user icon
+    first'): skip discovery, capture + size + convert the record at the
+    user-given URL. 0 rows when the archive holds no such record (caller
+    falls back to discovery/transparent default). ``records`` as in
+    ``favicon_payloads``."""
+    from warc2zim_spark.kernels.surt import canonicalize
+
+    spark = content.sparkSession
+    icon_path = canonicalize(icon_url)
+    if icon_path is None:
+        raise ValueError(f"favicon url does not canonicalize: {icon_url!r}")
+    cand = spark.createDataFrame(
+        [(icon_url, icon_path)], "icon_url string, icon_path string"
+    )
+    return _best_of(favicon_payloads(content, cand, records))
+
+
+def best_illustration(
+    content: DataFrame, main: DataFrame, decode_options=None,
+    records: DataFrame | None = None,
+) -> DataFrame:
+    """1-row (icon_url, fmt, width, height, illustration) — or 0 rows when
+    no candidate parses (caller falls back to the default transparent PNG,
+    converter.py:920-924). ``records``: the payload-bearing raw records the
+    main page and icon payloads are fetched from by position, so
+    ``content`` may be the cached narrow stream; without it ``content``
+    itself must carry ``payload``."""
+    candidates = favicon_candidates(content, main, decode_options, records)
+    return _best_of(favicon_payloads(content, candidates, records))

@@ -70,26 +70,40 @@ def main_page_resolved(
     ALSO carries an earlier first-wins redirect record, or when a caller
     supplies the path explicitly).
 
-    Distributed shape: the {301,302,307} first-wins edge map is chased to
-    its last node with pointer doubling (redirects.chase_chain) — no
-    driver-side loop; the main row then left-joins the (node → final) map.
-    Output: (zim_path, url) with zim_path re-pointed when a chain applies."""
-    from warc2zim_spark.operators.redirects import chase_chain, redirect_edges
+    Shape: a bounded single-row walk on the driver — one filtered lookup of
+    the {301,302,307} first-wins edge map per hop (``redirect_target``), at
+    most ``MAX_CHAIN`` hops, so a main page that is not a redirect costs one
+    lookup job and the edge graph is never chased as a whole. The walk lands
+    on f^MAX_CHAIN(main), f the first-wins edge step (absorbing at a path
+    with no edge) — the node 5 pointer-doubling rounds reach; on a cycle it
+    is read off the visited list instead of walked. ``content`` should be
+    cached — each hop scans it.
+    Output: a local 1-row (zim_path, url) frame with zim_path re-pointed when
+    a chain applies; 0 rows when ``main`` is empty."""
+    from warc2zim_spark.operators.redirects import MAX_CHAIN, redirect_target
 
     if main is None:
         main = main_page_candidate(content)
-    edges = redirect_edges(
-        content,
-        status_filter=lambda s: s.isin(list(MAIN_PAGE_REDIRECT_STATUSES)),
-    )
-    final = chase_chain(edges)
-    return (
-        main.join(final, main.zim_path == final.node, "left")
-        .select(
-            F.coalesce(F.col("final_path"), F.col("zim_path")).alias("zim_path"),
-            "url",
-        )
-    )
+    schema = "zim_path string, url string"
+    spark = content.sparkSession
+    rows = main.select("zim_path", "url").limit(1).collect()
+    if not rows:
+        return spark.createDataFrame([], schema)
+    path, url = rows[0]
+    j5 = lambda s: s.isin(list(MAIN_PAGE_REDIRECT_STATUSES))  # noqa: E731
+    walk = [path]  # walk[i] = f^i(main)
+    while len(walk) <= MAX_CHAIN:
+        nxt = redirect_target(content, walk[-1], status_filter=j5)
+        if nxt is None:
+            break
+        if nxt in walk:
+            # cycle walk[mu:] repeats with period len(walk) - mu: jump
+            # straight to f^MAX_CHAIN instead of walking the remaining hops
+            mu = walk.index(nxt)
+            walk.append(walk[mu + (MAX_CHAIN - mu) % (len(walk) - mu)])
+            break
+        walk.append(nxt)
+    return spark.createDataFrame([(walk[-1], url)], schema)
 
 
 def warcinfo_software(records: DataFrame) -> DataFrame:

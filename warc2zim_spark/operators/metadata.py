@@ -151,6 +151,7 @@ def zim_metadata(
     date: str | None = None,
     illustration: bytes | None = None,
     main: DataFrame | None = None,
+    main_path: str | None = None,
     validate: bool = True,
     decode_options=None,
 ) -> DataFrame:
@@ -170,9 +171,14 @@ def zim_metadata(
       X-ContentDate = warc_start or 'start,end' (converter.py:381-394)
 
     All derived pieces are 1-row aggregates crossJoined then unpivoted with
-    stack() — no collect, no wide shuffle. ``validate=False`` is the
+    stack() — nothing wide is collected, no wide shuffle. ``validate=False`` is the
     reference's ``--disable-metadata-checks`` (main.py:105-111,
-    converter.py:279)."""
+    converter.py:279).
+
+    ``main``: the main page before the J5 redirect follow (default: A4
+    auto-selection), walked here with ``main_page_resolved``; ``main_path``:
+    the already-followed main path, for a caller that resolved it once —
+    skips the walk (``main`` is then ignored)."""
     if validate:
         validate_metadata(
             title=title, description=description,
@@ -181,21 +187,24 @@ def zim_metadata(
 
     from warc2zim_spark.functions import udfs
     from warc2zim_spark.operators.gather import main_page_resolved
+    from warc2zim_spark.operators.records import fetch_payloads
 
-    mp = main_page_resolved(content, main).limit(1)
+    if main_path is None:
+        mp = main_page_resolved(content, main).collect()
+        main_path = mp[0].zim_path if mp else None
     # fetch the main page record's payload for title/lang extraction: the
     # content stream is payload-free by design (column pruning), so locate
-    # the record via (file_seq, rec_seq) and semi-join the payload-bearing
-    # raw records — always broadcasting the 1-row side, never the records
+    # the record's (file_seq, rec_seq) there and fetch its payload by
+    # position — never re-deriving the stream with payload
     mp_pos = (
-        content.join(F.broadcast(mp.select("zim_path")), "zim_path", "left_semi")
+        content.filter(F.col("zim_path") == F.lit(main_path))
         .filter(F.col("rec_type") == "response")
         .orderBy("file_seq", "rec_seq")
         .limit(1)
         .select("file_seq", "rec_seq")
     )
     mp_meta = (
-        records.join(F.broadcast(mp_pos), ["file_seq", "rec_seq"], "left_semi")
+        fetch_payloads(records, mp_pos)
         .select(
             udfs.extract_meta(
                 (

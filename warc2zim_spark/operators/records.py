@@ -172,3 +172,16 @@ def content_records(
         .withColumn("zim_path", udfs.surt_key(F.col("effective_url")))
         .filter(F.col("zim_path").isNotNull())
     )
+
+
+def fetch_payloads(records: DataFrame, positions: DataFrame) -> DataFrame:
+    """Positional payload fetch: ``positions`` — a few (file_seq, rec_seq,
+    ...) rows already located on the narrow content stream — gain the raw
+    record's ``payload`` and ``http_charset``. The few-row side always
+    broadcasts; the records stream through the hash probe unshuffled, so
+    neither the pairing window nor the url UDFs re-run just to find a
+    handful of payloads (``content_records`` keeps (file_seq, rec_seq), which
+    is unique per record)."""
+    return records.select(*ORDER_COLS, "payload", "http_charset").join(
+        F.broadcast(positions), ORDER_COLS
+    )

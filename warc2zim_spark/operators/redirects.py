@@ -30,18 +30,11 @@ from warc2zim_spark.functions.expressions import is_redirect_status
 MAX_CHAIN = 32  # chains longer than this are treated as loops and dropped
 
 
-def redirect_edges(content_records: DataFrame, status_filter=None) -> DataFrame:
-    """(src_path, tgt_path) edges: redirect-status responses with a Location
-    that resolves to a *different* ZimPath (converter.py:519-543, P10 self-
-    redirect drop); first occurrence per source wins (dict-insert semantics,
-    'if zim_path not in self.redirections').
-
-    ``status_filter``: optional Column predicate builder replacing the
-    default P9 whitelist — the main-page follow (J5) uses the narrower
-    {301, 302, 307} set (converter.py:588-592 lists MOVED_PERMANENTLY,
-    TEMPORARY_REDIRECT, FOUND — no 308)."""
+def _edge_rows(content_records: DataFrame, status_filter=None) -> DataFrame:
+    """Every candidate edge row (src_path, tgt_path, file_seq, rec_seq),
+    before the first-wins pick."""
     pred = status_filter if status_filter is not None else is_redirect_status
-    edges = (
+    return (
         content_records.filter(F.col("rec_type") == "response")
         .filter(pred(F.col("status")))
         .filter(F.col("http_location").isNotNull() & (F.col("http_location") != ""))
@@ -56,12 +49,43 @@ def redirect_edges(content_records: DataFrame, status_filter=None) -> DataFrame:
             "tgt_path", "file_seq", "rec_seq",
         )
     )
+
+
+def redirect_edges(content_records: DataFrame, status_filter=None) -> DataFrame:
+    """(src_path, tgt_path) edges: redirect-status responses with a Location
+    that resolves to a *different* ZimPath (converter.py:519-543, P10 self-
+    redirect drop); first occurrence per source wins (dict-insert semantics,
+    'if zim_path not in self.redirections').
+
+    ``status_filter``: optional Column predicate builder replacing the
+    default P9 whitelist — the main-page follow (J5) uses the narrower
+    {301, 302, 307} set (converter.py:588-592 lists MOVED_PERMANENTLY,
+    TEMPORARY_REDIRECT, FOUND — no 308)."""
     w = Window.partitionBy("src_path").orderBy("file_seq", "rec_seq")
     return (
-        edges.withColumn("rn", F.row_number().over(w))
+        _edge_rows(content_records, status_filter)
+        .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("src_path", "tgt_path")
     )
+
+
+def redirect_target(
+    content_records: DataFrame, src_path: str, status_filter=None
+) -> str | None:
+    """``redirect_edges``' target for ONE source path, or None: the same
+    first-wins pick as a filtered lookup (the path predicate reaches the
+    content scan, no shuffle) — one job, the step of a single-row chain walk.
+    Pass a cached content stream: every call scans it."""
+    rows = (
+        _edge_rows(
+            content_records.filter(F.col("zim_path") == src_path), status_filter
+        )
+        .orderBy("file_seq", "rec_seq")
+        .limit(1)
+        .collect()
+    )
+    return rows[0].tgt_path if rows else None
 
 
 def resolve_fixpoint(edges: DataFrame, expected: DataFrame) -> DataFrame:
@@ -166,62 +190,35 @@ def resolve_fixpoint(edges: DataFrame, expected: DataFrame) -> DataFrame:
     )
 
 
-def chase_chain(edges: DataFrame) -> DataFrame:
-    """(node, final_path) — follow edges to their last reachable node via
-    pointer doubling, absorbing at nodes with no outgoing edge. No
-    expected-set absorption: this is the raw chain-follow the main-page
-    redirect needs (converter.py:586-606 loops until the record at the path
-    is not a redirect). Cycles: after 2^K ≥ MAX_CHAIN doublings the walk
-    lands somewhere inside the cycle; callers that must detect loops join
-    ``final_path`` back against edge sources."""
-    nodes = (
-        edges.select(F.col("src_path").alias("node"))
-        .union(edges.select(F.col("tgt_path").alias("node")))
+def kept_sources(edges: DataFrame, expected: DataFrame) -> DataFrame:
+    """(src_path) of the redirects the fixpoint keeps — the one verdict both
+    sinks derive from. Each ``resolve_fixpoint`` call runs its pointer-doubling
+    rounds, so a caller writing both sinks computes this once (and caches the
+    narrow key set) and passes it to ``kept_redirects`` and
+    ``expected_with_redirects``."""
+    return resolve_fixpoint(edges, expected).filter(F.col("kept")).select("src_path")
+
+
+def kept_redirects(
+    edges: DataFrame, expected: DataFrame, kept: DataFrame | None = None
+) -> DataFrame:
+    """(src_path, tgt_path) of redirects to materialize (S6), i.e. the
+    reference's post-fixpoint ``self.redirections``. ``kept``: a precomputed
+    ``kept_sources`` frame; derived from ``edges``/``expected`` when absent."""
+    if kept is None:
+        kept = kept_sources(edges, expected)
+    return edges.join(kept, "src_path", "left_semi").select("src_path", "tgt_path")
+
+
+def expected_with_redirects(
+    edges: DataFrame, expected: DataFrame, kept: DataFrame | None = None
+) -> DataFrame:
+    """G3 — expected ∪ kept-redirect sources (converter.py:692-696).
+    ``kept`` as in ``kept_redirects``."""
+    if kept is None:
+        kept = kept_sources(edges, expected)
+    return (
+        expected.select("zim_path")
+        .union(kept.select(F.col("src_path").alias("zim_path")))
         .distinct()
     )
-    mapping = (
-        nodes.join(
-            edges.select(F.col("src_path").alias("e_src"), "tgt_path"),
-            F.col("node") == F.col("e_src"),
-            "left",
-        )
-        .select(
-            "node",
-            F.coalesce(F.col("tgt_path"), F.col("node")).alias("next"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    rounds = max(1, math.ceil(math.log2(MAX_CHAIN)))
-    for _ in range(rounds):
-        hop2 = mapping.select(
-            F.col("node").alias("j_node"), F.col("next").alias("j_next")
-        )
-        mapping = (
-            mapping.join(hop2, mapping.next == hop2.j_node, "left")
-            .select(
-                "node",
-                F.coalesce(F.col("j_next"), F.col("next")).alias("next"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return mapping.select("node", F.col("next").alias("final_path"))
-
-
-def kept_redirects(edges: DataFrame, expected: DataFrame) -> DataFrame:
-    """(src_path, tgt_path) of redirects to materialize (S6), i.e. the
-    reference's post-fixpoint ``self.redirections``."""
-    verdicts = resolve_fixpoint(edges, expected)
-    return (
-        edges.join(verdicts.filter(F.col("kept")), "src_path", "left_semi")
-        .select("src_path", "tgt_path")
-    )
-
-
-def expected_with_redirects(edges: DataFrame, expected: DataFrame) -> DataFrame:
-    """G3 — expected ∪ kept-redirect sources (converter.py:692-696)."""
-    kept_sources = (
-        resolve_fixpoint(edges, expected)
-        .filter(F.col("kept"))
-        .select(F.col("src_path").alias("zim_path"))
-    )
-    return expected.select("zim_path").union(kept_sources).distinct()

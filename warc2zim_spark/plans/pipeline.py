@@ -29,6 +29,7 @@ from warc2zim_spark.operators.gather import (
 from warc2zim_spark.operators.items import items_table, revisit_aliases
 from warc2zim_spark.operators.records import content_records, load_records
 from warc2zim_spark.operators.metadata import (
+    STATIC_JS_ASSETS,
     items_with_static,
     static_asset_items,
     validate_metadata,
@@ -37,6 +38,7 @@ from warc2zim_spark.operators.metadata import (
 from warc2zim_spark.operators.redirects import (
     expected_with_redirects,
     kept_redirects,
+    kept_sources,
     redirect_edges,
 )
 
@@ -61,6 +63,14 @@ def run_pipeline(
     progress_file: str | None = None,
 ) -> dict:
     """Full pass1 + pass2 → tables under ``out_dir``; returns run metrics.
+
+    Each intermediate is derived once and shared: the narrow content stream
+    is cached; the redirect fixpoint runs once, and both the redirects and
+    the expected sinks derive from its cached kept-source keys; the main
+    page is redirect-followed once, by a bounded single-row walk, and that
+    resolved row feeds the favicon discovery and the metadata; the few
+    payloads those need (main page, icons) are located on the cached stream
+    and fetched from the raw records by (file_seq, rec_seq).
 
     ``metadata_args``: keyword passthrough to ``zim_metadata`` (title,
     language, description, tags, ... — the reference's CLI flags).
@@ -165,8 +175,10 @@ def run_pipeline(
     # ---- pass 1: gather --------------------------------------------------
     expected = expected_items(content).cache()
     edges = redirect_edges(content).cache()
-    redirects = kept_redirects(edges, expected)
-    full_expected = expected_with_redirects(edges, expected)
+    # ONE fixpoint: both sinks derive from the same cached kept-source keys
+    kept = kept_sources(edges, expected).cache()
+    redirects = kept_redirects(edges, expected, kept)
+    full_expected = expected_with_redirects(edges, expected, kept)
 
     # S10: per-record failure isolation — capture fails BEFORE the item sink
     # so the policy (abort vs skip-record) can act on them
@@ -246,7 +258,8 @@ def run_pipeline(
 
     # main page: --url override or A4 auto-selection, then the J5 redirect
     # follow — Main-Path must point at the FINAL target when the landing
-    # path is a redirect source (converter.py:586-606)
+    # path is a redirect source (converter.py:586-606). Walked ONCE here;
+    # the resolved 1-row frame feeds the favicon path and zim_metadata.
     from warc2zim_spark.kernels.surt import canonicalize
     from warc2zim_spark.operators.gather import main_page_resolved
 
@@ -259,7 +272,8 @@ def run_pipeline(
         )
     else:
         main_df = main_page_candidate(content)
-    resolved_rows = main_page_resolved(content, main_df).limit(1).collect()
+    resolved = main_page_resolved(content, main_df)
+    resolved_rows = resolved.collect()  # local frame: no job
     if not resolved_rows:
         # converter.py:315-316: "Unable to find main path, aborting" — a ZIM
         # without a main page is unusable; fail rather than emit one
@@ -280,8 +294,10 @@ def run_pipeline(
             )
 
     # illustration: --favicon override, else discovery off the main page
-    # (J3 payload-capture join + A9 ranking); 0 captured rows → the
-    # transparent fallback inside zim_metadata (converter.py:920-924)
+    # (J3 capture join + A9 ranking), both located on the cached narrow
+    # content stream with payloads fetched from ``records`` by position;
+    # 0 captured rows → the transparent fallback inside zim_metadata
+    # (converter.py:920-924)
     meta_args = dict(metadata_args or {})
     if scraper_suffix is not None:
         meta_args.setdefault("scraper_suffix", scraper_suffix)
@@ -293,17 +309,12 @@ def run_pipeline(
             illustration_from_url,
         )
 
-        content_payload = content_records(records, with_payload=True)
         if favicon_url is not None:
-            best = illustration_from_url(content_payload, favicon_url)
+            best = illustration_from_url(content, favicon_url, records=records)
         else:
             best = best_illustration(
-                content_payload,
-                spark.createDataFrame(
-                    [(resolved_path, resolved_rows[0].url)],
-                    "zim_path string, url string",
-                ),
-                decode_options=downstream_decode,
+                content, resolved, decode_options=downstream_decode,
+                records=records,
             )
         illu_rows = best.select("illustration").limit(1).collect()
         if illu_rows:
@@ -312,7 +323,7 @@ def run_pipeline(
     # S7: the full metadata frame (validated fail-fast inside), plus the
     # engine's own operational entries — title/lang cascade off the SAME
     # main page the run selected (user --url or auto)
-    meta = zim_metadata(content, records, name=name, main=main_df,
+    meta = zim_metadata(content, records, name=name, main_path=resolved_path,
                         decode_options=downstream_decode, **meta_args)
     extra = spark.createDataFrame(
         [
@@ -323,7 +334,7 @@ def run_pipeline(
     )
     meta.unionByName(extra).write.mode("overwrite").parquet(str(out / "metadata"))
 
-    n_static = static_asset_items(spark, custom_css).count()
+    n_static = len(STATIC_JS_ASSETS) + (custom_css is not None)
     metrics = {
         "items": n_all_items - n_static,  # record-derived items
         "items_with_static": n_all_items,
@@ -339,5 +350,6 @@ def run_pipeline(
     written = int(n_all_items) + int(metrics["redirects"]) + int(metrics["aliases"])
     _progress(written, written)
     fails.unpersist()
+    kept.unpersist()
     content.unpersist()
     return metrics
