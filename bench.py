@@ -219,7 +219,7 @@ def run_scaling_workload(cpus: int, sf_dir: str, k: int | None = None) -> dict:
         ).alias("text"),
     ))
 
-    # frontier scheduling mega-wave: seen-filter → robots → salted politeness
+    # frontier scheduling mega-wave: seen-filter → robots → politeness
     # → global priority over millions of candidates. One wave, sized so the
     # scheduling OPERATORS dominate: the multi-wave loop's per-wave
     # synchronization (checkpoint + metrics + barrier) is a fixed cost that
@@ -249,8 +249,8 @@ def run_scaling_workload(cpus: int, sf_dir: str, k: int | None = None) -> dict:
         candidates = candidates_base.localCheckpoint(eager=False).filter(_valid())
         unseen = unseen_exact(candidates, seen)
         allowed = robots_allowed(unseen, robots)
-        polite = politeness_budget(allowed, robots, host_budget=100, salt_partitions=8)
-        return prioritize(polite, wave_budget=500_000, salt_partitions=8)
+        polite = politeness_budget(allowed, robots, host_budget=100)
+        return prioritize(polite, wave_budget=500_000)
 
     t_crawl, n_sched = timed(crawl_df)
 

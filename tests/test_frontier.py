@@ -156,34 +156,14 @@ class TestEnvCaps:
         assert shapes() == (False, False)
 
 
-class TestSaltedPoliteness:
-    def test_salted_equals_unsalted(self, spark, webdata):
-        """Hot-host salting is a pure physical rewrite: results identical."""
-        from warc2zim_spark.frontier.politeness import politeness_budget
-        from warc2zim_spark.functions import udfs
-
-        pages = spark.read.parquet(f"{webdata}/pages.parquet")
-        robots = spark.read.parquet(f"{webdata}/robots.parquet")
-        cands = (
-            pages.select(
-                udfs.surt_key(F.col("url")).alias("surt_key"),
-                udfs.host_of(F.col("url")).alias("host"),
-            )
-            .filter(F.col("surt_key").isNotNull())
-            .withColumn("hops", (F.xxhash64("surt_key") % 3).cast("int"))
-            .withColumn("score", (F.pmod(F.xxhash64("host", "surt_key"), F.lit(100)) / 100.0))
-            .distinct()
-        )
-        plain = politeness_budget(cands, robots, host_budget=5)
-        salted = politeness_budget(cands, robots, host_budget=5, salt_partitions=4)
-        key = lambda r: (r.host, r.surt_key)
-        assert sorted(map(key, plain.collect())) == sorted(map(key, salted.collect()))
-
-    def test_salted_prioritize_equals_unsalted(self, spark, webdata):
-        """Two-phase global top-k is a pure physical rewrite too."""
+class TestTopKFallback:
+    def test_windowed_rank_equals_take_ordered(self, spark, webdata, monkeypatch):
+        """Above W2ZS_TOPK_LIMIT_MAX the global top-k is a windowed rank
+        instead of orderBy+limit; both pick the same rows."""
         from warc2zim_spark.frontier.politeness import prioritize
         from warc2zim_spark.functions import udfs
 
+        # the fixture's zipf-skewed hosts: 30% of pages on one host
         pages = spark.read.parquet(f"{webdata}/pages.parquet")
         cands = (
             pages.select(
@@ -195,10 +175,15 @@ class TestSaltedPoliteness:
             .withColumn("score", (F.pmod(F.xxhash64("host", "surt_key"), F.lit(100)) / 100.0))
             .distinct()
         )
-        plain = prioritize(cands, wave_budget=37)
-        salted = prioritize(cands, wave_budget=37, salt_partitions=4)
-        key = lambda r: (r.host, r.surt_key)
-        assert sorted(map(key, plain.collect())) == sorted(map(key, salted.collect()))
+        monkeypatch.delenv("W2ZS_TOPK_LIMIT_MAX", raising=False)
+        take = prioritize(cands, wave_budget=37)
+        monkeypatch.setenv("W2ZS_TOPK_LIMIT_MAX", "0")
+        ranked = prioritize(cands, wave_budget=37)
+        assert "GlobalLimit" in _analyzed(take)
+        assert "GlobalLimit" not in _analyzed(ranked)
+        got_take, got_ranked = sorted(take.collect()), sorted(ranked.collect())
+        assert len(got_take) == 37
+        assert got_ranked == got_take
 
 
 class TestPoliteness:
@@ -234,51 +219,29 @@ class TestPoliteness:
         assert not (deny_hosts & scheduled_hosts)
 
 
-class TestCuckooFilter:
-    """north_rule names bloom/cuckoo: the cuckoo variant adds DELETION
-    (recrawl/expiry) that blooms cannot express."""
-
-    def _seen(self, spark, webdata):
-        from warc2zim_spark.functions import udfs
-
+class TestCrawlJobCount:
+    @pytest.mark.parametrize("seen_mode,ceiling", [("exact", 36), ("bloom", 53)])
+    def test_cold_crawl_job_count_pinned(self, spark, webdata, tmp_path, seen_mode, ceiling):
+        """Each frontier is materialized by one eager checkpoint job, with no
+        count beside it. A cold 3-wave crawl on this fixture runs 36 (exact)
+        / 53 (bloom) jobs on the calling thread; a lazy checkpoint plus a
+        count per frontier is 40 / 57."""
+        seeds = spark.read.parquet(f"{webdata}/seeds.parquet")
+        robots = spark.read.parquet(f"{webdata}/robots.parquet")
         pages = spark.read.parquet(f"{webdata}/pages.parquet")
-        return (
-            pages.select(udfs.surt_key(F.col("url")).alias("surt_key"))
-            .filter(F.col("surt_key").isNotNull())
-            .distinct()
-        )
-
-    def test_no_false_negatives_and_fp_budget(self, spark, webdata):
-        from warc2zim_spark.frontier.seenfilter import build_cuckoo, probe_cuckoo
-
-        seen = self._seen(spark, webdata)
-        filt = build_cuckoo(seen)
-        hits = probe_cuckoo(seen, filt, keep="hit")
-        assert hits.count() == seen.count()  # zero false negatives
-        absent = spark.range(2000).select(
-            F.concat(F.lit("never-seen.example/"), F.col("id")).alias("surt_key")
-        )
-        fp = probe_cuckoo(absent, filt, keep="hit").count()
-        assert fp <= 2000 * 0.05  # 1-byte fingerprints: ~3% budget
-
-    def test_delete_reopens_urls(self, spark, webdata):
-        from warc2zim_spark.frontier.seenfilter import (
-            build_cuckoo,
-            cuckoo_delete_keys,
-            probe_cuckoo,
-        )
-
-        seen = self._seen(spark, webdata)
-        filt = build_cuckoo(seen)
-        stale = seen.orderBy("surt_key").limit(50)
-        filt2 = cuckoo_delete_keys(filt, stale)
-        reopened = probe_cuckoo(stale, filt2, keep="miss").count()
-        # deleted keys become crawlable again (minus fingerprint collisions
-        # with still-present keys)
-        assert reopened >= 45
-        # everything else stays present: no false negatives introduced
-        rest = seen.join(stale, "surt_key", "left_anti")
-        assert probe_cuckoo(rest, filt2, keep="hit").count() == rest.count()
+        sc = spark.sparkContext
+        group = f"run_crawl_jobs_{seen_mode}"
+        sc.setJobGroup(group, "job-count pin")
+        try:
+            run_crawl(
+                spark, seeds, pages, robots, str(tmp_path / "jobs"),
+                max_waves=3, host_budget=4, wave_budget=50, seen_mode=seen_mode,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert 0 < n_jobs <= ceiling, n_jobs
 
 
 class TestBloomModeCrawl:

@@ -1,4 +1,5 @@
-"""Plan audits: pin the single-Arrow-eval property of UDF-bearing operators.
+"""Plan audits: pin the single-Arrow-eval property of UDF-bearing operators,
+and the frontier plan shapes the crawl wave relies on.
 
 Catalyst evaluates a Python UDF once per referencing operator: a Filter
 directly over a UDF Project (including plain explode's implicit non-empty
@@ -210,3 +211,92 @@ class TestFrontierPlanSingleEval:
         df.count()
         evals = _arrow_evals(df)
         assert evals.count("extract_meta") <= 1, evals
+
+
+def _plan_nodes(df) -> list[tuple[int, str]]:
+    """(depth, node text) per line of the physical plan, before execution."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    nodes = []
+    for line in plan.splitlines():
+        m = re.search(r"[A-Za-z]", line)
+        if m:
+            nodes.append((m.start(), line[m.start():]))
+    return nodes
+
+
+def _ancestors(nodes, i) -> list[str]:
+    """Node texts above ``nodes[i]``, nearest first."""
+    out, depth = [], nodes[i][0]
+    for d, text in reversed(nodes[:i]):
+        if d < depth:
+            out.append(text)
+            depth = d
+    return out
+
+
+class TestFrontierPlanShapes:
+    """The crawl wave has one politeness path, one top-k path and one exact
+    seen probe; hot-host skew is absorbed by Spark's own plan rules. These
+    pins fail if a Spark upgrade or a rewrite loses one of those shapes."""
+
+    @pytest.fixture(scope="class")
+    def cands(self, spark):
+        # 30 rows on one hot host plus a tail: the skew shape politeness caps
+        rows = [(f"hot.example/p{i}", "hot.example", i % 3, i / 30.0) for i in range(30)]
+        rows += [(f"t{i}.example/p", f"t{i}.example", 0, 0.5) for i in range(10)]
+        return spark.createDataFrame(
+            rows, "surt_key string, host string, hops int, score double"
+        )
+
+    @pytest.fixture(scope="class")
+    def robots(self, spark):
+        return spark.createDataFrame(
+            [("hot.example", "disallow", "/p1", 2000)],
+            "host string, rule_type string, path_prefix string, crawl_delay_ms int",
+        )
+
+    def test_politeness_partial_limit_below_host_exchange(self, cands, robots):
+        from warc2zim_spark.frontier.politeness import politeness_budget
+
+        nodes = _plan_nodes(politeness_budget(cands, robots, host_budget=4))
+        partial = [
+            i for i, (_, t) in enumerate(nodes)
+            if t.startswith("WindowGroupLimit") and t.endswith("Partial")
+        ]
+        assert len(partial) == 1, nodes
+        exchange = next(
+            t for t in _ancestors(nodes, partial[0]) if t.startswith("Exchange")
+        )
+        assert exchange.startswith("Exchange hashpartitioning(host#"), exchange
+        # Spark infers the limit only up to windowGroupLimitThreshold (1000)
+        over = _plan_nodes(politeness_budget(cands, robots, host_budget=1001))
+        assert not any(t.startswith("WindowGroupLimit") for _, t in over)
+
+    def test_prioritize_take_ordered_no_window(self, cands):
+        from warc2zim_spark.frontier.politeness import prioritize
+
+        nodes = [t for _, t in _plan_nodes(prioritize(cands, wave_budget=7))]
+        assert any(t.startswith("TakeOrderedAndProject") for t in nodes), nodes
+        assert not any(t.startswith("Window") for t in nodes), nodes
+
+    def test_exact_seen_broadcast_left_anti(self, spark, cands):
+        from warc2zim_spark.frontier.seenfilter import unseen_exact
+
+        seen = spark.createDataFrame([("hot.example/p0",)], "surt_key string")
+        nodes = [t for _, t in _plan_nodes(unseen_exact(cands, F.broadcast(seen)))]
+        assert any(
+            t.startswith("BroadcastHashJoin") and "LeftAnti" in t for t in nodes
+        ), nodes
+
+    def test_robots_no_window_no_candidate_exchange(self, cands, robots):
+        from warc2zim_spark.frontier.politeness import robots_allowed
+
+        nodes = _plan_nodes(robots_allowed(cands, robots))
+        assert not any(t.startswith("Window") for _, t in nodes), nodes
+        # the only shuffle is the rules aggregation under the broadcast
+        exchanges = [i for i, (_, t) in enumerate(nodes) if t.startswith("Exchange")]
+        assert exchanges, nodes
+        for i in exchanges:
+            assert any(
+                t.startswith("BroadcastExchange") for t in _ancestors(nodes, i)
+            ), nodes[i]

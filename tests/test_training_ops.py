@@ -147,6 +147,22 @@ class TestExactDedup:
                 assert g.keep_id + 7000 in g.all_ids
 
 
+class TestMinhashCandidates:
+    def test_duplicated_doc_id_emits_no_self_pair(self, spark):
+        """A doc id that occurs twice lands in every band bucket next to
+        itself; the bucket's id array is de-duplicated, so only real
+        (id_a < id_b) pairs come out."""
+        from warc2zim_spark.operators.dedup import minhash_candidates
+
+        text = "alpha beta gamma delta epsilon zeta eta theta " * 4
+        docs = spark.createDataFrame(
+            [(1, text), (1, text), (2, text), (3, "unrelated words only here " * 4)],
+            "doc_id long, text string",
+        )
+        pairs = {(r.id_a, r.id_b) for r in minhash_candidates(docs).collect()}
+        assert pairs == {(1, 2)}
+
+
 class TestIvfRecall:
     def test_ivf_topk_recall_vs_brute(self, spark, emb):
         """IVF coarse quantization with n_probe=8/16 lists must recover a

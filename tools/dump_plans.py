@@ -72,16 +72,16 @@ def main() -> None:
     sched_chain = prioritize(
         politeness_budget(
             robots_allowed(unseen_exact(best, seen_side), robots),
-            robots, host_budget=500, salt_partitions=0,
+            robots, host_budget=500,
         ),
-        wave_budget=100_000, salt_partitions=0,
+        wave_budget=100_000,
     )
     with open(f"{out_dir}/w_frontier_schedule_{suffix}.txt", "w") as fh:
         fh.write(plan_of(sched_chain))
     pages_keyed = page_lookup(pages)
     _, next_frontier = crawl_wave(
         frontier, seen, pages, robots, host_budget=500, wave_budget=100_000,
-        pages_keyed=pages_keyed, salt_partitions=0,
+        pages_keyed=pages_keyed,
     )
     with open(f"{out_dir}/w_frontier_links_{suffix}.txt", "w") as fh:
         fh.write(plan_of(next_frontier))

@@ -86,8 +86,8 @@ def _crawl_frame(spark, big, web):
         seen = pages_big.limit(300_000).select(udfs.surt_key(F.col("url")).alias("surt_key"))
         unseen = unseen_exact(candidates, seen)
         allowed = robots_allowed(unseen, robots)
-        polite = politeness_budget(allowed, robots, host_budget=100, salt_partitions=8)
-        return prioritize(polite, wave_budget=500_000, salt_partitions=8)
+        polite = politeness_budget(allowed, robots, host_budget=100)
+        return prioritize(polite, wave_budget=500_000)
 
     return mk
 

@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from warc2zim_spark.frontier.politeness import (
-    DEFAULT_SALT_PARTITIONS,
     env_cap,
     politeness_budget,
     prioritize,
@@ -98,7 +97,6 @@ def crawl_wave(
     host_budget: int = 8,
     wave_budget: int = 1000,
     pages_keyed: DataFrame | None = None,
-    salt_partitions: int = DEFAULT_SALT_PARTITIONS,
     seen_bloom: DataFrame | None = None,
     bloom_partitions: int = 32,
 ) -> tuple[DataFrame, DataFrame]:
@@ -142,14 +140,10 @@ def crawl_wave(
     else:
         unseen = unseen_exact(best, seen)
     allowed = robots_allowed(unseen, robots)
-    # salted by default: the production path must survive zipf-hot hosts
-    # (salted == unsalted proven in tests/test_frontier.py)
-    polite = politeness_budget(
-        allowed, robots, host_budget=host_budget, salt_partitions=salt_partitions
+    polite = politeness_budget(allowed, robots, host_budget=host_budget)
+    scheduled = prioritize(polite, wave_budget=wave_budget).localCheckpoint(
+        eager=False
     )
-    scheduled = prioritize(
-        polite, wave_budget=wave_budget, salt_partitions=salt_partitions
-    ).localCheckpoint(eager=False)
     # ^ checkpoint: the wave output is consumed twice — written/aggregated by
     # the crawl driver AND joined against the page table for link extraction
     # (whose result materializes one wave LATER, after the driver's cache is
@@ -216,8 +210,6 @@ def run_crawl(
     bloom_partitions: int = 32,
     bloom_m_bits: int = 1 << 20,
     initial_bloom: DataFrame | None = None,
-    salt_partitions: int = DEFAULT_SALT_PARTITIONS,
-    salt_min_candidates: int = 1_000_000,
 ) -> DataFrame:
     """Run (or resume) the BFS crawl; returns the full schedule
     (wave, url, surt_key, host, hops, score) read back from the checkpoint
@@ -231,13 +223,8 @@ def run_crawl(
     capacity plan: at 16 bits/key, 2^20 bits ≈ 65k keys/partition — size it
     to (expected keys) × 16 / partitions at production scale.
 
-    Salting is SKEW-CONDITIONAL: the salted pre-windows in politeness/top-k
-    are a pure physical rewrite (identical results, proven in tests) whose
-    extra shuffle only pays off on big skewed waves. Each wave counts its
-    (checkpoint-materialized) frontier and salts only at
-    ≥ ``salt_min_candidates`` rows — production 10^8-URL waves get the skew
-    kill, sandbox 10^4-row waves skip two full candidate shuffles (the
-    BENCH_r02 w_frontier regression)."""
+    Hot-host skew needs no option here: ``politeness_budget``'s partial
+    ``WindowGroupLimit`` caps each host before the host exchange."""
     if seen_mode not in ("exact", "bloom"):
         raise ValueError(f"seen_mode must be 'exact' or 'bloom', got {seen_mode!r}")
     from warc2zim_spark.frontier.seenfilter import build_bloom, merge_blooms
@@ -251,19 +238,9 @@ def run_crawl(
     # nothing and restores wave-0 parallelism (r06; set identical, order
     # explicitly re-established by every downstream sort key).
     n_parts = spark.sparkContext.defaultParallelism
-    frontier_ckpt = (
-        initial_frontier
-        if initial_frontier is not None
-        else _normalize_cols(seeds.repartition(n_parts))
-    ).localCheckpoint(eager=False)
-    # one job materializes the (lazy) checkpoint AND returns the candidate
-    # count the salt heuristic needs (r06 — was an eager-checkpoint job plus
-    # a separate count job per wave). The count is now pre-_valid-filter;
-    # it only gates the skew-conditional salting, whose salted and unsalted
-    # paths are result-identical (pinned in tests), so the schedule cannot
-    # depend on which side of the threshold a wave lands.
-    frontier_count = frontier_ckpt.count()
-    frontier = frontier_ckpt.filter(_valid())
+    if initial_frontier is None:
+        initial_frontier = _normalize_cols(seeds.repartition(n_parts))
+    frontier = initial_frontier.localCheckpoint(eager=True).filter(_valid())
     seen = (
         initial_seen
         if initial_seen is not None
@@ -299,12 +276,6 @@ def run_crawl(
     with ThreadPoolExecutor(max_workers=2) as pool:
         warm_lookup = pool.submit(pages_keyed.count)
         for wave in range(start_wave, max_waves):
-            # candidate count decides whether this wave's salted pre-windows
-            # are worth their extra shuffle (skew-conditional salting);
-            # collected for free by the checkpoint-materializing job above
-            wave_salt = (
-                salt_partitions if frontier_count >= salt_min_candidates else 0
-            )
             seen_for_wave = (
                 F.broadcast(seen)
                 if seen_count <= env_cap("W2ZS_SEEN_BROADCAST_MAX")
@@ -314,7 +285,7 @@ def run_crawl(
                 frontier, seen_for_wave, pages, robots,
                 host_budget=host_budget, wave_budget=wave_budget,
                 pages_keyed=pages_keyed, seen_bloom=seen_bloom,
-                salt_partitions=wave_salt, bloom_partitions=bloom_partitions,
+                bloom_partitions=bloom_partitions,
             )
             out = scheduled.select(
                 F.lit(wave).alias("wave"), "url", "surt_key", "host", "hops",
@@ -340,10 +311,9 @@ def run_crawl(
                     str(ckpt / f"wave={w}")
                 )
             )
-            # lazy checkpoint + count in one job (also feeds next wave's
-            # salt heuristic), concurrent with the write above
-            frontier_ckpt = next_frontier.localCheckpoint(eager=False)
-            frontier_count = frontier_ckpt.count()
+            # eager checkpoint: one job (a lazy checkpoint + count is two
+            # under AQE), concurrent with the write above
+            frontier = next_frontier.localCheckpoint(eager=True).filter(_valid())
             write_fut.result()
             stats = obs.get
             n_scheduled = stats["n"]
@@ -380,7 +350,6 @@ def run_crawl(
                     eager=True
                 )
                 seen_count += n_scheduled
-            frontier = frontier_ckpt.filter(_valid())
         warm_lookup.result()
     pages_keyed.unpersist()
     # committed waves only: a wave dir whose write finished but whose marker

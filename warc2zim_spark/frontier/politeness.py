@@ -12,9 +12,15 @@ robots):
 * priority — total deterministic order: (hops asc, score desc, surt asc)
   so every parallelism level schedules the same URLs (north_rule: identical
   ordering and seen-set across cluster sizes).
-* hot-host skew — the politeness window partitions by host; zipf-hot hosts
-  are exactly the skew case, so candidates are pre-capped per host with a
-  cheap salted pre-aggregation before the window when requested.
+* hot-host skew — absorbed at runtime, not by static pre-sharding: the
+  per-host rank filter carries a literal bound, so Spark's
+  InferWindowGroupLimit plans a partial ``WindowGroupLimit`` below the
+  host exchange and a zipf-hot host reaches the window task as at most
+  partitions × budget rows. Spark infers it only for rank limits ≤
+  ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000; every
+  caller uses ≤ 500) — at ``host_budget=1001`` the plan has the exchange
+  and the window but no ``WindowGroupLimit``, so every candidate row of a
+  hot host shuffles to one task.
 """
 
 from __future__ import annotations
@@ -26,10 +32,6 @@ from pyspark.sql import functions as F
 
 DEFAULT_HOST_BUDGET = 8       # fetches per host per wave when no crawl-delay
 WAVE_MS = 30_000              # nominal wall-clock per wave for delay budgeting
-# default shard count for two-phase salted top-k in the production crawl path:
-# kills the zipf-hot-host straggler (one host holding 30% of candidates would
-# otherwise serialize into a single window task). Result provably identical.
-DEFAULT_SALT_PARTITIONS = 32
 
 
 def env_cap(name: str) -> int:
@@ -38,7 +40,7 @@ def env_cap(name: str) -> int:
     ``W2ZS_TOPK_LIMIT_MAX``: largest wave budget served by orderBy+limit
     (TakeOrderedAndProject) — the per-partition top-k queue holds `budget`
     rows, so the cap bounds per-task memory at ~budget × rowsize; larger
-    budgets take the windowed-rank path."""
+    budgets take the windowed-rank path (a single-partition sort)."""
     return int(os.environ.get(name, "2000000"))
 
 
@@ -56,7 +58,13 @@ def robots_allowed(candidates: DataFrame, robots: DataFrame, path_col: str = "su
     "what's wrong" #3); an empty/irrelevant rules table now costs one empty
     broadcast. Decision equivalence: the old window kept the longest
     matching rule with allow winning ties, i.e. allowed ⇔ no matching rule
-    OR max(matching allow prefix len) ≥ max(matching disallow prefix len)."""
+    OR max(matching allow prefix len) ≥ max(matching disallow prefix len).
+
+    Multiplicity: each candidate row meets at most one rules row (rules are
+    aggregated per host), so the gate neither multiplies nor collapses
+    rows — duplicate input rows pass or fail together and stay duplicated.
+    Callers that need unique keys dedup before the gate (``crawl_wave``
+    does)."""
     path_expr = F.expr(f"substring({path_col}, length(host) + 1)")
     rules_by_host = (
         robots.filter(F.col("path_prefix").isNotNull())
@@ -99,21 +107,19 @@ def politeness_budget(
     robots: DataFrame,
     host_budget: int = DEFAULT_HOST_BUDGET,
     wave_ms: int = WAVE_MS,
-    salt_partitions: int = 0,
 ) -> DataFrame:
     """Keep the top-priority ≤ budget(host) candidates per host.
     budget(host) = min(host_budget, floor(wave_ms / crawl_delay_ms)) when a
     delay is declared, else host_budget.
 
-    ``salt_partitions`` > 0 enables the hot-host skew kill (north_rule): a
-    zipf-head host can hold 30% of all candidates, which turns the per-host
-    window into one straggler task. Two-phase top-k: salt the rows across
-    ``salt_partitions`` shards with a deterministic hash, take the per-shard
-    top-budget (each shard's survivors are a superset contributor of the true
-    per-host top-budget: the global top-k is distributed among shards, and
-    every shard keeps its k best, so no true winner is lost), then run the
-    exact per-host window on the ≤ salt·budget survivors. Result is
-    IDENTICAL to the unsalted window — only the shuffle shape changes."""
+    Hot-host skew is absorbed by the partial ``WindowGroupLimit`` Spark
+    plans below the ``hashpartitioning(host)`` exchange: each map
+    partition keeps at most ``host_budget`` rows per host, so a host
+    holding 30% of the candidates shuffles partitions × budget rows, not
+    its whole share. Spark infers that limit only while ``host_budget`` ≤
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000); above
+    it the plain per-host window still gives the same rows, without the
+    pre-exchange cap."""
     delays = host_crawl_delays(robots)
     with_budget = candidates.join(F.broadcast(delays), "host", "left").withColumn(
         "host_budget",
@@ -122,16 +128,6 @@ def politeness_budget(
             F.least(F.lit(host_budget), F.floor(F.lit(wave_ms) / F.col("crawl_delay_ms")).cast("int")),
         ).otherwise(F.lit(host_budget)),
     )
-    if salt_partitions > 0:
-        salt = F.pmod(F.xxhash64(F.col("surt_key")), F.lit(salt_partitions))
-        w_salted = Window.partitionBy("host", salt).orderBy(
-            F.asc("hops"), F.desc("score"), F.asc("surt_key")
-        )
-        with_budget = (
-            with_budget.withColumn("_salt_rank", F.row_number().over(w_salted))
-            .filter(F.col("_salt_rank") <= F.col("host_budget"))
-            .drop("_salt_rank")
-        )
     w = Window.partitionBy("host").orderBy(
         F.asc("hops"), F.desc("score"), F.asc("surt_key")
     )
@@ -140,11 +136,7 @@ def politeness_budget(
         # the LITERAL bound first: budget(host) ≤ host_budget by construction
         # (least(...)), so `rank <= lit(host_budget)` is a no-op predicate —
         # but a literal rank bound is what InferWindowGroupLimit needs to
-        # insert a partial per-host top-k BEFORE the host exchange
-        # (WindowGroupLimit(Partial)), capping each map partition's
-        # contribution per host at host_budget rows. That bounds a zipf-hot
-        # host's post-shuffle rows at partitions × budget — the skew kill the
-        # salted pre-window bought with an extra full shuffle.
+        # insert the partial per-host top-k before the host exchange
         .filter(
             (F.col("_host_rank") <= F.lit(host_budget))
             & (F.col("_host_rank") <= F.col("host_budget"))
@@ -153,52 +145,28 @@ def politeness_budget(
     )
 
 
-def prioritize(
-    candidates: DataFrame,
-    wave_budget: int | None = None,
-    salt_partitions: int = 0,
-) -> DataFrame:
+def prioritize(candidates: DataFrame, wave_budget: int | None = None) -> DataFrame:
     """Global deterministic priority top-k (hops asc, score desc, surt asc),
     truncated to the wave budget.
 
-    With ``salt_partitions`` > 0 this is a two-phase distributed top-k: shard
-    rows by a deterministic surt hash, keep each shard's top-``wave_budget``
-    (the true global top-k is distributed among shards and every shard keeps
-    its k best, so no true winner is dropped), then run the exact global
-    window on the ≤ salt·budget survivors. Identical result to the plain
-    global window — but the single-partition sort sees at most
-    salt_partitions × wave_budget rows instead of the whole politeness-capped
-    candidate set, which at 10^8 hosts × budget is still huge."""
+    Up to ``W2ZS_TOPK_LIMIT_MAX`` this is orderBy + limit, planned as
+    ``TakeOrderedAndProject``: every input partition keeps its own top-k in
+    a bounded priority queue and the single merge task sees ≤ partitions ×
+    k rows, so a hot host costs nothing extra here either. Same row set as
+    a global rank: (hops, -score, surt_key) is a total order over per-wave
+    candidates. Beyond the cap (the per-partition queue would pin ~GBs per
+    task) the fallback is a windowed global rank — an ``Exchange
+    SinglePartition`` and one full sort task, with no ``WindowGroupLimit``
+    (the budget is far above the inference threshold)."""
     if wave_budget is None:
         return candidates
-    df = candidates
-    if salt_partitions > 0:
-        salt = F.pmod(F.xxhash64(F.col("surt_key")), F.lit(salt_partitions))
-        w_salted = Window.partitionBy(salt).orderBy(
-            F.asc("hops"), F.desc("score"), F.asc("surt_key")
-        )
-        df = (
-            df.withColumn("_salt_rank", F.row_number().over(w_salted))
-            .filter(F.col("_salt_rank") <= wave_budget)
-            .drop("_salt_rank")
-        )
-    # global top-k as orderBy + limit → TakeOrderedAndProject: every input
-    # partition keeps its own top-k with a bounded priority queue and the
-    # single merge task sees ≤ partitions × k rows — replacing the former
-    # empty-partitionBy window whose Exchange SinglePartition carried EVERY
-    # candidate into one full sort task (r06; guide §2.4). Same row set:
-    # (hops, -score, surt_key) is a total order over per-wave candidates.
-    # Scale guard: the per-partition queue holds k rows, so a 10^8 wave
-    # budget would pin ~GBs per task — beyond the cap, fall back to the
-    # windowed global rank over the salt-shrunk survivors (the pre-phase
-    # above bounds that window's input at salt_partitions × budget).
     if wave_budget <= env_cap("W2ZS_TOPK_LIMIT_MAX"):
-        return df.orderBy(
+        return candidates.orderBy(
             F.asc("hops"), F.desc("score"), F.asc("surt_key")
         ).limit(wave_budget)
     w = Window.orderBy(F.asc("hops"), F.desc("score"), F.asc("surt_key"))
     return (
-        df.withColumn("_rank", F.row_number().over(w))
+        candidates.withColumn("_rank", F.row_number().over(w))
         .filter(F.col("_rank") <= wave_budget)
         .drop("_rank")
     )

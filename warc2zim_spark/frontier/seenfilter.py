@@ -1,6 +1,6 @@
 """Partitioned URL-seen filter (north_rule core).
 
-Three modes behind one interface:
+Two modes behind one interface:
 
 * **exact** — a DataFrame of seen ``surt_key`` values; membership = left-anti
   join. Zero false positives; used for correctness tests and small scale.
@@ -11,14 +11,12 @@ Three modes behind one interface:
   once by the same hash partitioning.
 
 The Bloom variant stores (partition_id, bitmap bytes) rows — persisted to
-parquet for resume (north_rule resumability). Candidates are filtered with a
-broadcast-joined bitmap per partition inside ``applyInPandas``: candidate
-rows are repartitioned by the same ``hash(surt_key) % P``, so each task
-probes exactly one bitmap.
+parquet for resume (north_rule resumability). Candidates are probed in a
+cogrouped ``applyInPandas``: candidate rows hash to the same
+``hash(surt_key) % P`` as the bitmaps, so each task probes exactly one
+bitmap.
 
-* **cuckoo** — same partitioned layout with DELETION support (recrawl /
-  snapshot expiry); 1-byte fingerprints in 4-slot buckets, ~2-3% fpp at
-  ~84% load, ~1.2 bytes/key.
+Neither mode deletes keys: a seen URL stays seen for the whole crawl.
 
 False-positive budget: configurable bits-per-key (default 16 → ~0.05% fpp);
 correctness mode for tests is exact (SURVEY §7 hard-part (e)).
@@ -26,7 +24,6 @@ correctness mode for tests is exact (SURVEY §7 hard-part (e)).
 
 from __future__ import annotations
 
-import hashlib
 import math
 
 import numpy as np
@@ -240,256 +237,3 @@ def unseen_exact(candidates: DataFrame, seen: DataFrame, key_col: str = "surt_ke
     that know the seen side is small may pass it wrapped in
     ``F.broadcast(...)`` to skip shuffling the candidate side entirely."""
     return candidates.join(seen.select(F.col(key_col)), key_col, "left_anti")
-
-
-# ---------------------------------------------------------------------------
-# cuckoo filter variant (north_rule names "bloom/cuckoo"): same partitioned
-# layout as the bloom, plus DELETION — the recrawl/expiry case (a URL leaves
-# the seen set when its snapshot goes stale) that a bloom cannot express.
-# Standard 4-way-bucket, 1-byte-fingerprint cuckoo (Fan et al., CoNLL'14
-# "Cuckoo Filter: Practically Better Than Bloom"): ~0.03 fpp at 95% load.
-# ---------------------------------------------------------------------------
-
-_CUCKOO_SCHEMA = StructType(
-    [
-        StructField("part_id", IntegerType(), False),
-        StructField("num_parts", IntegerType(), False),
-        StructField("n_keys", LongType(), False),
-        StructField("n_buckets", LongType(), False),
-        StructField("table", BinaryType(), False),
-    ]
-)
-
-_CUCKOO_SLOTS = 4
-_CUCKOO_MAX_KICKS = 500
-
-# fp → relocation hash: a 256-entry constant table (partial-key cuckoo needs
-# hash(fp) only, and fp is one byte) — keeps the kick path hashlib-free
-_FP_HASH = np.array(
-    [
-        int.from_bytes(
-            hashlib.blake2b(bytes([fp]), digest_size=8).digest(), "little"
-        )
-        for fp in range(256)
-    ],
-    dtype=np.uint64,
-)
-
-
-def _cuckoo_fp_i1_i2(h1: np.ndarray, n_buckets: int):
-    """Vectorized (fp, i1, i2) from the JVM-side 64-bit key hash column.
-    fp ∈ 1..255 (0 = empty slot); i2 = (i1 XOR hash(fp)) — relocatable
-    without the key (Fan et al. partial-key cuckoo; n_buckets is a power of
-    two so `% n_buckets` == masking and relocation is an involution)."""
-    nb = np.uint64(n_buckets)
-    fp = ((h1 & np.uint64(0xFF)) % np.uint64(255) + np.uint64(1)).astype(np.uint8)
-    i1 = (h1 >> np.uint64(8)) % nb
-    i2 = (i1 ^ _FP_HASH[fp]) % nb
-    return fp, i1.astype(np.int64), i2.astype(np.int64)
-
-
-def _cuckoo_insert(
-    table: np.ndarray, n_buckets: int, fp: int, i1: int, i2: int, seed: int
-) -> bool:
-    import random as _random
-
-    for i in (i1, i2):
-        row = table[i]
-        for s in range(_CUCKOO_SLOTS):
-            if row[s] == 0:
-                row[s] = fp
-                return True
-    # kick: deterministic RNG seeded by the key hash so builds are reproducible
-    rng = _random.Random(seed)
-    i = rng.choice((i1, i2))
-    for _ in range(_CUCKOO_MAX_KICKS):
-        s = rng.randrange(_CUCKOO_SLOTS)
-        fp, table[i][s] = int(table[i][s]), fp
-        i = int((np.uint64(i) ^ _FP_HASH[fp]) % np.uint64(n_buckets))
-        row = table[i]
-        for s2 in range(_CUCKOO_SLOTS):
-            if row[s2] == 0:
-                row[s2] = fp
-                return True
-    return False  # table over-full
-
-
-def _cuckoo_place_pass(
-    table: np.ndarray, occ: np.ndarray, fp: np.ndarray, buckets: np.ndarray
-) -> np.ndarray:
-    """One vectorized placement pass: append each key's fingerprint to its
-    bucket where capacity remains, first-come order preserved within the
-    pass. Returns a boolean mask (original order) of keys NOT placed.
-
-    Shape: one argsort + one scatter per pass — the bulk replacement for
-    the per-key Python insert loop (r03 verdict #2). Only keys whose both
-    buckets fill up fall through to the sequential kick loop."""
-    n = len(fp)
-    if n == 0:
-        return np.zeros(0, dtype=bool)
-    order = np.argsort(buckets, kind="stable")
-    b = buckets[order]
-    f = fp[order]
-    # rank of each key within its equal-bucket run
-    starts = np.r_[True, b[1:] != b[:-1]]
-    run_start = np.maximum.accumulate(np.where(starts, np.arange(n), 0))
-    rank = np.arange(n) - run_start
-    slot = occ[b] + rank
-    ok = slot < _CUCKOO_SLOTS
-    table[b[ok], slot[ok]] = f[ok]
-    # bincount, not np.add.at: ufunc.at is ~50x slower at 10^6 updates
-    occ += np.bincount(b[ok], minlength=len(occ)).astype(np.int64)
-    unplaced = np.zeros(n, dtype=bool)
-    unplaced[order[~ok]] = True
-    return unplaced
-
-
-def _cuckoo_fill(
-    table: np.ndarray, n_buckets: int, fp: np.ndarray, i1: np.ndarray, i2: np.ndarray, h1: np.ndarray
-) -> None:
-    """Bulk-fill an empty cuckoo table: vectorized two-choice placement for
-    the non-colliding majority, Python kicks only for the residue (at the
-    default 0.84 load factor the residue is a few percent of keys)."""
-    occ = np.zeros(table.shape[0], dtype=np.int64)
-    un1 = _cuckoo_place_pass(table, occ, fp, i1)
-    res = np.flatnonzero(un1)
-    un2 = _cuckoo_place_pass(table, occ, fp[res], i2[res])
-    for j in res[un2]:
-        if not _cuckoo_insert(
-            table, n_buckets, int(fp[j]), int(i1[j]), int(i2[j]), int(h1[j])
-        ):  # pragma: no cover
-            raise RuntimeError("cuckoo table over-full; lower load_factor")
-
-
-def build_cuckoo(
-    seen: DataFrame,
-    key_col: str = "surt_key",
-    num_partitions: int = 32,
-    load_factor: float = 0.84,
-) -> DataFrame:
-    """Seen keys → (part_id, n_keys, n_buckets, table) rows; one cuckoo
-    table per hash partition, built partition-locally (same sharded layout
-    and probe pattern as build_bloom)."""
-    h1c, _ = key_hash_cols(F.col(key_col))
-    keyed = seen.select(
-        partition_of(F.col(key_col), num_partitions).alias("part_id"),
-        h1c.alias("_h1"),
-    ).repartition(num_partitions, "part_id")
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        part_id = int(pdf["part_id"].iloc[0]) if len(pdf) else 0
-        n = max(len(pdf), 1)
-        n_buckets = 1
-        while n_buckets * _CUCKOO_SLOTS * load_factor < n:
-            n_buckets <<= 1
-        n_buckets = max(n_buckets, 2)
-        table = np.zeros((n_buckets, _CUCKOO_SLOTS), dtype=np.uint8)
-        h1 = _uint64(pdf["_h1"])
-        fp, i1, i2 = _cuckoo_fp_i1_i2(h1, n_buckets)
-        _cuckoo_fill(table, n_buckets, fp, i1, i2, h1)
-        return pd.DataFrame(
-            {
-                "part_id": [part_id],
-                "num_parts": [num_partitions],
-                "n_keys": [len(pdf)],
-                "n_buckets": [n_buckets],
-                "table": [table.tobytes()],
-            }
-        )
-
-    return keyed.groupBy("part_id").applyInPandas(build, _CUCKOO_SCHEMA)
-
-
-def cuckoo_delete_keys(
-    cuckoo: DataFrame,
-    stale: DataFrame,
-    key_col: str = "surt_key",
-    num_partitions: int = 32,
-) -> DataFrame:
-    """Remove stale keys (recrawl/expiry) from the partitioned filter — the
-    operation blooms cannot do; cogrouped per partition like the probe."""
-    h1c, _ = key_hash_cols(F.col(key_col))
-    keyed = stale.select(
-        partition_of(F.col(key_col), num_partitions).alias("part_id"),
-        h1c.alias("_h1"),
-    )
-
-    def delete(stale_pdf: pd.DataFrame, filt_pdf: pd.DataFrame) -> pd.DataFrame:
-        if filt_pdf.empty:
-            return filt_pdf
-        out = filt_pdf.iloc[[0]].copy()
-        if int(out["num_parts"].iloc[0]) != num_partitions:
-            raise ValueError(
-                f"delete num_partitions={num_partitions} but the filter was "
-                f"built with {int(out['num_parts'].iloc[0])}"
-            )
-        n_buckets = int(out["n_buckets"].iloc[0])
-        table = np.frombuffer(out["table"].iloc[0], dtype=np.uint8).reshape(
-            n_buckets, _CUCKOO_SLOTS
-        ).copy()
-        removed = 0
-        fp, i1, i2 = _cuckoo_fp_i1_i2(_uint64(stale_pdf["_h1"]), n_buckets)
-        for j in range(len(fp)):
-            for i in (int(i1[j]), int(i2[j])):
-                row = table[i]
-                slots = np.nonzero(row == fp[j])[0]
-                if len(slots):
-                    row[slots[0]] = 0
-                    removed += 1
-                    break
-        out["table"] = [table.tobytes()]
-        out["n_keys"] = [max(int(out["n_keys"].iloc[0]) - removed, 0)]
-        return out
-
-    return (
-        keyed.groupBy("part_id")
-        .cogroup(cuckoo.groupBy("part_id"))
-        .applyInPandas(delete, _CUCKOO_SCHEMA)
-    )
-
-
-def probe_cuckoo(
-    candidates: DataFrame,
-    cuckoo: DataFrame,
-    key_col: str = "surt_key",
-    num_partitions: int = 32,
-    keep: str = "miss",
-) -> DataFrame:
-    """Membership probe against the partitioned cuckoo filter; same keep
-    semantics and cogrouped shape as probe_bloom."""
-    if keep not in ("miss", "hit"):
-        raise ValueError(f"keep must be 'miss' or 'hit', got {keep!r}")
-    keep_hits = keep == "hit"
-    out_schema = candidates.schema
-    cols = [f.name for f in out_schema.fields]
-    h1c, _ = key_hash_cols(F.col(key_col))
-    with_part = candidates.withColumn(
-        "_part_id", partition_of(F.col(key_col), num_partitions)
-    ).withColumn("_h1", h1c)
-
-    def probe(cand_pdf: pd.DataFrame, filt_pdf: pd.DataFrame) -> pd.DataFrame:
-        if cand_pdf.empty:
-            return cand_pdf[cols]
-        if filt_pdf.empty or int(filt_pdf["n_keys"].iloc[0]) == 0:
-            return cand_pdf[cols].iloc[0:0] if keep_hits else cand_pdf[cols]
-        if int(filt_pdf["num_parts"].iloc[0]) != num_partitions:
-            raise ValueError(
-                f"probe num_partitions={num_partitions} but the filter was "
-                f"built with {int(filt_pdf['num_parts'].iloc[0])}"
-            )
-        n_buckets = int(filt_pdf["n_buckets"].iloc[0])
-        table = np.frombuffer(filt_pdf["table"].iloc[0], dtype=np.uint8).reshape(
-            n_buckets, _CUCKOO_SLOTS
-        )
-        fp, i1, i2 = _cuckoo_fp_i1_i2(_uint64(cand_pdf["_h1"]), n_buckets)
-        # vectorized two-bucket membership: any slot in row i1 or i2 == fp
-        hit = (table[i1] == fp[:, None]).any(axis=1) | (
-            table[i2] == fp[:, None]
-        ).any(axis=1)
-        return cand_pdf[hit][cols] if keep_hits else cand_pdf[~hit][cols]
-
-    return (
-        with_part.groupBy("_part_id")
-        .cogroup(cuckoo.groupBy("part_id"))
-        .applyInPandas(probe, out_schema)
-    )

@@ -80,9 +80,11 @@ def minhash_candidates(
     # same pair set (r06; guide §2.4). The size cap that bounded the
     # self-join fanout now bounds the collected array and the pair explosion
     # identically (oversized pathological buckets are dropped whole).
+    # array_distinct: a doc id that occurs twice in the input would
+    # otherwise sit next to itself and emit an (id, id) self-pair.
     buckets = (
         exploded.groupBy("band_no", "band_key")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
+        .agg(F.array_distinct(F.sort_array(F.collect_list("doc_id"))).alias("ids"))
         .filter((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
     )
     pair = F.explode(

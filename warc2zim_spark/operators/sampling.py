@@ -15,8 +15,7 @@ Shapes:
   the stratum key. Skew note: a hot stratum serializes its own window
   task; at zipf-like strata sizes pre-filter with
   ``approx_fraction_prefilter`` below (hash-threshold cut that needs no
-  window) and window only the survivors — the same two-phase shape as the
-  frontier's salted top-k.
+  window) and window only the survivors.
 * ``approx_fraction_prefilter`` — keep rows whose hash falls under
   fraction × 2^63: exact-in-expectation, zero shuffles, deterministic;
   the standard first phase for huge strata.

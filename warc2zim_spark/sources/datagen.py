@@ -61,7 +61,7 @@ _CHARSETS = ["utf-8"] * 16 + ["iso-8859-1"] * 2 + ["gbk"] + [None]  # None → h
 
 
 def _zipf_host(rng: random.Random, n_hosts: int) -> int:
-    """Zipf-skewed host index: a few hot hosts (for salting/skew tests)."""
+    """Zipf-skewed host index: a few hot hosts (for hot-host skew tests)."""
     r = rng.random()
     # 30% of traffic on host 0, 15% on host 1, long tail beyond
     if r < 0.30:
