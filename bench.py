@@ -241,7 +241,12 @@ def run_scaling_workload(cpus: int, sf_dir: str, k: int | None = None) -> dict:
         .withColumn("hops", F.pmod(F.xxhash64("surt_key"), F.lit(4)).cast("int"))
         .withColumn("score", F.pmod(F.xxhash64("host", "surt_key"), F.lit(1000)) / 1000.0)
     )
-    seen = pages_big.limit(300_000).select(udfs.surt_key(F.col("url")).alias("surt_key"))
+    # seen = a fixed hash half of the candidate keys, so the schedule is
+    # never empty whatever the scale (a fixed-size seen set covers every
+    # candidate below sf0.1)
+    seen = pages_big.select(udfs.surt_key(F.col("url")).alias("surt_key")).filter(
+        F.pmod(F.xxhash64("surt_key"), F.lit(2)) == 0
+    )
 
     def crawl_df():
         # fresh checkpoint per trial: the surt/host pass is re-executed and
@@ -253,6 +258,8 @@ def run_scaling_workload(cpus: int, sf_dir: str, k: int | None = None) -> dict:
         return prioritize(polite, wave_budget=500_000)
 
     t_crawl, n_sched = timed(crawl_df)
+    if n_sched == 0:
+        raise RuntimeError("scaling crawl stage scheduled no rows: nothing was timed")
 
     total_t = t_items + t_text + t_crawl
     total_rows = n_items + n_text + n_sched

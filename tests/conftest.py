@@ -17,3 +17,36 @@ def webdata(tmp_path_factory):
     from warc2zim_spark.sources.datagen import ensure_webdata
 
     return str(ensure_webdata("sf0.001"))
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(group, fn)`` runs ``fn()`` under job group ``group`` →
+    (jobs carrying the group, every job started during the call on any
+    thread). Job ids are sequential, so the second figure is the id span
+    between two marker jobs run on either side of the call."""
+    sc = spark.sparkContext
+
+    def clear_group():
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    def last_job_id() -> int:
+        sc.setJobGroup("job_id_marker", "job id marker")
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            clear_group()
+        return max(sc.statusTracker().getJobIdsForGroup("job_id_marker"))
+
+    def run(group: str, fn) -> tuple[int, int]:
+        first = last_job_id() + 1
+        sc.setJobGroup(group, "job-count pin")
+        try:
+            fn()
+        finally:
+            clear_group()
+        n_all = last_job_id() - first
+        return len(sc.statusTracker().getJobIdsForGroup(group)), n_all
+
+    return run

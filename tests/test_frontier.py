@@ -220,27 +220,26 @@ class TestPoliteness:
 
 
 class TestCrawlJobCount:
-    @pytest.mark.parametrize("seen_mode,ceiling", [("exact", 36), ("bloom", 53)])
-    def test_cold_crawl_job_count_pinned(self, spark, webdata, tmp_path, seen_mode, ceiling):
+    @pytest.mark.parametrize("seen_mode,ceiling", [("exact", 43), ("bloom", 60)])
+    def test_cold_crawl_job_count_pinned(
+        self, spark, webdata, tmp_path, count_jobs, seen_mode, ceiling
+    ):
         """Each frontier is materialized by one eager checkpoint job, with no
-        count beside it. A cold 3-wave crawl on this fixture runs 36 (exact)
-        / 53 (bloom) jobs on the calling thread; a lazy checkpoint plus a
-        count per frontier is 40 / 57."""
+        count beside it. A cold 3-wave crawl on this fixture runs 43 (exact)
+        / 60 (bloom) jobs, the pool thread's wave writes and lookup warm-up
+        included (36 / 53 of them on the calling thread). Every job carries
+        the caller's job group, pool threads' too."""
         seeds = spark.read.parquet(f"{webdata}/seeds.parquet")
         robots = spark.read.parquet(f"{webdata}/robots.parquet")
         pages = spark.read.parquet(f"{webdata}/pages.parquet")
-        sc = spark.sparkContext
-        group = f"run_crawl_jobs_{seen_mode}"
-        sc.setJobGroup(group, "job-count pin")
-        try:
-            run_crawl(
+        n_group, n_jobs = count_jobs(
+            f"run_crawl_jobs_{seen_mode}",
+            lambda: run_crawl(
                 spark, seeds, pages, robots, str(tmp_path / "jobs"),
                 max_waves=3, host_budget=4, wave_budget=50, seen_mode=seen_mode,
-            )
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            ),
+        )
+        assert n_group == n_jobs
         assert 0 < n_jobs <= ceiling, n_jobs
 
 

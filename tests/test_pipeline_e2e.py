@@ -70,6 +70,43 @@ class TestRunPipeline:
         assert "statuses.example/poison-1.html" not in item_paths
         assert "statuses.example/poison-2.css" not in item_paths
 
+    def test_fails_sink_equals_standalone_probe(self, spark, webdata, result):
+        """The fails sink is a filter of the cached single-pass content
+        stream; its rows equal the standalone probe's over the same records
+        (default options)."""
+        from warc2zim_spark.operators.quarantine import quarantined_records
+        from warc2zim_spark.operators.records import content_records, load_records
+
+        out, _ = result
+        fused = spark.read.parquet(str(out / "fails")).collect()
+        standalone = quarantined_records(
+            content_records(load_records(spark, webdata), with_head=True)
+        ).collect()
+        assert len(fused) == 2
+        assert sorted(fused) == sorted(standalone)
+
+    def test_aliased_fails_sink_equals_standalone_probe(self, spark, webdata, tmp_path):
+        """As above with --encoding-aliases: mapping one poison charset
+        leaves the other record in both the sink and the standalone probe."""
+        from warc2zim_spark.operators.quarantine import quarantined_records
+        from warc2zim_spark.operators.records import content_records, load_records
+        from warc2zim_spark.plans.pipeline import run_pipeline
+
+        aliases = {"bogus-enc": "utf-8"}
+        out = tmp_path / "out_partial_aliases"
+        metrics = run_pipeline(
+            spark, webdata, str(out), name="n",
+            encoding_aliases=aliases, continue_on_error=True,
+        )
+        fused = spark.read.parquet(str(out / "fails")).collect()
+        standalone = quarantined_records(
+            content_records(load_records(spark, webdata), with_head=True),
+            encoding_aliases=aliases,
+        ).collect()
+        assert metrics["failed_records"] == 1
+        assert [r.zim_path for r in fused] == ["statuses.example/poison-2.css"]
+        assert sorted(fused) == sorted(standalone)
+
     def test_encoding_aliases_rescue_poison(self, spark, webdata, tmp_path):
         """--encoding-aliases (ref main.py:144-158): mapping the poison
         records' unknown charsets to a real codec turns their failures into
@@ -91,11 +128,21 @@ class TestRunPipeline:
 
     def test_default_aborts_on_failures(self, spark, webdata, tmp_path):
         """reference default (no --continue-on-error): any failing record
-        aborts the run (converter.py:433-437)."""
+        aborts the run (converter.py:433-437). Only the fails sink is
+        written, holding exactly the planted records, and no branch's job
+        is still running when the error is raised."""
         from warc2zim_spark.plans.pipeline import run_pipeline
 
+        out = tmp_path / "abort_out"
         with pytest.raises(ValueError, match="failed processing"):
-            run_pipeline(spark, webdata, str(tmp_path / "abort_out"), name="n")
+            run_pipeline(spark, webdata, str(out), name="n")
+        assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+        assert [p.name for p in out.iterdir()] == ["fails"]
+        fails = spark.read.parquet(str(out / "fails")).collect()
+        assert sorted((r.zim_path, r.stage) for r in fails) == [
+            ("statuses.example/poison-1.html", "html"),
+            ("statuses.example/poison-2.css", "css"),
+        ]
 
     def test_user_url_redirect_followed(self, spark, webdata, tmp_path):
         """--url at the fixture's 302→301→307 chain head: Main-Path must land
@@ -134,25 +181,24 @@ class TestRunPipeline:
                 continue_on_error=True,
             )
 
-    def test_job_count_pinned(self, spark, webdata, tmp_path):
-        """Each intermediate is derived once: one redirect fixpoint, one
-        bounded main-page walk, payloads fetched by position. A cold call on
-        this fixture runs 62 Spark jobs (127 when the fixpoint, the walk and
-        the payload-carrying content stream were each derived twice); any
-        re-derivation pushes it over the ceiling."""
+    def test_job_count_pinned(self, spark, webdata, tmp_path, count_jobs):
+        """Each intermediate is derived once: one record pass, one redirect
+        fixpoint, one bounded main-page walk, payloads fetched by position.
+        A cold call on this fixture runs 61 Spark jobs (127 when the
+        fixpoint, the walk and the payload-carrying content stream were each
+        derived twice); any re-derivation pushes it over the ceiling. The
+        count covers the branch threads' jobs, which carry the caller's job
+        group like the calling thread's."""
         from warc2zim_spark.plans.pipeline import run_pipeline
 
-        sc = spark.sparkContext
-        sc.setJobGroup("run_pipeline_jobs", "job-count pin")
-        try:
-            run_pipeline(
+        n_group, n_jobs = count_jobs(
+            "run_pipeline_jobs",
+            lambda: run_pipeline(
                 spark, webdata, str(tmp_path / "out_jobs"), name="n",
                 custom_css=b"body{}", continue_on_error=True,
-            )
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        n_jobs = len(sc.statusTracker().getJobIdsForGroup("run_pipeline_jobs"))
+            ),
+        )
+        assert n_group == n_jobs
         assert 0 < n_jobs <= 64, n_jobs
 
     def test_favicon_override_with_fallback(self, spark, webdata, tmp_path):

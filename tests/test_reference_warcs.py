@@ -217,6 +217,37 @@ class TestPipelineOverReferenceWarcs:
             )
 
 
+class TestSinglePassProbe:
+    """run_pipeline's fails sink — a filter of its cached, single-pass
+    content stream — equals the standalone probe over the same records,
+    on the reference's real-world mistyped-charset capture."""
+
+    @pytest.mark.parametrize(
+        "aliases", [None, {"iso-8559-1": "iso-8859-1"}],
+        ids=["default", "encoding_aliases"],
+    )
+    def test_fused_fails_equal_standalone_probe(self, spark, tmp_path, aliases):
+        from warc2zim_spark.operators.quarantine import quarantined_records
+        from warc2zim_spark.operators.records import content_records, load_records
+        from warc2zim_spark.plans.pipeline import run_pipeline
+
+        d = tmp_path / "warcs"
+        d.mkdir()
+        shutil.copy(REF_SPECIAL / "qsl.net-encoding-alias.warc.gz", d)
+        out = tmp_path / "out"
+        run_pipeline(
+            spark, str(d), str(out), name="qsl",
+            encoding_aliases=aliases, continue_on_error=True,
+        )
+        fused = spark.read.parquet(str(out / "fails")).collect()
+        standalone = quarantined_records(
+            content_records(load_records(spark, str(d)), with_head=True),
+            encoding_aliases=aliases,
+        ).collect()
+        assert len(fused) == (1 if aliases is None else 0)
+        assert sorted(fused) == sorted(standalone)
+
+
 class TestContentResourceTypes:
     """content-resource-types.warc.gz (reference :753-778): the C1
     classifier on real browsertrix records — resource-type overrides the

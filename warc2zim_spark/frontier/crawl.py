@@ -263,6 +263,7 @@ def run_crawl(
     pages_keyed = page_lookup(pages).cache()
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
     from pyspark.sql import Observation
 
     # overlap independent driver-submitted jobs (guide §2.6): actions are
@@ -272,9 +273,14 @@ def run_crawl(
     # each other — running the write in a worker thread lets the link
     # extraction back-fill the executor slots the write's tail leaves idle.
     # The lookup-cache build likewise overlaps wave-0's scheduling chain
-    # (it is first needed only at the mid-wave fetch join).
+    # (it is first needed only at the mid-wave fetch join). Pool jobs carry
+    # the caller's job group and description, like the calling thread's.
     with ThreadPoolExecutor(max_workers=2) as pool:
-        warm_lookup = pool.submit(pages_keyed.count)
+
+        def submit(fn):
+            return pool.submit(inheritable_thread_target(spark)(fn))
+
+        warm_lookup = submit(pages_keyed.count)
         for wave in range(start_wave, max_waves):
             seen_for_wave = (
                 F.broadcast(seen)
@@ -306,7 +312,7 @@ def run_crawl(
             # idempotent wave write (overwrite → safe re-run after partial
             # failure), submitted to the pool so the next-frontier
             # checkpoint below runs concurrently
-            write_fut = pool.submit(
+            write_fut = submit(
                 lambda df=observed, w=wave: df.write.mode("overwrite").parquet(
                     str(ckpt / f"wave={w}")
                 )

@@ -14,12 +14,20 @@ fails sink is written (plans/pipeline.py). The concrete raising class in
 this environment is a declared/HTTP charset naming an unknown codec —
 ``LookupError`` through the decode cascade, the same exception the
 reference's errors=replace decode raises (utils.py:155-219).
+
+One probe, two shapes. ``with_failure_reason`` adds ``stage``/``reason``
+columns to a content stream in the same pass that pairs and canonicalizes
+it, reading the 1-KiB ``payload_head``; ``run_pipeline`` caches that stream
+and filters its fails sink from it (``failed_rows``). ``quarantined_records``
+is the standalone form over any content frame; it runs the same probe, or,
+for a narrowed try-list, a two-phase probe that ships full payloads only for
+the records that reach the strict try-list.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
@@ -86,25 +94,16 @@ def _probe_decode_failure(
         return f"{type(exc).__name__}: {exc}"[:200]
 
 
-def make_decode_error_udf(
-    extra_aliases: dict[str, str] | None = None,
-    options: "_decode.DecodeOptions | None" = None,
-):
+def make_decode_error_udf(options: "_decode.DecodeOptions | None" = None):
     """Per-row failure capture for the decode stage: null on success, else
     ``ExceptionClass: message`` (truncated). ANY kernel failure must become
-    data, not a task failure. ``extra_aliases`` is the per-run user alias
-    table (``--encoding-aliases``, reference main.py:144-158): an alias the
-    user maps turns a would-be failure into a successful decode.
-    ``options`` carries the full decode-tuning surface (``--charsets-to-try``,
-    ``--ignore-*-charsets``, ``--content-header-bytes-length``,
-    main.py:113-143)."""
+    data, not a task failure. ``options`` carries the full decode-tuning
+    surface (``--charsets-to-try``, ``--ignore-*-charsets``,
+    ``--content-header-bytes-length``, main.py:113-143), its
+    ``extra_aliases`` the per-run user alias table (``--encoding-aliases``,
+    reference main.py:144-158; see ``merged_options``): an alias the user
+    maps turns a would-be failure into a successful decode."""
     opts = options if options is not None else _decode.DecodeOptions()
-    if extra_aliases:
-        import dataclasses as _dc
-
-        opts = _dc.replace(
-            opts, extra_aliases={**(opts.extra_aliases or {}), **extra_aliases}
-        )
 
     @pandas_udf(StringType())
     def decode_error(
@@ -209,6 +208,102 @@ def make_strict_decode_udf(options: "_decode.DecodeOptions"):
     return strict_decode
 
 
+def merged_options(
+    encoding_aliases: dict[str, str] | None,
+    decode_options: "_decode.DecodeOptions | None",
+) -> "_decode.DecodeOptions":
+    """``decode_options`` (default options when None) with the
+    ``encoding_aliases`` rows merged over its own aliases."""
+    opts = decode_options if decode_options is not None else _decode.DecodeOptions()
+    if encoding_aliases:
+        import dataclasses as _dc
+
+        opts = _dc.replace(
+            opts, extra_aliases={**(opts.extra_aliases or {}), **encoding_aliases}
+        )
+    return opts
+
+
+def needs_full_payload(decode_options: "_decode.DecodeOptions | None") -> bool:
+    """Can this decode config fail on bytes past the 1-KiB ingest head? A
+    narrowed ``charsets_to_try`` makes the tier-(c) strict decode fallible
+    over the whole payload, and a ``header_bytes`` wider than the head
+    sniffs charsets the head does not hold. Every other config is decided
+    by the head alone."""
+    return decode_options is not None and (
+        decode_options.charsets_to_try is not None
+        or decode_options.header_bytes > 1024
+    )
+
+
+def _stage() -> Column:
+    """The C1 rewrite mode of a response row; null for binary passthrough
+    rows and for every non-response row (neither decodes, so neither can
+    fail)."""
+    return F.when(
+        F.col("rec_type") == "response",
+        rewrite_mode_expr(
+            F.split(F.coalesce(F.col("mime"), F.lit("")), ";").getItem(0),
+            F.col("resourcetype"),
+            F.col("zim_path"),
+            F.col("p_method"),
+        ),
+    )
+
+
+def with_failure_reason(
+    content: DataFrame,
+    encoding_aliases: dict[str, str] | None = None,
+    decode_options: "_decode.DecodeOptions | None" = None,
+) -> DataFrame:
+    """``content`` plus ``stage`` (see ``_stage``) and ``reason`` (null, or
+    the ``ExceptionClass: message`` its decode would raise) on every row —
+    the single-pass failure probe. It reads the 1-KiB ``payload_head`` when
+    the config is decided by the head (``needs_full_payload`` false), else
+    the full ``payload``; only text-mode rows ship bytes to the UDF.
+
+    ``run_pipeline`` caches this over its content stream (with
+    ``payload_head`` dropped after the probe), so the fails sink is a
+    filter of the stream every other sink reads and the records are paired
+    and canonicalized once."""
+    opts = merged_options(encoding_aliases, decode_options)
+    use_head = "payload_head" in content.columns and not needs_full_payload(opts)
+    if not use_head and "payload" not in content.columns:
+        raise ValueError(
+            "this decode configuration is fallible over the FULL payload "
+            "(narrowed charsets_to_try, or header_bytes wider than the 1 KiB "
+            "ingest head), but this frame carries only payload_head — pass a "
+            "frame with the payload column (content_records(..., "
+            "with_payload=True); add with_head=True to enable the two-phase "
+            "probe)"
+        )
+    err_udf = (
+        decode_error
+        if encoding_aliases is None and decode_options is None
+        else make_decode_error_udf(options=opts)
+    )
+    staged = content.withColumn("stage", _stage())
+    return staged.withColumn(
+        "reason",
+        err_udf(
+            F.when(
+                F.col("stage").isNotNull(),
+                F.col("payload_head" if use_head else "payload"),
+            ),
+            F.col("http_charset"),
+            F.col("stage"),
+        ),
+    )
+
+
+def failed_rows(probed: DataFrame) -> DataFrame:
+    """The quarantine rows of a ``with_failure_reason`` frame."""
+    return probed.filter(F.col("reason").isNotNull()).select(
+        "zim_path", F.col("effective_url").alias("url"), "file_seq", "rec_seq",
+        "stage", "reason",
+    )
+
+
 def quarantined_records(
     content_with_payload: DataFrame,
     encoding_aliases: dict[str, str] | None = None,
@@ -229,113 +324,54 @@ def quarantined_records(
     are head-decidable), and only the tier-(c) residue — records with no
     declared and no usable HTTP charset, typically a small fraction of a
     real corpus — ships its full payload through Arrow for the strict
-    decode. Only a frame carrying just ``payload`` falls back to the
-    single-pass full-payload probe.
+    decode. Every other case is the single-pass ``with_failure_reason``
+    probe.
 
     ``decode_options`` is the reference's decode-tuning CLI surface
     (main.py:113-143); ``encoding_aliases`` rows merge over its aliases."""
-    mode = rewrite_mode_expr(
-        F.split(F.coalesce(F.col("mime"), F.lit("")), ";").getItem(0),
-        F.col("resourcetype"),
-        F.col("zim_path"),
-        F.col("p_method"),
-    )
-    opts = decode_options if decode_options is not None else _decode.DecodeOptions()
-    if encoding_aliases:
-        import dataclasses as _dc
-
-        opts = _dc.replace(
-            opts, extra_aliases={**(opts.extra_aliases or {}), **encoding_aliases}
-        )
-    narrowed_try_list = opts.charsets_to_try is not None
+    opts = merged_options(encoding_aliases, decode_options)
     cols = content_with_payload.columns
-
-    base = (
-        content_with_payload.filter(F.col("rec_type") == "response")
-        .withColumn("stage", mode)
-        .filter(F.col("stage").isNotNull())
-    )
-    out_cols = [
-        "zim_path",
-        F.col("effective_url").alias("url"),
-        F.col("file_seq"),
-        F.col("rec_seq"),
-        F.col("stage"),
-        F.col("reason"),
-    ]
-
     two_phase = (
-        narrowed_try_list
+        opts.charsets_to_try is not None
         and "payload_head" in cols
         and "payload" in cols
         and opts.header_bytes <= 1024  # the ingest head column's width
     )
-    if two_phase:
-        # phase A: head-only scan (payload pruned from this projection)
-        head_udf = make_head_phase_udf(opts)
-        phase_a = base.select(
-            "zim_path", "effective_url", "file_seq", "rec_seq", "stage",
-            head_udf(
-                F.col("payload_head"), F.col("http_charset"), F.col("stage")
-            ).alias("reason"),
-        ).persist()  # feeds BOTH fails_ab and tierc_keys: without this the
-        # head-classification scan (the pass the two-phase design exists to
-        # keep cheap) would evaluate twice
-        fails_ab = phase_a.filter(
-            F.col("reason").isNotNull() & (F.col("reason") != _TIER_C)
-        ).select(*out_cols)
-        tierc_keys = phase_a.filter(F.col("reason") == _TIER_C).select(
-            "file_seq", "rec_seq"
+    if not two_phase:
+        return failed_rows(
+            with_failure_reason(content_with_payload, encoding_aliases, decode_options)
         )
-        # phase B: full payload only for the tier-(c) residue (broadcast
-        # semi-join keys against a payload-bearing scan)
-        strict_udf = make_strict_decode_udf(opts)
-        fails_c = (
-            base.join(F.broadcast(tierc_keys), ["file_seq", "rec_seq"], "left_semi")
-            .withColumn("reason", strict_udf(F.col("payload")))
-            .filter(F.col("reason").isNotNull())
-            .select(*out_cols)
-        )
-        # materialize the (small) fails union so phase_a's cached head scan
-        # feeds both legs exactly once, then release it deterministically —
-        # the persist must not linger in executor storage after return
-        result = fails_ab.unionByName(fails_c).localCheckpoint(eager=True)
-        phase_a.unpersist()
-        return result
 
-    # payload_head is ingested at a fixed 1 KiB: a wider header-sniff window
-    # (--content-header-bytes-length > 1024) over the truncated head would
-    # miss charsets declared past 1 KiB that the actual full-payload decode
-    # honors — records would quarantine (or pass) inconsistently with the
-    # decode. Any config that sniffs past the head width needs the payload.
-    head_usable = "payload_head" in cols and opts.header_bytes <= 1024
-    if (narrowed_try_list or not head_usable) and "payload" not in cols:
-        raise ValueError(
-            "this decode configuration is fallible over the FULL payload "
-            "(narrowed charsets_to_try, or header_bytes wider than the 1 KiB "
-            "ingest head), but this frame carries only payload_head — pass a "
-            "frame with the payload column (content_records(..., "
-            "with_payload=True); add with_head=True to enable the two-phase "
-            "probe)"
-        )
-    err_udf = (
-        decode_error
-        if encoding_aliases is None and decode_options is None
-        else make_decode_error_udf(options=opts)
+    base = content_with_payload.withColumn("stage", _stage()).filter(
+        F.col("stage").isNotNull()
     )
-    bytes_col = (
-        F.col("payload_head")
-        if head_usable and not narrowed_try_list
-        else F.col("payload")
+    # phase A: head-only scan (payload pruned from this projection)
+    head_udf = make_head_phase_udf(opts)
+    phase_a = base.select(
+        "zim_path", "effective_url", "file_seq", "rec_seq", "stage",
+        head_udf(
+            F.col("payload_head"), F.col("http_charset"), F.col("stage")
+        ).alias("reason"),
+    ).persist()  # feeds BOTH fails_ab and tierc_keys: without this the
+    # head-classification scan (the pass the two-phase design exists to
+    # keep cheap) would evaluate twice
+    fails_ab = failed_rows(phase_a.filter(F.col("reason") != _TIER_C))
+    tierc_keys = phase_a.filter(F.col("reason") == _TIER_C).select(
+        "file_seq", "rec_seq"
     )
-    return (
-        base.withColumn(
-            "reason",
-            err_udf(bytes_col, F.col("http_charset"), F.col("stage")),
-        )
-        .filter(F.col("reason").isNotNull())
-        .select(*out_cols)
+    # phase B: full payload only for the tier-(c) residue (broadcast
+    # semi-join keys against a payload-bearing scan)
+    strict_udf = make_strict_decode_udf(opts)
+    fails_c = failed_rows(
+        base.join(F.broadcast(tierc_keys), ["file_seq", "rec_seq"], "left_semi")
+        .withColumn("reason", strict_udf(F.col("payload")))
     )
+    # materialize the (small) fails union so phase_a's cached head scan
+    # feeds both legs exactly once, then release it deterministically —
+    # the persist must not linger in executor storage after return
+    result = fails_ab.unionByName(fails_c).localCheckpoint(eager=True)
+    phase_a.unpersist()
+    return result
 
 
 def exclude_failed_records(content: DataFrame, fails: DataFrame) -> DataFrame:
@@ -348,19 +384,5 @@ def exclude_failed_records(content: DataFrame, fails: DataFrame) -> DataFrame:
     return content.join(
         fails.select("file_seq", "rec_seq"),
         ["file_seq", "rec_seq"],
-        "left_anti",
-    )
-
-
-def items_excluding_fails(items: DataFrame, fails: DataFrame) -> DataFrame:
-    """Coarser post-dedup form: drop items whose WINNING record is
-    quarantined. NOTE this drops the zim_path entirely even when a later
-    duplicate record for the path would have decoded cleanly — the pipeline
-    uses :func:`exclude_failed_records` (pre-dedup, record-level) instead,
-    which matches the reference's skip-one-record loop (advisor r03).
-    Retained for callers that only have the post-dedup item table."""
-    return items.join(
-        fails.select("zim_path", "file_seq", "rec_seq"),
-        ["zim_path", "file_seq", "rec_seq"],
         "left_anti",
     )

@@ -1,4 +1,4 @@
-"""The two-pass WARC→ZIM pipeline as two Spark jobs + parquet-table sinks.
+"""The two-pass WARC→ZIM pipeline as parquet-table sinks over one record pass.
 
 Reference lifecycle (SURVEY §3.1, converter.py:279-461):
   pass 1 (gather)  → expected-item set, redirect edges + fixpoint, date
@@ -8,26 +8,34 @@ Reference lifecycle (SURVEY §3.1, converter.py:279-461):
                      439-457)
 
 Sinks are parquet tables in an Iceberg-compatible layout (items, redirects,
-aliases, metadata, metrics); the dataflow barrier between the passes is
-inherent (rewriting depends on global set membership — SURVEY §4.1) and maps
-to two jobs over the same record scan.
+aliases, expected, metadata, fails, metrics). The records are paired,
+canonicalized and failure-probed once, into one cached content stream that
+every sink reads. The barrier between the passes is inherent (rewriting
+depends on global set membership — SURVEY §4.1), but the pass-1 products
+that need only that stream — the redirect verdict, the failure probe, the
+main page and metadata lookups — do not depend on each other, so they run
+as concurrent threads rather than one after another.
 """
 
 from __future__ import annotations
 
 import json
+import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
+from warc2zim_spark.kernels.surt import canonicalize
 from warc2zim_spark.operators.gather import (
     expected_items,
     main_page_candidate,
+    main_page_resolved,
 )
 from warc2zim_spark.operators.items import items_table, revisit_aliases
-from warc2zim_spark.operators.records import content_records, load_records
 from warc2zim_spark.operators.metadata import (
     STATIC_JS_ASSETS,
     items_with_static,
@@ -35,6 +43,15 @@ from warc2zim_spark.operators.metadata import (
     validate_metadata,
     zim_metadata,
 )
+from warc2zim_spark.operators.quarantine import (
+    exclude_failed_records,
+    failed_rows,
+    merged_options,
+    needs_full_payload,
+    quarantined_records,
+    with_failure_reason,
+)
+from warc2zim_spark.operators.records import content_records, load_records
 from warc2zim_spark.operators.redirects import (
     expected_with_redirects,
     kept_redirects,
@@ -64,13 +81,46 @@ def run_pipeline(
 ) -> dict:
     """Full pass1 + pass2 → tables under ``out_dir``; returns run metrics.
 
-    Each intermediate is derived once and shared: the narrow content stream
-    is cached; the redirect fixpoint runs once, and both the redirects and
-    the expected sinks derive from its cached kept-source keys; the main
-    page is redirect-followed once, by a bounded single-row walk, and that
-    resolved row feeds the favicon discovery and the metadata; the few
-    payloads those need (main page, icons) are located on the cached stream
-    and fetched from the raw records by (file_seq, rec_seq).
+    Each intermediate is derived once and shared:
+
+    * One record pass. The records are paired and canonicalized once, into
+      a narrow content stream that is cached together with each record's
+      failure ``stage``/``reason`` (``with_failure_reason`` over the 1-KiB
+      ``payload_head``, which is dropped once probed); the fails sink is a
+      filter of it. Only a decode config fallible past the head (a narrowed
+      ``charsets_to_try``, or ``header_bytes`` > 1024) runs its own probe
+      (``quarantined_records``), the one path that reads full payloads.
+    * The redirect fixpoint runs once; both the redirects and the expected
+      sinks derive from its cached kept-source keys.
+    * The main page is redirect-followed once, by a bounded single-row
+      walk, and that resolved row feeds the favicon discovery and the
+      metadata; the few payloads those need (main page, icons) are located
+      on the cached stream and fetched from the raw records by
+      (file_seq, rec_seq).
+
+    Three branches run concurrently: (b) on the calling thread, (a) and (c)
+    on a fixed 3-thread pool (the verdict and its sinks are separate tasks).
+    The caller's job group and description reach every job.
+
+    (a) the redirect verdict, then the ``redirects`` and ``expected`` sinks;
+    (b) on the calling thread: the ``fails`` sink, the abort check, the
+        ``items`` sink, then the ``aliases`` sink;
+    (c) the main-page walk, the illustration, then the metadata rows (at
+        most 12), collected.
+
+    Only the verdict and (c) start before the abort check, and neither
+    writes: no sink but ``fails`` is written before the check passes, and
+    (a)'s sinks are submitted once it has. The ``metadata`` sink
+    is written last, once ``Counter-Items`` is known. The call returns or
+    raises only after every branch has finished, so no job outlives it.
+
+    Errors come in the order of the sequential plan: the metadata
+    validation, the failed-records abort, then (with the four data sinks
+    written) "Unable to find main path", the --url "Unable to find main
+    page", then illustration errors. One exception: a ``main_url`` that
+    does not canonicalize is rejected before any job runs, like the
+    metadata validation. A failed Spark job surfaces from branch (b) first,
+    then (a), then (c).
 
     ``metadata_args``: keyword passthrough to ``zim_metadata`` (title,
     language, description, tags, ... — the reference's CLI flags).
@@ -126,7 +176,7 @@ def run_pipeline(
     the item sink lands, and the final written total (items + redirects +
     aliases) at end — same file contract, coarser cadence."""
     del source  # parity: reference never consumes it (converter.py:135)
-    # validate user metadata BEFORE any distributed work (converter.py:279-294
+    # validate user input BEFORE any distributed work (converter.py:279-294
     # "so that we do not waste time doing operations for a scraper which will
     # fail anyway in the end")
     if not disable_metadata_checks:
@@ -137,6 +187,10 @@ def run_pipeline(
                 if k in ("title", "description", "long_description", "language", "tags")
             }
         )
+    if main_url is not None:
+        main_path = canonicalize(main_url)
+        if main_path is None:
+            raise ValueError(f"--url does not canonicalize: {main_url!r}")
     t0 = time.time()
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
@@ -158,181 +212,196 @@ def run_pipeline(
     # a rescued/re-tuned record must decode the way the probe predicted;
     # --encoding-aliases rows merge into the downstream options the same
     # way quarantined_records merges them internally
-    downstream_decode = decode_options
-    if encoding_aliases:
-        import dataclasses as _dc
-
-        from warc2zim_spark.kernels.decode import DecodeOptions as _DO
-
-        _base = decode_options if decode_options is not None else _DO()
-        downstream_decode = _dc.replace(
-            _base,
-            extra_aliases={**(_base.extra_aliases or {}), **encoding_aliases},
-        )
+    downstream_decode = (
+        merged_options(encoding_aliases, decode_options)
+        if encoding_aliases
+        else decode_options
+    )
     records = load_records(spark, webdata_dir)
-    content = content_records(records).cache()
+    # S10: per-record failure isolation. The probe rides the one record
+    # pass: the cached content stream carries each record's failure reason
+    # (the 1-KiB head is dropped once probed), and the fails sink is a
+    # filter of it. A config fallible past the head keeps its own probe,
+    # the only pass that reads full payloads.
+    if needs_full_payload(decode_options):
+        content = content_records(records).cache()
+        fails = quarantined_records(
+            content_records(records, with_payload=True, with_head=True),
+            encoding_aliases=encoding_aliases,
+            decode_options=decode_options,
+        ).cache()
+    else:
+        content = (
+            with_failure_reason(
+                content_records(records, with_head=True),
+                encoding_aliases=encoding_aliases,
+                decode_options=decode_options,
+            )
+            .drop("payload_head")
+            .cache()
+        )
+        fails = failed_rows(content)
 
     # ---- pass 1: gather --------------------------------------------------
     expected = expected_items(content).cache()
     edges = redirect_edges(content).cache()
-    # ONE fixpoint: both sinks derive from the same cached kept-source keys
-    kept = kept_sources(edges, expected).cache()
-    redirects = kept_redirects(edges, expected, kept)
-    full_expected = expected_with_redirects(edges, expected, kept)
-
-    # S10: per-record failure isolation — capture fails BEFORE the item sink
-    # so the policy (abort vs skip-record) can act on them
-    from warc2zim_spark.operators.quarantine import (
-        exclude_failed_records,
-        quarantined_records,
-    )
-
-    # head-only content stream: the probe reads the 1-KiB payload_head
-    # column, never the full payload bytes — unless the decode config is
-    # fallible past the head: a narrowed try-list makes tier (c) fallible
-    # (two-phase probe: head classification, full payload for the tier-c
-    # residue only), and a --content-header-bytes-length wider than the
-    # 1-KiB ingest head means the charset sniff itself needs real payload
-    narrowed = (
-        decode_options is not None
-        and getattr(decode_options, "charsets_to_try", None) is not None
-    )
-    wide_sniff = (
-        decode_options is not None
-        and getattr(decode_options, "header_bytes", 1024) > 1024
-    )
-    fails = quarantined_records(
-        content_records(records, with_payload=narrowed or wide_sniff, with_head=True),
-        encoding_aliases=encoding_aliases,
-        decode_options=decode_options,
-    ).cache()
-    fails.write.mode("overwrite").parquet(str(fails_dir))
-    n_fails = fails.count()  # cached: counts the written frame, no re-scan
-    if n_fails and not continue_on_error:
-        sample = [r.url for r in fails.limit(3).collect()]
-        raise ValueError(
-            f"{n_fails} record(s) failed processing (e.g. {sample}); "
-            f"aborting — pass continue_on_error=True to skip them "
-            f"(details in {fails_dir})"
-        )
-
-    # ---- pass 2: execute -------------------------------------------------
-    # record-level exclusion BEFORE first-wins: a failing winner falls back
-    # to the next record for the same path, like the reference's skip loop
-    item_source = exclude_failed_records(content, fails) if n_fails else content
-    items = items_table(item_source, include_domains).cache()
-    aliases = revisit_aliases(content, items)
-
-    # S8: static assets union into the item sink (converter.py:396-409)
-    all_items = items_with_static(items, static_asset_items(spark, custom_css))
 
     # S9 progress stats via Spark-native Observation: each sink write carries
     # its own observed aggregates (converter.py's per-run counters), so the
-    # metrics cost ZERO extra jobs — previously each count() re-ran a job.
-    from pyspark.sql import Observation
-
+    # metrics cost ZERO extra jobs.
+    obs_fails = Observation("fails_sink")
     obs_items = Observation("items_sink")
     obs_redirects = Observation("redirects_sink")
     obs_aliases = Observation("aliases_sink")
     obs_expected = Observation("expected_sink")
 
-    all_items.observe(
-        obs_items,
-        F.count(F.lit(1)).alias("rows"),
-        F.sum("payload_len").alias("bytes"),
-        # DISTINCT aggregates are disallowed in observed metrics — HLL sketch
-        F.approx_count_distinct("mime").alias("mimes"),
-    ).write.mode("overwrite").parquet(str(out / "items"))
-    redirects.observe(
-        obs_redirects, F.count(F.lit(1)).alias("rows")
-    ).write.mode("overwrite").parquet(str(out / "redirects"))
-    aliases.observe(
-        obs_aliases, F.count(F.lit(1)).alias("rows")
-    ).write.mode("overwrite").parquet(str(out / "aliases"))
-    full_expected.observe(
-        obs_expected, F.count(F.lit(1)).alias("rows")
-    ).write.mode("overwrite").parquet(str(out / "expected"))
+    def redirect_verdict():
+        """Branch (a), first half: ONE fixpoint — both sinks derive from the
+        same cached kept-source keys. Its shuffles run as it is planned
+        (adaptive execution materializes each pointer-doubling round)."""
+        return kept_sources(edges, expected).cache()
 
-    n_all_items = obs_items.get["rows"]
-    _progress(int(n_all_items), int(n_all_items))
+    # The first job over the verdict checkpoints its last pointer-doubling
+    # round (a lazy localCheckpoint). When jobs from two threads reach an
+    # RDD that is being checkpointed, Spark's scheduler and its checkpoint
+    # lock can deadlock, so the two first readers (the redirects sink and
+    # the --url presence check) take turns.
+    verdict_first_read = threading.Lock()
 
-    # main page: --url override or A4 auto-selection, then the J5 redirect
-    # follow — Main-Path must point at the FINAL target when the landing
-    # path is a redirect source (converter.py:586-606). Walked ONCE here;
-    # the resolved 1-row frame feeds the favicon path and zim_metadata.
-    from warc2zim_spark.kernels.surt import canonicalize
-    from warc2zim_spark.operators.gather import main_page_resolved
+    def redirect_sinks() -> None:
+        """Branch (a), second half: the two sinks of the verdict."""
+        kept = verdict.result()
+        with verdict_first_read:
+            kept_redirects(edges, expected, kept).observe(
+                obs_redirects, F.count(F.lit(1)).alias("rows")
+            ).write.mode("overwrite").parquet(str(out / "redirects"))
+        expected_with_redirects(edges, expected, kept).observe(
+            obs_expected, F.count(F.lit(1)).alias("rows")
+        ).write.mode("overwrite").parquet(str(out / "expected"))
 
-    if main_url is not None:
-        main_path = canonicalize(main_url)
-        if main_path is None:
-            raise ValueError(f"--url does not canonicalize: {main_url!r}")
-        main_df = spark.createDataFrame(
-            [(main_path, main_url)], "zim_path string, url string"
-        )
-    else:
-        main_df = main_page_candidate(content)
-    resolved = main_page_resolved(content, main_df)
-    resolved_rows = resolved.collect()  # local frame: no job
-    if not resolved_rows:
-        # converter.py:315-316: "Unable to find main path, aborting" — a ZIM
-        # without a main page is unusable; fail rather than emit one
-        raise ValueError("Unable to find main path, aborting")
-    resolved_path = resolved_rows[0].zim_path
-    if main_url is not None:
-        # a user-specified main page must actually exist in the archive
-        # (converter.py:612-614 "Unable to find main page")
-        present = (
-            full_expected.filter(F.col("zim_path") == resolved_path)
-            .limit(1)
-            .count()
-        )
-        if not present:
-            raise ValueError(
-                f"Unable to find main page {resolved_path!r} "
-                "(resolved from --url) among expected items, aborting"
+    def main_page_rows() -> tuple[str, list]:
+        """Branch (c): main page, illustration, metadata rows → (Main-Path,
+        the collected metadata rows)."""
+        # --url override or A4 auto-selection, then the J5 redirect follow —
+        # Main-Path must point at the FINAL target when the landing path is
+        # a redirect source (converter.py:586-606). Walked ONCE here; the
+        # resolved 1-row frame feeds the favicon path and zim_metadata.
+        if main_url is not None:
+            main_df = spark.createDataFrame(
+                [(main_path, main_url)], "zim_path string, url string"
             )
-
-    # illustration: --favicon override, else discovery off the main page
-    # (J3 capture join + A9 ranking), both located on the cached narrow
-    # content stream with payloads fetched from ``records`` by position;
-    # 0 captured rows → the transparent fallback inside zim_metadata
-    # (converter.py:920-924)
-    meta_args = dict(metadata_args or {})
-    if scraper_suffix is not None:
-        meta_args.setdefault("scraper_suffix", scraper_suffix)
-    if disable_metadata_checks:
-        meta_args["validate"] = False
-    if meta_args.get("illustration") is None:
-        from warc2zim_spark.operators.favicon import (
-            best_illustration,
-            illustration_from_url,
-        )
-
-        if favicon_url is not None:
-            best = illustration_from_url(content, favicon_url, records=records)
         else:
-            best = best_illustration(
-                content, resolved, decode_options=downstream_decode,
-                records=records,
+            main_df = main_page_candidate(content)
+        resolved = main_page_resolved(content, main_df)
+        resolved_rows = resolved.collect()  # local frame: no job
+        if not resolved_rows:
+            # converter.py:315-316: "Unable to find main path, aborting" — a
+            # ZIM without a main page is unusable; fail rather than emit one
+            raise ValueError("Unable to find main path, aborting")
+        resolved_path = resolved_rows[0].zim_path
+        if main_url is not None:
+            # a user-specified main page must actually exist in the archive
+            # (converter.py:612-614 "Unable to find main page")
+            full_expected = expected_with_redirects(edges, expected, verdict.result())
+            with verdict_first_read:
+                present = (
+                    full_expected.filter(F.col("zim_path") == resolved_path)
+                    .limit(1)
+                    .count()
+                )
+            if not present:
+                raise ValueError(
+                    f"Unable to find main page {resolved_path!r} "
+                    "(resolved from --url) among expected items, aborting"
+                )
+        # illustration: --favicon override, else discovery off the main page
+        # (J3 capture join + A9 ranking), both located on the cached narrow
+        # content stream with payloads fetched from ``records`` by position;
+        # 0 captured rows → the transparent fallback inside zim_metadata
+        # (converter.py:920-924)
+        meta_args = dict(metadata_args or {})
+        if scraper_suffix is not None:
+            meta_args.setdefault("scraper_suffix", scraper_suffix)
+        if disable_metadata_checks:
+            meta_args["validate"] = False
+        if meta_args.get("illustration") is None:
+            from warc2zim_spark.operators.favicon import (  # needs a session
+                best_illustration,
+                illustration_from_url,
             )
-        illu_rows = best.select("illustration").limit(1).collect()
-        if illu_rows:
-            meta_args["illustration"] = bytes(illu_rows[0].illustration)
 
-    # S7: the full metadata frame (validated fail-fast inside), plus the
-    # engine's own operational entries — title/lang cascade off the SAME
-    # main page the run selected (user --url or auto)
-    meta = zim_metadata(content, records, name=name, main_path=resolved_path,
-                        decode_options=downstream_decode, **meta_args)
-    extra = spark.createDataFrame(
-        [
-            ("Main-Path", resolved_path),
-            ("Counter-Items", str(n_all_items)),
-        ],
+            if favicon_url is not None:
+                best = illustration_from_url(content, favicon_url, records=records)
+            else:
+                best = best_illustration(
+                    content, resolved, decode_options=downstream_decode,
+                    records=records,
+                )
+            illu_rows = best.select("illustration").limit(1).collect()
+            if illu_rows:
+                meta_args["illustration"] = bytes(illu_rows[0].illustration)
+        # S7: the full metadata frame (validated fail-fast inside) — title/
+        # lang cascade off the SAME main page the run selected (user --url
+        # or auto)
+        meta = zim_metadata(content, records, name=name, main_path=resolved_path,
+                            decode_options=downstream_decode, **meta_args)
+        return resolved_path, [tuple(r) for r in meta.collect()]
+
+    # overlap the three independent branches (actions submitted from one
+    # thread run one after another): (b) runs here, (a) and (c) on the
+    # pool, the caller's job group and description inherited. Before the
+    # abort check only the verdict and (c) run, and neither writes a sink;
+    # (a)'s sinks are submitted once the check passes. Leaving the block
+    # waits for every branch, so no job outlives a raise.
+    with ThreadPoolExecutor(max_workers=3) as pool:
+
+        def branch(fn):
+            return pool.submit(inheritable_thread_target(spark)(fn))
+
+        verdict = branch(redirect_verdict)
+        main_page = branch(main_page_rows)
+        fails.observe(obs_fails, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(str(fails_dir))
+        n_fails = obs_fails.get["rows"]
+        if n_fails and not continue_on_error:
+            sample = [r.url for r in fails.limit(3).collect()]
+            raise ValueError(
+                f"{n_fails} record(s) failed processing (e.g. {sample}); "
+                f"aborting — pass continue_on_error=True to skip them "
+                f"(details in {fails_dir})"
+            )
+        redirect_sinks_done = branch(redirect_sinks)
+
+        # ---- pass 2: execute ---------------------------------------------
+        # record-level exclusion BEFORE first-wins: a failing winner falls
+        # back to the next record for the same path, like the reference's
+        # skip loop
+        item_source = exclude_failed_records(content, fails) if n_fails else content
+        items = items_table(item_source, include_domains).cache()
+        # S8: static assets union into the item sink (converter.py:396-409)
+        all_items = items_with_static(items, static_asset_items(spark, custom_css))
+        all_items.observe(
+            obs_items,
+            F.count(F.lit(1)).alias("rows"),
+            F.sum("payload_len").alias("bytes"),
+            # DISTINCT aggregates are disallowed in observed metrics — HLL
+            F.approx_count_distinct("mime").alias("mimes"),
+        ).write.mode("overwrite").parquet(str(out / "items"))
+        n_all_items = obs_items.get["rows"]
+        _progress(int(n_all_items), int(n_all_items))
+        revisit_aliases(content, items).observe(
+            obs_aliases, F.count(F.lit(1)).alias("rows")
+        ).write.mode("overwrite").parquet(str(out / "aliases"))
+        redirect_sinks_done.result()
+        resolved_path, meta_rows = main_page.result()
+
+    # the engine's own operational entries close the metadata sink, once the
+    # item count is known
+    spark.createDataFrame(
+        meta_rows + [("Main-Path", resolved_path), ("Counter-Items", str(n_all_items))],
         "name string, value string",
-    )
-    meta.unionByName(extra).write.mode("overwrite").parquet(str(out / "metadata"))
+    ).write.mode("overwrite").parquet(str(out / "metadata"))
 
     n_static = len(STATIC_JS_ASSETS) + (custom_css is not None)
     metrics = {
@@ -349,7 +418,6 @@ def run_pipeline(
     (out / "metrics.json").write_text(json.dumps(metrics))
     written = int(n_all_items) + int(metrics["redirects"]) + int(metrics["aliases"])
     _progress(written, written)
-    fails.unpersist()
-    kept.unpersist()
-    content.unpersist()
+    for df in (items, verdict.result(), edges, expected, fails, content):
+        df.unpersist()
     return metrics
