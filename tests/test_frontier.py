@@ -220,15 +220,17 @@ class TestPoliteness:
 
 
 class TestCrawlJobCount:
-    @pytest.mark.parametrize("seen_mode,ceiling", [("exact", 43), ("bloom", 60)])
+    @pytest.mark.parametrize("seen_mode,ceiling", [("exact", 42), ("bloom", 49)])
     def test_cold_crawl_job_count_pinned(
         self, spark, webdata, tmp_path, count_jobs, seen_mode, ceiling
     ):
-        """Each frontier is materialized by one eager checkpoint job, with no
-        count beside it. A cold 3-wave crawl on this fixture runs 43 (exact)
-        / 60 (bloom) jobs, the pool thread's wave writes and lookup warm-up
-        included (36 / 53 of them on the calling thread). Every job carries
-        the caller's job group, pool threads' too."""
+        """Each schedule and each frontier is materialized by one eager
+        checkpoint job, with no count beside it; robots is aggregated once
+        per crawl; bloom mode builds no filter before wave 0 and updates it
+        in one pass per wave, written once. A cold 3-wave crawl on this
+        fixture runs 42 (exact) / 49 (bloom) jobs, the pool threads' wave
+        writes, bloom updates and lookup warm-up included. Every job
+        carries the caller's job group, pool threads' too."""
         seeds = spark.read.parquet(f"{webdata}/seeds.parquet")
         robots = spark.read.parquet(f"{webdata}/robots.parquet")
         pages = spark.read.parquet(f"{webdata}/pages.parquet")
@@ -279,3 +281,168 @@ class TestBloomModeCrawl:
             max_waves=3, host_budget=4, wave_budget=50, seen_mode="bloom",
         ).collect()
         assert schedule_key(resumed) == schedule_key(full)
+
+    def test_bloom_resume_after_partial_filter_write(self, spark, web_tables, tmp_path):
+        """The filter update runs beside the wave's write and marker, so a
+        crash can leave the last committed wave's filter directory partly
+        written (no _SUCCESS). Resume then rebuilds the filter from the
+        committed waves' keys instead of reading the partial directory."""
+        import shutil
+
+        seeds, robots, pages = web_tables
+        full = run_crawl(
+            spark, seeds, pages, robots, str(tmp_path / "bf"),
+            max_waves=3, host_budget=4, wave_budget=50, seen_mode="bloom",
+        ).collect()
+        run_crawl(
+            spark, seeds, pages, robots, str(tmp_path / "bp"),
+            max_waves=2, host_budget=4, wave_budget=50, seen_mode="bloom",
+        )
+        partial = tmp_path / "bp" / "seen_bloom_wave=1"
+        assert (partial / "_SUCCESS").exists()
+        shutil.rmtree(partial)
+        partial.mkdir()
+        resumed = resume_crawl(
+            spark, seeds, pages, robots, str(tmp_path / "bp"),
+            max_waves=3, host_budget=4, wave_budget=50, seen_mode="bloom",
+        ).collect()
+        assert schedule_key(resumed) == schedule_key(full)
+
+
+def _bloom_rows(df):
+    return sorted(
+        (r.part_id, r.num_parts, r.n_keys, bytes(r.bitmap)) for r in df.collect()
+    )
+
+
+class TestBloomUpdate:
+    """``add_to_bloom`` is ``merge_blooms(bloom, build_bloom(keys))`` in one
+    pass: same rows, same bytes."""
+
+    P, M = 4, 1 << 12
+
+    @pytest.fixture(scope="class")
+    def keys_by_part(self, spark):
+        from warc2zim_spark.frontier.seenfilter import partition_of
+
+        rows = (
+            spark.range(0, 400)
+            .select(F.concat(F.lit("h.example/p"), F.col("id")).alias("surt_key"))
+            .withColumn("part", partition_of(F.col("surt_key"), self.P))
+            .collect()
+        )
+        out = {}
+        for r in rows:
+            out.setdefault(r.part, []).append(r.surt_key)
+        assert set(out) == set(range(self.P))
+        return out
+
+    def _keys(self, spark, keys):
+        return spark.createDataFrame([(k,) for k in keys], "surt_key string")
+
+    def test_equals_build_then_merge(self, spark, keys_by_part):
+        from warc2zim_spark.frontier.seenfilter import (
+            add_to_bloom,
+            build_bloom,
+            merge_blooms,
+        )
+
+        # partition 0: filter only; 1: both; 2: keys only; 3: neither
+        prior = build_bloom(
+            self._keys(spark, keys_by_part[0] + keys_by_part[1][::2]),
+            num_partitions=self.P, m_bits=self.M,
+        )
+        new = self._keys(spark, keys_by_part[1][1::2] + keys_by_part[2])
+        got = _bloom_rows(add_to_bloom(prior, new, num_partitions=self.P, m_bits=self.M))
+        want = _bloom_rows(merge_blooms(
+            prior, build_bloom(new, num_partitions=self.P, m_bits=self.M)
+        ))
+        assert got == want
+        assert [r[0] for r in got] == [0, 1, 2]
+        assert got[1][2] == len(keys_by_part[1])
+
+    def test_empty_or_absent_filter(self, spark, keys_by_part):
+        from warc2zim_spark.frontier.seenfilter import (
+            _BLOOM_SCHEMA,
+            add_to_bloom,
+            build_bloom,
+            merge_blooms,
+        )
+
+        new = self._keys(spark, keys_by_part[1] + keys_by_part[3])
+        built = build_bloom(new, num_partitions=self.P, m_bits=self.M)
+        empty = spark.createDataFrame([], _BLOOM_SCHEMA)
+        want = _bloom_rows(merge_blooms(empty, built))
+        assert want == _bloom_rows(built)
+        for prior in (empty, None):
+            got = add_to_bloom(prior, new, num_partitions=self.P, m_bits=self.M)
+            assert _bloom_rows(got) == want
+
+    @pytest.mark.parametrize(
+        "num_parts,m_bits,message",
+        [(2, M, "partition-count mismatch"), (P, 2 * M, "size mismatch")],
+        ids=["num_parts", "m_bits"],
+    )
+    def test_mismatch_raises(self, spark, keys_by_part, num_parts, m_bits, message):
+        from warc2zim_spark.frontier.seenfilter import add_to_bloom, build_bloom
+
+        keys = self._keys(spark, keys_by_part[0] + keys_by_part[1])
+        prior = build_bloom(keys, num_partitions=self.P, m_bits=self.M)
+        with pytest.raises(Exception, match=message):
+            add_to_bloom(prior, keys, num_partitions=num_parts, m_bits=m_bits).collect()
+
+
+class TestHostPolicy:
+    """The gates give the same rows with a prebuilt ``host_policy`` as
+    with the 2-argument calls that derive it from ``robots``."""
+
+    @pytest.fixture(scope="class")
+    def robots(self, spark):
+        return spark.createDataFrame(
+            [
+                ("delay.example", None, None, 15000),           # delay only
+                ("rules.example", "disallow", "/private", None),  # rules only
+                ("both.example", "disallow", "/x", 10000),       # both
+                ("both.example", "allow", "/x/ok", 10000),
+            ],
+            "host string, rule_type string, path_prefix string, crawl_delay_ms int",
+        )
+
+    @pytest.fixture(scope="class")
+    def cands(self, spark):
+        paths = ["/a", "/b", "/c", "/d", "/private/1", "/x/1", "/x/ok/1"]
+        hosts = ["delay.example", "rules.example", "both.example", "free.example"]
+        rows = [
+            (f"{h}{p}", h, i % 2, 1.0 / (i + 1))
+            for h in hosts for i, p in enumerate(paths)
+        ]
+        return spark.createDataFrame(
+            rows, "surt_key string, host string, hops int, score double"
+        )
+
+    def test_prebuilt_policy_same_rows(self, spark, robots, cands):
+        from warc2zim_spark.frontier.politeness import (
+            host_policy,
+            politeness_budget,
+            robots_allowed,
+        )
+
+        policy = host_policy(robots).localCheckpoint(eager=True)
+        allowed = sorted(robots_allowed(cands, robots).collect())
+        assert sorted(robots_allowed(cands, robots, policy=policy).collect()) == allowed
+        denied = {r.surt_key for r in cands.collect()} - {r.surt_key for r in allowed}
+        assert denied == {
+            "rules.example/private/1", "both.example/x/1",
+        }
+        polite = sorted(politeness_budget(cands, robots, host_budget=4).collect())
+        assert sorted(
+            politeness_budget(cands, robots, host_budget=4, policy=policy).collect()
+        ) == polite
+        per_host = {}
+        for r in polite:
+            per_host[r.host] = per_host.get(r.host, 0) + 1
+        # 30 s waves: 15 s delay → 2, 10 s delay → 3, no delay → host_budget
+        assert per_host == {
+            "delay.example": 2, "both.example": 3,
+            "rules.example": 4, "free.example": 4,
+        }

@@ -234,6 +234,44 @@ def _ancestors(nodes, i) -> list[str]:
     return out
 
 
+def _executed_plans(spark, fn) -> list[str]:
+    """Formatted physical plans of the SQL executions ``fn()`` started, on
+    any thread, eager checkpoints included (Spark's SQL status store)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        listed = store.executionsList()
+        return [listed.apply(i) for i in range(listed.size())]
+
+    before = max((e.executionId() for e in executions()), default=-1)
+    fn()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return [
+        e.physicalPlanDescription() for e in executions() if e.executionId() > before
+    ]
+
+
+def _exchange_over_scan(plan: str, location: str) -> bool:
+    """Whether a formatted physical plan (AQE's final plan, when adaptive)
+    has an ``Exchange`` above a file scan whose location contains
+    ``location``."""
+    tree, _, details = plan.partition("\n\n\n")
+    tree = tree.split("== Initial Plan ==")[0]
+    scans = set(re.findall(
+        r"^\((\d+)\) Scan [^\n]*\n(?:[^\n]+\n)*?Location: [^\n]*" + re.escape(location),
+        details, re.M,
+    ))
+    nodes, ids = [], []
+    for line in tree.splitlines():
+        m = re.search(r"([A-Z][A-Za-z]*(?: [a-z]+)*) +\((\d+)\)", line)
+        if m:
+            nodes.append((m.start(1), m.group(1)))
+            ids.append(m.group(2))
+    return any(
+        "Exchange" in _ancestors(nodes, i) for i, n in enumerate(ids) if n in scans
+    )
+
+
 class TestFrontierPlanShapes:
     """The crawl wave has one politeness path, one top-k path and one exact
     seen probe; hot-host skew is absorbed by Spark's own plan rules. These
@@ -300,3 +338,22 @@ class TestFrontierPlanShapes:
             assert any(
                 t.startswith("BroadcastExchange") for t in _ancestors(nodes, i)
             ), nodes[i]
+
+    def test_crawl_waves_no_exchange_over_robots(self, spark, webdata, tmp_path):
+        """Robots is aggregated once per crawl: of a 2-wave crawl's executed
+        plans, only the per-crawl policy build has an Exchange over the
+        robots scan — each wave broadcasts projections of the checkpointed
+        policy table instead of re-aggregating robots."""
+        from warc2zim_spark.frontier.crawl import run_crawl
+
+        read = spark.read.parquet
+        plans = _executed_plans(spark, lambda: run_crawl(
+            spark, read(f"{webdata}/seeds.parquet"), read(f"{webdata}/pages.parquet"),
+            read(f"{webdata}/robots.parquet"), str(tmp_path / "crawl"),
+            max_waves=2, host_budget=4, wave_budget=50,
+        ))
+        over_robots = [p for p in plans if _exchange_over_scan(p, "robots.parquet")]
+        assert len(over_robots) == 1, len(over_robots)
+        assert "pages.parquet" not in over_robots[0]
+        # the wave plans (schedule and frontier checkpoints) did run
+        assert sum("pages.parquet" in p for p in plans) >= 2

@@ -1,16 +1,24 @@
 """BFS crawl-wave loop: the north-star frontier driver.
 
-Iterative batch (NOT Structured Streaming — SURVEY §2.8): each wave
-  1. candidates = frontier rows (url, surt_key, host, hops, score)
-  2. robots gate → politeness budget → global priority + wave budget
-  3. "fetch" = join scheduled URLs against the page table (the sandbox's
-     stand-in for HTTP; at production scale this is the fetcher boundary)
-  4. transform: extract links from fetched pages → new candidates
-     (hops+1, inherited score decayed)
-  5. seen-filter update: scheduled keys enter the seen set (exact mode) or
-     the partitioned bloom (scale mode)
-  6. checkpoint wave output + metrics to parquet (Iceberg-shaped layout) —
-     resumable: ``resume_crawl`` restarts from the last committed wave.
+Iterative batch (NOT Structured Streaming — SURVEY §2.8). Once per crawl,
+the page lookup and the per-host robots policy (``host_policy``) are built;
+then each wave
+  1. candidates = frontier rows (url, surt_key, host, hops, score), deduped
+     per key and probed against the seen filter
+  2. robots gate → politeness budget → global priority + wave budget; the
+     schedule is materialized eagerly (one job)
+  3. three independent jobs start from the finished schedule at once:
+     a. the wave write (parquet + metrics), then its commit marker;
+     b. bloom mode: the seen-filter update — the wave's keys ORed into the
+        prior bitmaps in one pass (``add_to_bloom``), persisted as
+        ``seen_bloom_wave=N``;
+     c. "fetch" = join scheduled URLs against the page table (the sandbox's
+        stand-in for HTTP; at production scale this is the fetcher
+        boundary), extract links → next frontier (hops+1, inherited score
+        decayed), checkpointed.
+  4. exact mode: scheduled keys enter the seen set. Bloom mode: the next
+     wave's probe reads the filter file written by 3b, waiting for it first.
+Resumable: ``resume_crawl`` restarts from the last committed wave.
 
 Determinism contract (north_rule): the scheduled set + ordering per wave is
 a pure function of (seed list, politeness budget, page table) — independent
@@ -28,11 +36,18 @@ from pyspark.sql import functions as F
 
 from warc2zim_spark.frontier.politeness import (
     env_cap,
+    host_policy,
     politeness_budget,
     prioritize,
     robots_allowed,
 )
-from warc2zim_spark.frontier.seenfilter import unseen_exact
+from warc2zim_spark.frontier.seenfilter import (
+    add_to_bloom,
+    build_bloom,
+    probe_bloom,
+    read_bloom,
+    unseen_exact,
+)
 from warc2zim_spark.functions import udfs
 
 SCORE_DECAY = 0.5
@@ -99,6 +114,7 @@ def crawl_wave(
     pages_keyed: DataFrame | None = None,
     seen_bloom: DataFrame | None = None,
     bloom_partitions: int = 32,
+    policy: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """One wave → (scheduled, next_frontier_candidates).
 
@@ -112,6 +128,12 @@ def crawl_wave(
     built with (probe_bloom validates against the filter rows and raises on
     mismatch — a silent mismatch would pair candidates with the wrong
     bitmaps and re-crawl seen URLs every wave).
+    ``policy``: optional pre-built ``host_policy(robots)`` (checkpointed
+    once per crawl by the driver); derived from ``robots`` when absent.
+
+    ``scheduled`` comes back materialized (an eager checkpoint), so every
+    consumer — the driver's write and seen update, and the link extraction
+    behind ``next_frontier_candidates`` — reads finished blocks.
     """
     # dedup in-wave candidates: best (hops, score) per surt_key, then anti-join
     # seen. Deterministic everywhere: url = lexicographic min, host derived
@@ -132,23 +154,25 @@ def crawl_wave(
         # partitioned-bloom membership (the 10^10-key mode): candidates hash
         # to bitmap partitions, cogrouped probe, no exact key set anywhere.
         # A bloom FP drops an unseen URL — the crawl-safe direction.
-        from warc2zim_spark.frontier.seenfilter import probe_bloom
-
         unseen = probe_bloom(
             best, seen_bloom, num_partitions=bloom_partitions, keep="miss"
         )
     else:
         unseen = unseen_exact(best, seen)
-    allowed = robots_allowed(unseen, robots)
-    polite = politeness_budget(allowed, robots, host_budget=host_budget)
-    scheduled = prioritize(polite, wave_budget=wave_budget).localCheckpoint(
-        eager=False
+    allowed = robots_allowed(unseen, robots, policy=policy)
+    polite = politeness_budget(
+        allowed, robots, host_budget=host_budget, policy=policy
     )
-    # ^ checkpoint: the wave output is consumed twice — written/aggregated by
-    # the crawl driver AND joined against the page table for link extraction
-    # (whose result materializes one wave LATER, after the driver's cache is
-    # long gone) — without the barrier every wave's scheduling windows
-    # recompute inside the next wave's frontier checkpoint
+    scheduled = prioritize(polite, wave_budget=wave_budget).localCheckpoint(
+        eager=True
+    )
+    # ^ checkpoint: the wave output is consumed by up to three jobs — the
+    # driver's write and bloom update and the link extraction (whose result
+    # materializes one wave LATER) — without the barrier each would recompute
+    # the scheduling windows. Eager, because those jobs run concurrently: a
+    # lazy checkpoint whose first readers are two threads' jobs at once can
+    # deadlock the scheduler (one job marks the RDD checkpointed while the
+    # other's stage walk holds its lock)
 
     # "fetch": canonical-key join against the page table; extract links.
     # The scheduled keys pick their winning page_url on the NARROW lookup,
@@ -216,19 +240,19 @@ def run_crawl(
     directory — the durable artifact, matching what a restarted job sees.
 
     ``seen_mode="bloom"`` drives the seen-filter as the partitioned bloom
-    (north_star headline): each wave's scheduled keys build a fixed-size
-    per-partition bloom that OR-merges into the running filter; the filter
-    rows persist to parquet next to each wave (resume re-reads them). The
-    exact key set never materializes. ``bloom_m_bits`` is the per-partition
-    capacity plan: at 16 bits/key, 2^20 bits ≈ 65k keys/partition — size it
-    to (expected keys) × 16 / partitions at production scale.
+    (north_star headline): each wave's scheduled keys are ORed into the
+    running filter's per-partition bitmaps (``add_to_bloom``), and the
+    filter persists to parquet next to each wave (the next wave's probe and
+    a resume read it back). The exact key set never materializes. A fresh
+    crawl has no filter before wave 0, whose seen set is empty.
+    ``bloom_m_bits`` is the per-partition capacity plan: at 16 bits/key,
+    2^20 bits ≈ 65k keys/partition — size it to (expected keys) × 16 /
+    partitions at production scale.
 
     Hot-host skew needs no option here: ``politeness_budget``'s partial
     ``WindowGroupLimit`` caps each host before the host exchange."""
     if seen_mode not in ("exact", "bloom"):
         raise ValueError(f"seen_mode must be 'exact' or 'bloom', got {seen_mode!r}")
-    from warc2zim_spark.frontier.seenfilter import build_bloom, merge_blooms
-
     ckpt = Path(checkpoint_dir)
     ckpt.mkdir(parents=True, exist_ok=True)
     # spread the seed pass: seeds routinely arrive as ONE partition (a limit,
@@ -250,17 +274,17 @@ def run_crawl(
     # exactly n_scheduled NEW keys — the anti-join guarantees disjointness),
     # so the wave can broadcast the probe side while it provably fits
     seen_count = initial_seen.count() if initial_seen is not None else 0
-    seen_bloom = None
-    if seen_mode == "bloom":
-        # resume fast-path: the persisted filter itself (no key rebuild)
-        seen_bloom = (
-            initial_bloom
-            if initial_bloom is not None
-            else build_bloom(
-                seen, num_partitions=bloom_partitions, m_bits=bloom_m_bits
-            )
+    # bloom mode starts from the persisted filter, or from one rebuilt from
+    # a resume's seen keys; a fresh crawl has none until wave 0's update
+    seen_bloom = initial_bloom
+    if seen_mode == "bloom" and seen_bloom is None and initial_seen is not None:
+        seen_bloom = build_bloom(
+            seen, num_partitions=bloom_partitions, m_bits=bloom_m_bits
         ).localCheckpoint(eager=True)
     pages_keyed = page_lookup(pages).cache()
+    # robots aggregated once per crawl: every wave's gates broadcast
+    # projections of these finished blocks
+    policy = host_policy(robots).localCheckpoint(eager=True)
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
@@ -268,20 +292,32 @@ def run_crawl(
 
     # overlap independent driver-submitted jobs (guide §2.6): actions are
     # only sequential because the driver calls them sequentially. Per wave,
-    # the schedule's parquet write and the next frontier's checkpoint
-    # consume the SAME materialized schedule and depend on nothing else of
-    # each other — running the write in a worker thread lets the link
-    # extraction back-fill the executor slots the write's tail leaves idle.
-    # The lookup-cache build likewise overlaps wave-0's scheduling chain
-    # (it is first needed only at the mid-wave fetch join). Pool jobs carry
-    # the caller's job group and description, like the calling thread's.
-    with ThreadPoolExecutor(max_workers=2) as pool:
+    # the schedule's parquet write, the bloom update and the next frontier's
+    # checkpoint all read the SAME materialized schedule and depend on
+    # nothing else of each other — the pool runs the write and the update
+    # beside the checkpoint, so the link extraction back-fills the executor
+    # slots their tails leave idle and the update leaves the wave's critical
+    # path. The lookup-cache build likewise overlaps wave-0's scheduling
+    # chain (it is first needed only at the mid-wave fetch join). Pool jobs
+    # carry the caller's job group and description, like the calling
+    # thread's.
+    with ThreadPoolExecutor(max_workers=3) as pool:
 
         def submit(fn):
             return pool.submit(inheritable_thread_target(spark)(fn))
 
+        def update_bloom(prior, keys, path):
+            add_to_bloom(
+                prior, keys,
+                num_partitions=bloom_partitions, m_bits=bloom_m_bits,
+            ).write.mode("overwrite").parquet(path)
+            return read_bloom(spark, path)
+
         warm_lookup = submit(pages_keyed.count)
+        bloom_fut = None
         for wave in range(start_wave, max_waves):
+            if bloom_fut is not None:
+                seen_bloom = bloom_fut.result()
             seen_for_wave = (
                 F.broadcast(seen)
                 if seen_count <= env_cap("W2ZS_SEEN_BROADCAST_MAX")
@@ -291,7 +327,7 @@ def run_crawl(
                 frontier, seen_for_wave, pages, robots,
                 host_budget=host_budget, wave_budget=wave_budget,
                 pages_keyed=pages_keyed, seen_bloom=seen_bloom,
-                bloom_partitions=bloom_partitions,
+                bloom_partitions=bloom_partitions, policy=policy,
             )
             out = scheduled.select(
                 F.lit(wave).alias("wave"), "url", "surt_key", "host", "hops",
@@ -301,7 +337,7 @@ def run_crawl(
             # + distinct hosts (size(collect_set) ≡ countDistinct) are
             # collected while the rows stream to parquet, replacing the
             # separate aggregation job per wave; out needs no cache — its
-            # only other consumer (the seen union) is a column projection of
+            # other consumers (the seen update) are column projections of
             # the already-checkpointed schedule
             obs = Observation(f"wave={wave}")
             observed = out.observe(
@@ -317,8 +353,18 @@ def run_crawl(
                     str(ckpt / f"wave={w}")
                 )
             )
+            if seen_mode == "bloom":
+                # the filter persists once per wave (north_rule: resumable
+                # without re-reading every wave's keys); an empty wave
+                # persists its unchanged filter. Submitted before the wave's
+                # size is known, so the update overlaps the write and the
+                # checkpoint below
+                bloom_fut = submit(
+                    lambda prior=seen_bloom, keys=out.select("surt_key"), w=wave:
+                    update_bloom(prior, keys, str(ckpt / f"seen_bloom_wave={w}"))
+                )
             # eager checkpoint: one job (a lazy checkpoint + count is two
-            # under AQE), concurrent with the write above
+            # under AQE), concurrent with the pool's jobs above
             frontier = next_frontier.localCheckpoint(eager=True).filter(_valid())
             write_fut.result()
             stats = obs.get
@@ -332,21 +378,7 @@ def run_crawl(
             (ckpt / f"wave={wave}._SUCCESS_WAVE").write_text("ok")
             if n_scheduled == 0:
                 break
-            if seen_mode == "bloom":
-                wave_bloom = build_bloom(
-                    out.select("surt_key"),
-                    num_partitions=bloom_partitions, m_bits=bloom_m_bits,
-                )
-                seen_bloom = merge_blooms(seen_bloom, wave_bloom).localCheckpoint(
-                    eager=True
-                )
-                # persist the filter itself (north_rule: seen-filter
-                # resumable from checkpoint without re-reading every wave's
-                # keys)
-                seen_bloom.write.mode("overwrite").parquet(
-                    str(ckpt / f"seen_bloom_wave={wave}")
-                )
-            else:
+            if seen_mode == "exact":
                 # no distinct (r06): this wave's keys are disjoint from seen
                 # by construction (they survived the anti-join) and unique
                 # within the wave (dedup groupBy), so the union IS the exact
@@ -356,6 +388,8 @@ def run_crawl(
                     eager=True
                 )
                 seen_count += n_scheduled
+        if bloom_fut is not None:
+            bloom_fut.result()
         warm_lookup.result()
     pages_keyed.unpersist()
     # committed waves only: a wave dir whose write finished but whose marker
@@ -399,12 +433,15 @@ def resume_crawl(
     ckpt = Path(checkpoint_dir)
     done = spark.read.parquet(*[str(ckpt / f"wave={w}") for w in range(last + 1)])
     seen = done.select("surt_key").distinct()
-    # bloom mode: resume from the persisted FILTER (written after each wave)
-    # instead of rebuilding it from every committed wave's keys
+    # bloom mode: resume from the persisted FILTER (written beside each
+    # wave) instead of rebuilding it from every committed wave's keys — but
+    # only a completely written one: the update runs beside the wave's
+    # write and marker, so a crash can leave the directory partial (no
+    # _SUCCESS); run_crawl then rebuilds the filter from ``seen``
     if kwargs.get("seen_mode") == "bloom":
         bloom_path = ckpt / f"seen_bloom_wave={last}"
-        if bloom_path.exists():
-            kwargs = {**kwargs, "initial_bloom": spark.read.parquet(str(bloom_path))}
+        if (bloom_path / "_SUCCESS").exists():
+            kwargs = {**kwargs, "initial_bloom": read_bloom(spark, str(bloom_path))}
     # recompute the frontier produced by the last committed wave
     _, frontier = crawl_wave(
         done.filter(F.col("wave") == last).select("url", "surt_key", "host", "hops", "score"),

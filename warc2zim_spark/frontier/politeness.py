@@ -12,6 +12,11 @@ robots):
 * priority — total deterministic order: (hops asc, score desc, surt asc)
   so every parallelism level schedules the same URLs (north_rule: identical
   ordering and seen-set across cluster sizes).
+* host policy — both gates read one per-host table, ``host_policy(robots)``
+  (host, rule array, max crawl delay): one ``groupBy`` over the robots
+  table. ``run_crawl`` builds and checkpoints it once per crawl and passes
+  it to every wave's gates as ``policy=``; without it each gate derives it
+  from ``robots`` itself.
 * hot-host skew — absorbed at runtime, not by static pre-sharding: the
   per-host rank filter carries a literal bound, so Spark's
   InferWindowGroupLimit plans a partial ``WindowGroupLimit`` below the
@@ -44,41 +49,58 @@ def env_cap(name: str) -> int:
     return int(os.environ.get(name, "2000000"))
 
 
-def robots_allowed(candidates: DataFrame, robots: DataFrame, path_col: str = "surt_key") -> DataFrame:
+def host_policy(robots: DataFrame) -> DataFrame:
+    """(host, _rules, crawl_delay_ms): one row per robots host, one
+    ``groupBy``. ``_rules`` is the host's (p, n, is_allow) path rules
+    (empty for a delay-only host); ``crawl_delay_ms`` is the max declared
+    delay (null for a rules-only host). The robots gate and the politeness
+    budget each broadcast one projection of it, so a crawl that builds it
+    once (``run_crawl``) aggregates the robots table once, not twice per
+    wave."""
+    rule = F.when(
+        F.col("path_prefix").isNotNull(),
+        F.struct(
+            F.col("path_prefix").alias("p"),
+            F.length("path_prefix").alias("n"),
+            (F.col("rule_type") == "allow").alias("is_allow"),
+        ),
+    )
+    return robots.groupBy("host").agg(
+        F.collect_list(rule).alias("_rules"),  # skips the nulls
+        F.max("crawl_delay_ms").alias("crawl_delay_ms"),
+    )
+
+
+def robots_allowed(
+    candidates: DataFrame,
+    robots: DataFrame,
+    path_col: str = "surt_key",
+    policy: DataFrame | None = None,
+) -> DataFrame:
     """Filter candidates by robots rules. ``candidates`` needs ``host`` and a
     path-ish column (we use the scheme-less surt key; rules match on the path
     part after the host). Longest-prefix rule wins; allow on tie (RFC 9309
-    §2.2.2); no rules → allow.
+    §2.2.2); no rules → allow. ``policy``: a prebuilt ``host_policy(robots)``
+    frame; derived from ``robots`` when absent.
 
-    Shape (r06): the rules table is aggregated to ONE array row per host and
-    broadcast, and the longest-prefix decision is a pure map-side array
-    expression over that row — no shuffle, no window. The former
-    join-explode + row_number(partitionBy path_col) variant shuffled the
-    ENTIRE candidate wave by key even when robots was empty (verdict r05
-    "what's wrong" #3); an empty/irrelevant rules table now costs one empty
-    broadcast. Decision equivalence: the old window kept the longest
-    matching rule with allow winning ties, i.e. allowed ⇔ no matching rule
-    OR max(matching allow prefix len) ≥ max(matching disallow prefix len).
+    Shape (r06): the rules are ONE array row per host, broadcast, and the
+    longest-prefix decision is a pure map-side array expression over that
+    row — no shuffle, no window. The former join-explode +
+    row_number(partitionBy path_col) variant shuffled the ENTIRE candidate
+    wave by key even when robots was empty (verdict r05 "what's wrong" #3);
+    an empty/irrelevant rules table now costs one empty broadcast. Decision
+    equivalence: the old window kept the longest matching rule with allow
+    winning ties, i.e. allowed ⇔ no matching rule OR max(matching allow
+    prefix len) ≥ max(matching disallow prefix len).
 
-    Multiplicity: each candidate row meets at most one rules row (rules are
-    aggregated per host), so the gate neither multiplies nor collapses
-    rows — duplicate input rows pass or fail together and stay duplicated.
-    Callers that need unique keys dedup before the gate (``crawl_wave``
-    does)."""
+    Multiplicity: each candidate row meets at most one policy row (one per
+    host), so the gate neither multiplies nor collapses rows — duplicate
+    input rows pass or fail together and stay duplicated. Callers that need
+    unique keys dedup before the gate (``crawl_wave`` does)."""
+    if policy is None:
+        policy = host_policy(robots)
     path_expr = F.expr(f"substring({path_col}, length(host) + 1)")
-    rules_by_host = (
-        robots.filter(F.col("path_prefix").isNotNull())
-        .groupBy(F.col("host").alias("r_host"))
-        .agg(
-            F.collect_list(
-                F.struct(
-                    F.col("path_prefix").alias("p"),
-                    F.length("path_prefix").alias("n"),
-                    (F.col("rule_type") == "allow").alias("is_allow"),
-                )
-            ).alias("_rules")
-        )
-    )
+    rules_by_host = policy.select(F.col("host").alias("r_host"), "_rules")
     cand = candidates.withColumn("_path", path_expr)
     joined = cand.join(
         F.broadcast(rules_by_host), cand.host == rules_by_host.r_host, "left"
@@ -91,15 +113,12 @@ def robots_allowed(candidates: DataFrame, robots: DataFrame, path_col: str = "su
             F.lit(-1),
         )
 
+    # a delay-only host has an empty rule array: no match on either side
+    # (-1 ≥ -1), so it is allowed, like a host without a policy row
     allowed = F.col("_rules").isNull() | (
         _max_len(lambda r: r["is_allow"]) >= _max_len(lambda r: ~r["is_allow"])
     )
     return joined.filter(allowed).drop("_path", "r_host", "_rules")
-
-
-def host_crawl_delays(robots: DataFrame) -> DataFrame:
-    """(host, crawl_delay_ms) — max declared delay per host."""
-    return robots.groupBy("host").agg(F.max("crawl_delay_ms").alias("crawl_delay_ms"))
 
 
 def politeness_budget(
@@ -107,10 +126,12 @@ def politeness_budget(
     robots: DataFrame,
     host_budget: int = DEFAULT_HOST_BUDGET,
     wave_ms: int = WAVE_MS,
+    policy: DataFrame | None = None,
 ) -> DataFrame:
     """Keep the top-priority ≤ budget(host) candidates per host.
     budget(host) = min(host_budget, floor(wave_ms / crawl_delay_ms)) when a
-    delay is declared, else host_budget.
+    delay is declared, else host_budget. ``policy`` as in
+    ``robots_allowed``.
 
     Hot-host skew is absorbed by the partial ``WindowGroupLimit`` Spark
     plans below the ``hashpartitioning(host)`` exchange: each map
@@ -120,7 +141,9 @@ def politeness_budget(
     ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000); above
     it the plain per-host window still gives the same rows, without the
     pre-exchange cap."""
-    delays = host_crawl_delays(robots)
+    if policy is None:
+        policy = host_policy(robots)
+    delays = policy.select("host", "crawl_delay_ms")
     with_budget = candidates.join(F.broadcast(delays), "host", "left").withColumn(
         "host_budget",
         F.when(

@@ -14,7 +14,10 @@ The Bloom variant stores (partition_id, bitmap bytes) rows — persisted to
 parquet for resume (north_rule resumability). Candidates are probed in a
 cogrouped ``applyInPandas``: candidate rows hash to the same
 ``hash(surt_key) % P`` as the bitmaps, so each task probes exactly one
-bitmap.
+bitmap. A batch of new keys (a crawl wave, an ingest micro-batch) enters
+the filter the same way: ``add_to_bloom`` cogroups the keys with the prior
+bitmaps and ORs their bits in place — one Python-worker stage, where a
+build of the batch's own filter followed by ``merge_blooms`` is two.
 
 Neither mode deletes keys: a seen URL stays seen for the whole crawl.
 
@@ -80,6 +83,34 @@ def partition_of(col, num_partitions: int):
     return F.pmod(F.xxhash64(col), F.lit(num_partitions)).cast("int")
 
 
+def _set_bits(bitmap: np.ndarray, pdf: pd.DataFrame) -> None:
+    """OR the K_HASHES bits of every (_h1, _h2) row of ``pdf`` into
+    ``bitmap`` (writable uint8, power-of-two bit count) in place — the one
+    bit-setting step shared by ``build_bloom`` and ``add_to_bloom``."""
+    h1 = _uint64(pdf["_h1"])
+    h2 = _uint64(pdf["_h2"]) | np.uint64(1)  # odd stride covers 2^k bitmap
+    mask = np.uint64(len(bitmap) * 8 - 1)
+    for i in range(K_HASHES):
+        idx = (h1 + np.uint64(i) * h2) & mask
+        np.bitwise_or.at(bitmap, (idx >> np.uint64(3)).astype(np.int64),
+                         (1 << (idx & np.uint64(7))).astype(np.uint8))
+
+
+def _check_m_bits(m_bits: int | None) -> None:
+    if m_bits is not None and m_bits & (m_bits - 1):
+        raise ValueError("m_bits must be a power of two")
+
+
+def _hashed_keys(keys: DataFrame, key_col: str, num_partitions: int) -> DataFrame:
+    """(part_id, _h1, _h2) per key — all hashing JVM-side."""
+    h1, h2 = key_hash_cols(F.col(key_col))
+    return keys.select(
+        partition_of(F.col(key_col), num_partitions).alias("part_id"),
+        h1.alias("_h1"),
+        h2.alias("_h2"),
+    )
+
+
 def build_bloom(
     seen: DataFrame,
     key_col: str = "surt_key",
@@ -92,29 +123,19 @@ def build_bloom(
 
     ``m_bits`` (power of two) fixes the per-partition bitmap size —
     capacity-planned mode, required when filters from successive waves will
-    be OR-merged incrementally (``merge_blooms``)."""
-    if m_bits is not None and m_bits & (m_bits - 1):
-        raise ValueError("m_bits must be a power of two")
+    be OR-merged incrementally (``add_to_bloom``, ``merge_blooms``)."""
+    _check_m_bits(m_bits)
     fixed_bits = m_bits
-    h1, h2 = key_hash_cols(F.col(key_col))
-    keyed = seen.select(
-        partition_of(F.col(key_col), num_partitions).alias("part_id"),
-        h1.alias("_h1"),
-        h2.alias("_h2"),
-    ).repartition(num_partitions, "part_id")
+    keyed = _hashed_keys(seen, key_col, num_partitions).repartition(
+        num_partitions, "part_id"
+    )
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         part_id = int(pdf["part_id"].iloc[0]) if len(pdf) else 0
         n = max(len(pdf), 1)
         m_bits = fixed_bits or (1 << max(10, math.ceil(math.log2(n * bits_per_key))))
         bitmap = np.zeros(m_bits // 8, dtype=np.uint8)
-        h1 = _uint64(pdf["_h1"])
-        h2 = _uint64(pdf["_h2"]) | np.uint64(1)  # odd stride covers 2^k bitmap
-        mask = np.uint64(m_bits - 1)
-        for i in range(K_HASHES):
-            idx = (h1 + np.uint64(i) * h2) & mask
-            np.bitwise_or.at(bitmap, (idx >> np.uint64(3)).astype(np.int64),
-                             (1 << (idx & np.uint64(7))).astype(np.uint8))
+        _set_bits(bitmap, pdf)
         return pd.DataFrame(
             {"part_id": [part_id], "num_parts": [num_partitions],
              "n_keys": [len(pdf)], "bitmap": [bitmap.tobytes()]}
@@ -123,11 +144,74 @@ def build_bloom(
     return keyed.groupBy("part_id").applyInPandas(build, _BLOOM_SCHEMA)
 
 
+def add_to_bloom(
+    bloom: DataFrame | None,
+    keys: DataFrame,
+    key_col: str = "surt_key",
+    num_partitions: int = 32,
+    m_bits: int = 1 << 20,
+) -> DataFrame:
+    """The filter after adding ``keys``: one cogrouped pass that ORs each
+    key's bits straight into the prior bitmap of its partition. Output is
+    byte-identical to ``merge_blooms(bloom, build_bloom(keys, ...,
+    m_bits=m_bits))`` — same rows, bitmaps and ``n_keys`` — without the
+    intermediate per-wave filter and its second Python-worker stage.
+
+    A partition with keys but no prior bitmap starts from an empty one; a
+    prior bitmap with no new keys passes through. ``bloom=None`` (no filter
+    yet) is ``build_bloom``. The prior filter must have been built with
+    ``num_partitions`` partitions of ``m_bits`` bits each: either mismatch
+    raises, as in ``merge_blooms``."""
+    if bloom is None:
+        return build_bloom(keys, key_col=key_col, num_partitions=num_partitions,
+                           m_bits=m_bits)
+    _check_m_bits(m_bits)
+
+    def add(keys_pdf: pd.DataFrame, bloom_pdf: pd.DataFrame) -> pd.DataFrame:
+        if keys_pdf.empty:
+            return bloom_pdf
+        if bloom_pdf.empty:
+            prior_keys, bitmap = 0, np.zeros(m_bits // 8, dtype=np.uint8)
+        else:
+            built_parts = int(bloom_pdf["num_parts"].iloc[0])
+            if built_parts != num_partitions:
+                raise ValueError(
+                    f"bloom partition-count mismatch: {built_parts}"
+                    f" vs {num_partitions}"
+                )
+            bitmap = np.frombuffer(bloom_pdf["bitmap"].iloc[0], dtype=np.uint8).copy()
+            if len(bitmap) != m_bits // 8:
+                raise ValueError(
+                    f"bloom size mismatch: {len(bitmap)} vs {m_bits // 8} bytes — "
+                    "build both with a fixed m_bits"
+                )
+            prior_keys = int(bloom_pdf["n_keys"].iloc[0])
+        _set_bits(bitmap, keys_pdf)
+        return pd.DataFrame(
+            {"part_id": [int(keys_pdf["part_id"].iloc[0])],
+             "num_parts": [num_partitions],
+             "n_keys": [prior_keys + len(keys_pdf)], "bitmap": [bitmap.tobytes()]}
+        )
+
+    return (
+        _hashed_keys(keys, key_col, num_partitions)
+        .groupBy("part_id")
+        .cogroup(bloom.groupBy("part_id"))
+        .applyInPandas(add, _BLOOM_SCHEMA)
+    )
+
+
+def read_bloom(spark, path: str) -> DataFrame:
+    """A filter persisted with ``DataFrame.write.parquet``, read with the
+    filter's own schema (no schema-inference job)."""
+    return spark.read.schema(_BLOOM_SCHEMA).parquet(path)
+
+
 def merge_blooms(a: DataFrame, b: DataFrame) -> DataFrame:
-    """OR-merge two partitioned blooms of the SAME per-partition size —
-    incremental seen-set growth across crawl waves without rebuilding from
-    all keys. Cogrouped per part_id; a partition present on one side only
-    passes through."""
+    """OR-merge two partitioned blooms of the SAME per-partition size.
+    Cogrouped per part_id; a partition present on one side only passes
+    through. Growing a filter by a batch of keys is ``add_to_bloom`` (one
+    pass, same bytes as merging with ``build_bloom`` of the batch)."""
     def merge(a_pdf: pd.DataFrame, b_pdf: pd.DataFrame) -> pd.DataFrame:
         if a_pdf.empty:
             return b_pdf

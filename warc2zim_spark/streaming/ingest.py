@@ -15,7 +15,8 @@ Three cross-batch membership modes:
   O(total sink items) per micro-batch — O(n²) over a long ingest. The
   correctness mode.
 * ``dedup_mode="bloom"`` — the partitioned bloom from frontier/seenfilter
-  persisted next to the stream checkpoint and OR-merged per batch: probe
+  persisted next to the stream checkpoint; each batch's keys are ORed into
+  it in one pass (``add_to_bloom``): probe
   cost is O(batch) regardless of sink size — the 10^10-item mode. A bloom
   false positive drops a genuinely-new item (fpp budget set by
   ``bloom_m_bits``; 16 bits/key ≈ 0.05%) — the same tolerance class as the
@@ -166,13 +167,10 @@ def stream_items(
         return n_batches["n"]
 
     def process_batch(batch_df, batch_id: int) -> None:
-        from warc2zim_spark.frontier.seenfilter import (
-            build_bloom,
-            merge_blooms,
-            probe_bloom,
-        )
+        from warc2zim_spark.frontier.seenfilter import add_to_bloom, probe_bloom
 
         items = items_table(content_records(batch_df), include_domains)
+        bloom = None
         if dedup_mode == "exact":
             existing = _read_parquet_if_exists(spark, out_dir)
             if existing is not None:
@@ -189,18 +187,14 @@ def stream_items(
         items = items.localCheckpoint(eager=True)  # write + filter-update reuse
         items.write.mode("append").parquet(out_dir)
         if dedup_mode == "bloom":
-            batch_bloom = build_bloom(
-                items.select("zim_path"), key_col="zim_path",
+            # the batch's keys ORed into the prior filter in one pass
+            updated = add_to_bloom(
+                bloom, items.select("zim_path"), key_col="zim_path",
                 num_partitions=bloom_partitions, m_bits=bloom_m_bits,
             )
-            bloom = _read_parquet_if_exists(spark, bloom_path)
-            merged = (
-                merge_blooms(bloom, batch_bloom) if bloom is not None
-                else batch_bloom
-            )
             # materialize before overwriting the path being read
-            merged = merged.localCheckpoint(eager=True)
-            merged.write.mode("overwrite").parquet(bloom_path)
+            updated = updated.localCheckpoint(eager=True)
+            updated.write.mode("overwrite").parquet(bloom_path)
         n_batches["n"] += 1
 
     query = (
