@@ -1,4 +1,13 @@
+import os
+
 import pytest
+
+# The engine's 16g driver default is above physical memory on small hosts,
+# and G1 lets the session JVM grow toward it over a full run (past 13 GB RSS
+# by the CLI tests on a 15 GB host, whose subprocess then starts a second
+# JVM and the OOM killer ends the session). The fixtures fit in a few GB;
+# the CLI subprocesses inherit the bound.
+os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
 
 
 @pytest.fixture(scope="session")

@@ -183,12 +183,15 @@ class TestRunPipeline:
 
     def test_job_count_pinned(self, spark, webdata, tmp_path, count_jobs):
         """Each intermediate is derived once: one record pass, one redirect
-        fixpoint, one bounded main-page walk, payloads fetched by position.
-        A cold call on this fixture runs 61 Spark jobs (127 when the
-        fixpoint, the walk and the payload-carrying content stream were each
-        derived twice); any re-derivation pushes it over the ceiling. The
-        count covers the branch threads' jobs, which carry the caller's job
-        group like the calling thread's."""
+        fixpoint whose verdict reads its round-0 map, one bounded main-page
+        walk, one read and parse of the main page's record for both the
+        icons and the metadata, payloads fetched by position. A cold call on
+        this fixture runs 52 Spark jobs (61 while the favicon and metadata
+        paths each read the main page and the verdict re-joined the edge
+        graph; 127 when the fixpoint, the walk and the payload-carrying
+        content stream were each derived twice); any re-derivation pushes
+        it over the ceiling. The count covers the branch threads' jobs,
+        which carry the caller's job group like the calling thread's."""
         from warc2zim_spark.plans.pipeline import run_pipeline
 
         n_group, n_jobs = count_jobs(
@@ -199,7 +202,66 @@ class TestRunPipeline:
             ),
         )
         assert n_group == n_jobs
-        assert 0 < n_jobs <= 64, n_jobs
+        assert 0 < n_jobs <= 52, n_jobs
+
+    @pytest.mark.parametrize(
+        "option", ["default", "main_url", "favicon_url", "encoding_aliases"]
+    )
+    def test_metadata_sink_is_standalone_metadata(
+        self, spark, webdata, tmp_path, option
+    ):
+        """One code path: the metadata sink, less its Main-Path and
+        Counter-Items rows, equals a standalone ``zim_metadata`` call given
+        ``best_illustration``'s bytes (``illustration_from_url``'s under
+        --favicon; none when nothing is captured, as for the --url page),
+        under the same options."""
+        from warc2zim_spark.kernels.surt import canonicalize
+        from warc2zim_spark.operators.favicon import (
+            best_illustration,
+            illustration_from_url,
+        )
+        from warc2zim_spark.operators.gather import main_page
+        from warc2zim_spark.operators.metadata import zim_metadata
+        from warc2zim_spark.operators.quarantine import merged_options
+        from warc2zim_spark.operators.records import content_records, load_records
+        from warc2zim_spark.plans.pipeline import run_pipeline
+
+        main_url = "https://redir.example/main-start"
+        favicon_url = "https://site3.example/alt.ico"  # the fixture's 48px icon
+        aliases = {"bogus-enc": "utf-8"}
+        kwargs = {
+            "main_url": {"main_url": main_url},
+            "favicon_url": {"favicon_url": favicon_url},
+            "encoding_aliases": {"encoding_aliases": aliases},
+        }.get(option, {})
+        out = tmp_path / "out_one_path"
+        run_pipeline(
+            spark, webdata, str(out), name="n", continue_on_error=True, **kwargs
+        )
+        sink = sorted(
+            tuple(r)
+            for r in spark.read.parquet(str(out / "metadata")).collect()
+            if r.name not in ("Main-Path", "Counter-Items")
+        )
+
+        records = load_records(spark, webdata)
+        content = content_records(records).cache()
+        decode = merged_options(aliases, None) if option == "encoding_aliases" else None
+        start = (canonicalize(main_url), main_url) if option == "main_url" else None
+        if option == "favicon_url":
+            best = illustration_from_url(content, favicon_url, records=records)
+        else:
+            best = best_illustration(
+                content, main_page(content, start), decode_options=decode,
+                records=records,
+            )
+        illu = best.select("illustration").collect()
+        standalone = zim_metadata(
+            content, records, name="n", main=start, decode_options=decode,
+            illustration=bytes(illu[0].illustration) if illu else None,
+        )
+        assert sink == sorted(tuple(r) for r in standalone.collect())
+        content.unpersist()
 
     def test_favicon_override_with_fallback(self, spark, webdata, tmp_path):
         """--favicon pointing at a URL with no status-200 record: the

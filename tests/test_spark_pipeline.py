@@ -119,6 +119,94 @@ class TestRedirectFixpoint:
         assert "redir.example/http-to-https" not in verdict
 
 
+class TestRedirectFixpointProperty:
+    """The verdict tail reads the round-0 map's facts (source expected,
+    final expected); checked against the sequential reference on 200
+    seeded random edge maps in one distributed call (node names carry the
+    map id, so the maps never touch)."""
+
+    N_MAPS = 200
+
+    @staticmethod
+    def _edge_map(seed: int) -> tuple[dict[str, str], set[str]]:
+        import random
+
+        from warc2zim_spark.operators.redirects import MAX_CHAIN
+
+        rng = random.Random(seed)
+        nodes = [f"m{seed}/n{j}" for j in range(rng.randint(2, 12))]
+        edges: dict[str, str] = {}
+        for j, node in enumerate(nodes):
+            roll = rng.random()
+            if roll < 0.1:
+                edges[node] = node  # self-edge, passed in directly
+            elif roll < 0.3:
+                edges[node] = f"m{seed}/dangling{j}"
+            elif roll < 0.8:
+                edges[node] = rng.choice(nodes)  # chains, cycles
+        expected = {n for n in nodes if rng.random() < 0.3}  # some sources
+        if seed % 4 == 0:
+            # a chain around MAX_CHAIN hops, ending expected, dangling or
+            # looping back into itself
+            length = rng.randint(MAX_CHAIN - 2, MAX_CHAIN + 4)
+            chain = [f"m{seed}/c{j}" for j in range(length)]
+            edges.update(zip(chain, chain[1:]))
+            end = rng.choice(("expected", "dangling", "loop"))
+            if end == "expected":
+                expected.add(chain[-1])
+            elif end == "loop":
+                edges[chain[-1]] = chain[rng.randrange(len(chain) - 1)]
+        return edges, expected
+
+    @staticmethod
+    def _chain_end(edges, expected, src) -> tuple[str, int]:
+        """How ``src``'s chain ends ('expected', 'dangling', 'self',
+        'loop') and after how many hops."""
+        seen, node, hops = set(), src, 0
+        while node not in expected:
+            if node not in edges:
+                return "dangling", hops
+            if edges[node] == node:
+                return "self", hops
+            if node in seen:
+                return "loop", hops
+            seen.add(node)
+            node, hops = edges[node], hops + 1
+        return "expected", hops
+
+    def test_matches_sequential_reference_on_random_maps(self, spark):
+        from warc2zim_spark.operators.redirects import MAX_CHAIN
+
+        maps = [self._edge_map(seed) for seed in range(self.N_MAPS)]
+        edges_df = spark.createDataFrame(
+            [e for edges, _ in maps for e in edges.items()],
+            "src_path string, tgt_path string",
+        )
+        expected_df = spark.createDataFrame(
+            [(p,) for _, expected in maps for p in expected], "zim_path string"
+        )
+        got = {
+            r.src_path: (r.final_path, r.kept)
+            for r in resolve_fixpoint(edges_df, expected_df).collect()
+        }
+        assert set(got) == {src for edges, _ in maps for src in edges}
+        shapes = {"src_expected": 0, "long": 0}
+        for edges, expected in maps:
+            kept_seq, _ = sequential_redirect_fixpoint(edges, expected)
+            for src in edges:
+                end, hops = self._chain_end(edges, expected, src)
+                # the documented bound: chains longer than MAX_CHAIN drop
+                want = src in kept_seq and hops <= MAX_CHAIN
+                assert got[src][1] is want, (src, end, hops, edges, expected)
+                if want:
+                    assert got[src][0] in expected
+                shapes[end] = shapes.get(end, 0) + 1
+                shapes["src_expected"] += src in expected
+                shapes["long"] += end == "expected" and hops > MAX_CHAIN
+        # every shape the generator aims at actually occurs
+        assert len(shapes) == 6 and all(shapes.values()), shapes
+
+
 class TestPairing:
     def test_post_urlkey_matches_golden(self, content, golden_records):
         """Responses paired with adjacent POST requests get the synthesized

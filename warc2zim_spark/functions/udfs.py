@@ -60,23 +60,26 @@ def resolve_redirect_key(urls: pd.Series, locations: pd.Series) -> pd.Series:
     return pd.Series([resolve(u, l) for u, l in zip(urls, locations)])
 
 
-@pandas_udf(StringType())
-def resolve_url(base_urls: pd.Series, hrefs: pd.Series) -> pd.Series:
-    """urljoin(base, href) — C8 (absolute URL of an extracted link)."""
+def join_href(base: str | None, href: str | None) -> str | None:
+    """urljoin(base, href), None for fragments, script/data/mail links and
+    unparseable input — C8 (absolute URL of an extracted link)."""
     from urllib.parse import urljoin
 
-    def resolve(base, href):
-        if base is None or href is None:
-            return None
-        href = str(href).strip()
-        if href.startswith(("#", "javascript:", "data:", "mailto:")):
-            return None
-        try:
-            return urljoin(base, href)
-        except ValueError:
-            return None
+    if base is None or href is None:
+        return None
+    href = str(href).strip()
+    if href.startswith(("#", "javascript:", "data:", "mailto:")):
+        return None
+    try:
+        return urljoin(base, href)
+    except ValueError:
+        return None
 
-    return pd.Series([resolve(b, h) for b, h in zip(base_urls, hrefs)])
+
+@pandas_udf(StringType())
+def resolve_url(base_urls: pd.Series, hrefs: pd.Series) -> pd.Series:
+    """``join_href`` over a batch."""
+    return pd.Series([join_href(b, h) for b, h in zip(base_urls, hrefs)])
 
 
 @pandas_udf(StringType())
@@ -99,43 +102,19 @@ def canonical_post_url(
     return pd.Series(out)
 
 
-def make_decode_payload_udf(options: "_decode.DecodeOptions | None" = None):
-    """3-tier charset decode UDF factory — C2 (kernels/decode.py); None on
-    failure (S10 quarantine semantics). ``mode``='html' enables the
-    content-declaration tier (rewriting.py:98-99). ``options`` carries the
-    decode-tuning CLI surface (main.py:113-158) so the SAME knobs that
-    drive the quarantine probe drive every actual decode — a rescued or
-    re-tuned record must decode the way the probe predicted."""
-    opts = options if options is not None else _decode.DecodeOptions()
-
-    @pandas_udf(StringType())
-    def decode_payload(
-        payloads: pd.Series, http_charsets: pd.Series, modes: pd.Series
-    ) -> pd.Series:
-        out = []
-        for payload, charset, mode in zip(payloads, http_charsets, modes):
-            if payload is None:
-                out.append(None)
-                continue
-            out.append(
-                _decode.to_string_or_none(
-                    bytes(payload),
-                    charset if charset is not None else None,
-                    opts.try_list(),
-                    opts.header_bytes,
-                    ignore_content_header_charsets=(
-                        mode != "html" or opts.ignore_content_header_charsets
-                    ),
-                    ignore_http_header_charsets=opts.ignore_http_header_charsets,
-                    extra_aliases=opts.extra_aliases,
-                )
-            )
-        return pd.Series(out)
-
-    return decode_payload
-
-
-decode_payload = make_decode_payload_udf()
+@pandas_udf(StringType())
+def decode_payload(
+    payloads: pd.Series, http_charsets: pd.Series, modes: pd.Series
+) -> pd.Series:
+    """3-tier charset decode — C2 (kernels/decode.py) under the default
+    options; None on failure (S10 quarantine semantics). ``mode``='html'
+    enables the content-declaration tier (rewriting.py:98-99). A decode
+    under a run's tuning options (main.py:113-158) calls
+    ``DecodeOptions.decode``, this same per-row path."""
+    opts = _decode.DecodeOptions()
+    return pd.Series(
+        [opts.decode(p, c, m) for p, c, m in zip(payloads, http_charsets, modes)]
+    )
 
 
 @pandas_udf(StringType())
@@ -172,17 +151,7 @@ def _decode_html_bytes(payload, opts: "_decode.DecodeOptions") -> str | None:
     """Exactly decode_payload's per-row path for mode='html' — shared by the
     fused bytes-in UDFs below so their decode tier is bit-identical to the
     standalone decode_payload(col, NULL, 'html') chain they replace."""
-    if payload is None:
-        return None
-    return _decode.to_string_or_none(
-        bytes(payload),
-        None,
-        opts.try_list(),
-        opts.header_bytes,
-        ignore_content_header_charsets=opts.ignore_content_header_charsets,
-        ignore_http_header_charsets=opts.ignore_http_header_charsets,
-        extra_aliases=opts.extra_aliases,
-    )
+    return opts.decode(payload, None, "html")
 
 
 @pandas_udf(StringType())
@@ -222,16 +191,6 @@ def extract_js_import_targets(contents: pd.Series, base_urls: pd.Series) -> pd.S
                     keys.append(t)
         out.append(sorted(keys))
     return pd.Series(out)
-
-
-@pandas_udf(StringType())
-def parse_language_codes(lang_decls: pd.Series) -> pd.Series:
-    """A8 — declared language value(s) → deduped ISO-639-3 list string
-    (kernels/language.parse_language); null in → null out so the metadata
-    cascade's coalesce can fall through to 'eng'."""
-    from warc2zim_spark.kernels.language import parse_language
-
-    return lang_decls.map(parse_language, na_action="ignore")
 
 
 @pandas_udf(ArrayType(StringType()))

@@ -68,6 +68,26 @@ class DecodeOptions:
     def try_list(self) -> list[str] | None:
         return None if self.charsets_to_try is None else list(self.charsets_to_try)
 
+    def decode(
+        self, payload, http_charset: str | None = None, mode: str = "html"
+    ) -> str | None:
+        """``to_string_or_none`` under these options — the one decode every
+        UDF and driver-side read shares; ``mode``='html' enables the
+        content-declaration tier (rewriting.py:98-99)."""
+        if payload is None:
+            return None
+        return to_string_or_none(
+            bytes(payload),
+            http_charset,
+            self.try_list(),
+            self.header_bytes,
+            ignore_content_header_charsets=(
+                mode != "html" or self.ignore_content_header_charsets
+            ),
+            ignore_http_header_charsets=self.ignore_http_header_charsets,
+            extra_aliases=self.extra_aliases,
+        )
+
 
 def resolve_encoding_alias(alias: str, extra: dict[str, str] | None = None) -> str:
     """Alias → codec name; ``extra`` is the per-run user table

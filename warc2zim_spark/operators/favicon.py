@@ -10,14 +10,17 @@ ZIM_ILLUSTRATION_SIZE), icons sort by the A9 comparator, and the first one
 that converts to a 48×48 PNG becomes the ZIM illustration, else the default
 transparent fallback.
 
-Spark shape: candidates are a ~5-row frame (one main page) — they broadcast
-into a join against the narrow content stream (J3's capture join; the stream
-is never collected), which yields record positions; the few payloads are then
+Spark shape: the main page's one record is read, decoded and parsed on the
+driver (``gather.main_page_meta``, shared with the metadata cascade); its
+few icon candidates become literals — an IN filter plus a path → urls map
+over the narrow content stream (J3's capture; the stream is never
+collected) — which yields record positions; the few payloads are then
 fetched from the raw records by (file_seq, rec_seq)
 (``records.fetch_payloads``); dimension sniffing is a pandas UDF over the few
 captured payloads using the stdlib header parser (kernels/imagemeta — REAL
 dimensions, not a stub); ranking is the same Catalyst expression the
-w_icon_rank query pins.
+w_icon_rank query pins. Capture, sizing, ranking and conversion are one
+action.
 
 Deviations, documented:
 * position-free capture (the reference only captures records AFTER the main
@@ -33,8 +36,10 @@ Deviations, documented:
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -62,77 +67,56 @@ def _image_dims(payloads: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"fmt": fmts, "width": ws, "height": hs})
 
 
-def favicon_candidates(
-    content: DataFrame, main: DataFrame, decode_options=None,
-    records: DataFrame | None = None,
-) -> DataFrame:
-    """(icon_url, icon_path) — the main page's declared icons resolved
-    absolute + canonicalized, fallback /favicon.ico (converter.py:716-733).
-    ``main``: 1-row (zim_path, url). Output is a tiny frame.
-    ``decode_options`` tunes the main-page HTML decode the icon scan reads
-    (same knobs as the quarantine probe — main.py:113-158).
-    ``content``: the record stream, payload-free is enough; the main page's
-    payload is fetched by position from ``records`` (default: ``content``,
-    when that stream carries ``payload``)."""
-    mp = main.limit(1).select(F.col("zim_path").alias("mp_path"),
-                              F.col("url").alias("mp_url"))
-    mp_pos = (
-        content.join(
-            F.broadcast(mp), F.col("zim_path") == F.col("mp_path"), "inner"
-        )
-        .filter(F.col("rec_type") == "response")
-        .orderBy("file_seq", "rec_seq")
-        .limit(1)
-        .select("file_seq", "rec_seq", "mp_url")
-    )
-    mp_record = fetch_payloads(records if records is not None else content, mp_pos)
-    decode_udf = (
-        udfs.decode_payload if decode_options is None
-        else udfs.make_decode_payload_udf(decode_options)
-    )
-    html_str = decode_udf(
-        F.col("payload"), F.col("http_charset"), F.lit("html")
-    )
-    icons = mp_record.select(
-        "mp_url",
-        F.explode(
-            F.when(
-                F.size(udfs.extract_meta(html_str)["icons"]) > 0,
-                udfs.extract_meta(html_str)["icons"],
-            ).otherwise(F.array(F.lit("/favicon.ico")))
-        ).alias("href"),
-    )
-    return (
-        icons.withColumn("icon_url", udfs.resolve_url(F.col("mp_url"), F.col("href")))
-        .filter(F.col("icon_url").isNotNull())
-        .filter(F.col("icon_url").rlike("^https?://"))
-        .withColumn("icon_path", udfs.surt_key(F.col("icon_url")))
-        .filter(F.col("icon_path").isNotNull())
-        .select("icon_url", "icon_path")
-        .distinct()
-    )
+def favicon_candidates(page_url: str, icons: list[str]) -> list[tuple[str, str]]:
+    """[(icon_url, icon_path)] — the main page's declared icons (its
+    ``main_page_meta`` ``icons``), fallback /favicon.ico, resolved absolute
+    against ``page_url`` and canonicalized (converter.py:716-733), distinct,
+    in document order. The same rules as ``udfs.resolve_url`` then
+    ``udfs.surt_key``: only http(s) URLs with a canonical path stay."""
+    from warc2zim_spark.kernels.surt import canonicalize
+
+    out: list[tuple[str, str]] = []
+    for href in icons or ["/favicon.ico"]:
+        icon_url = udfs.join_href(page_url, href)
+        if icon_url is None or not re.match(r"https?://", icon_url):
+            continue
+        icon_path = canonicalize(icon_url)
+        if icon_path is not None and (icon_url, icon_path) not in out:
+            out.append((icon_url, icon_path))
+    return out
 
 
 def favicon_payloads(
-    content: DataFrame, candidates: DataFrame, records: DataFrame | None = None
+    content: DataFrame,
+    candidates: list[tuple[str, str]],
+    records: DataFrame | None = None,
 ) -> DataFrame:
-    """J3's capture join: status-200 response payloads at candidate paths
-    (converter.py:548-556). The tiny candidate frame broadcasts; the content
-    stream streams through the hash join unshuffled. Last record per path
-    wins (dict-overwrite). The winners' payloads are fetched by position
-    from ``records`` (default: ``content``, as in ``favicon_candidates``)."""
+    """J3's capture join: status-200 response payloads at the candidate
+    paths (converter.py:548-556). The few candidates are literals — an IN
+    filter on the content stream plus a path → urls map — so no candidate
+    frame is built or broadcast. Last record per path wins (dict-overwrite).
+    The winners' payloads are fetched by position from ``records``
+    (default: ``content``, when that stream carries ``payload``)."""
+    urls_of: dict[str, list[str]] = {}
+    for icon_url, icon_path in candidates:
+        urls_of.setdefault(icon_path, []).append(icon_url)
+    if not urls_of:
+        return content.sparkSession.createDataFrame(
+            [], "icon_url string, icon_path string, payload binary"
+        )
+    url_map = F.create_map(
+        *[c for p, us in urls_of.items() for c in (F.lit(p), F.array(*map(F.lit, us)))]
+    )
     hits = (
         content.filter(F.col("rec_type") == "response")
         .filter(F.col("status") == 200)
-        .join(
-            F.broadcast(candidates),
-            F.col("zim_path") == F.col("icon_path"),
-            "inner",
+        .filter(F.col("zim_path").isin(list(urls_of)))
+        .select(
+            F.explode(url_map[F.col("zim_path")]).alias("icon_url"),
+            F.col("zim_path").alias("icon_path"),
+            "file_seq", "rec_seq",
         )
-        .select("icon_url", "icon_path", "file_seq", "rec_seq")
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("icon_path").orderBy(
         F.desc("file_seq"), F.desc("rec_seq")
     )
@@ -158,8 +142,6 @@ def ranked_icons(captured: DataFrame) -> DataFrame:
         m > ZIM_ILLUSTRATION_SIZE, F.lit(1)
     ).otherwise(F.lit(0))
     within = F.when(m == ZIM_ILLUSTRATION_SIZE, F.lit(0)).otherwise(m)
-    from pyspark.sql import Window
-
     w = Window.orderBy(F.desc("tier"), F.desc("within"), F.asc("icon_url"))
     return (
         sized.withColumn("tier", tier)
@@ -187,10 +169,16 @@ def _to_illustration(payloads: pd.Series, fmts: pd.Series, widths: pd.Series,
     return pd.Series(out)
 
 
-def _best_of(captured: DataFrame) -> DataFrame:
-    """Rank-1 capture → 1-row (icon_url, fmt, width, height, illustration)."""
+def best_capture(
+    content: DataFrame,
+    candidates: list[tuple[str, str]],
+    records: DataFrame | None = None,
+) -> DataFrame:
+    """The rank-1 capture among ``candidates`` (``favicon_payloads``) →
+    1-row (icon_url, fmt, width, height, illustration); 0 rows when none is
+    captured or parses."""
     return (
-        ranked_icons(captured)
+        ranked_icons(favicon_payloads(content, candidates, records))
         .filter(F.col("pref_rank") == 1)
         .select(
             "icon_url", "fmt", "width", "height",
@@ -211,25 +199,29 @@ def illustration_from_url(
     ``favicon_payloads``."""
     from warc2zim_spark.kernels.surt import canonicalize
 
-    spark = content.sparkSession
     icon_path = canonicalize(icon_url)
     if icon_path is None:
         raise ValueError(f"favicon url does not canonicalize: {icon_url!r}")
-    cand = spark.createDataFrame(
-        [(icon_url, icon_path)], "icon_url string, icon_path string"
-    )
-    return _best_of(favicon_payloads(content, cand, records))
+    return best_capture(content, [(icon_url, icon_path)], records)
 
 
 def best_illustration(
-    content: DataFrame, main: DataFrame, decode_options=None,
+    content: DataFrame, main: DataFrame | tuple[str, str], decode_options=None,
     records: DataFrame | None = None,
 ) -> DataFrame:
     """1-row (icon_url, fmt, width, height, illustration) — or 0 rows when
     no candidate parses (caller falls back to the default transparent PNG,
-    converter.py:920-924). ``records``: the payload-bearing raw records the
-    main page and icon payloads are fetched from by position, so
+    converter.py:920-924). ``main``: the main page as a (zim_path, url)
+    tuple, or a frame whose first such row is collected; its record is read
+    by ``main_page_meta`` (``decode_options`` tune that decode) and its
+    icons become the candidates. ``records``: the payload-bearing raw
+    records the main page and icon payloads are fetched from by position, so
     ``content`` may be the cached narrow stream; without it ``content``
     itself must carry ``payload``."""
-    candidates = favicon_candidates(content, main, decode_options, records)
-    return _best_of(favicon_payloads(content, candidates, records))
+    from warc2zim_spark.operators.gather import main_page_meta, page_pair
+
+    main = page_pair(main)
+    records = records if records is not None else content
+    page = main_page_meta(content, records, main[0], decode_options) if main else None
+    candidates = favicon_candidates(main[1], page["icons"]) if page else []
+    return best_capture(content, candidates, records)

@@ -1,9 +1,11 @@
 """Pass-1 aggregates (the reference's gather pass, converter.py:480-714).
 
-All pure DataFrame aggregations over the narrow (payload-free) projection:
+Pure DataFrame aggregations over the narrow (payload-free) projection —
 A1 date range, A3 expected/seen set, A4 main-page selection, A5 warcinfo
-software. Pass-1's product — the expected-item set — feeds both the redirect
-fixpoint (operators/redirects.py) and the URL-rewriting seen-filter
+software — plus the driver-side main-page steps: the J5 redirect walk and
+the one read of the main page's record (``main_page_meta``). Pass-1's
+product — the expected-item set — feeds both the redirect fixpoint
+(operators/redirects.py) and the URL-rewriting seen-filter
 (frontier/seenfilter.py holds the at-scale bloom variant).
 """
 
@@ -56,19 +58,30 @@ def main_page_candidate(content: DataFrame) -> DataFrame:
     )
 
 
-def main_page_resolved(
-    content: DataFrame, main: DataFrame | None = None
-) -> DataFrame:
-    """J5 — main-page redirect follow (converter.py:586-606): when the record
-    at the main path answers 301/302/307, re-point the main path to
-    ``normalize(urljoin(record_url, Location))`` and repeat until the path's
-    record is not a redirect.
+def page_pair(main: DataFrame | tuple[str, str]) -> tuple[str, str] | None:
+    """A page given as a (zim_path, url) tuple, or as a frame whose first
+    (zim_path, url) row is collected (None when it is empty)."""
+    if not isinstance(main, DataFrame):
+        return main
+    rows = main.select("zim_path", "url").limit(1).collect()
+    return tuple(rows[0]) if rows else None
 
-    ``main``: optional 1-row (zim_path, url, ...) override standing in for
-    the reference's ``--url`` flag; defaults to A4 auto-selection (which
-    picks a status-200 record, so the follow only fires when the same path
-    ALSO carries an earlier first-wins redirect record, or when a caller
-    supplies the path explicitly).
+
+def main_page(
+    content: DataFrame, main: DataFrame | tuple[str, str] | None = None
+) -> tuple[str, str] | None:
+    """A4 + J5 — the main page as a (zim_path, url) tuple, after the
+    main-page redirect follow (converter.py:586-606): when the record at the
+    main path answers 301/302/307, re-point the main path to
+    ``normalize(urljoin(record_url, Location))`` and repeat until the path's
+    record is not a redirect. ``url`` stays the starting page's.
+
+    ``main``: the starting page — a (zim_path, url) tuple standing in for
+    the reference's ``--url`` flag, or a frame whose first (zim_path, url)
+    row is collected; defaults to A4 auto-selection (which picks a
+    status-200 record, so the follow only fires when the same path ALSO
+    carries an earlier first-wins redirect record, or when a caller supplies
+    the path explicitly). None when there is no starting page.
 
     Shape: a bounded single-row walk on the driver — one filtered lookup of
     the {301,302,307} first-wins edge map per hop (``redirect_target``), at
@@ -77,19 +90,13 @@ def main_page_resolved(
     on f^MAX_CHAIN(main), f the first-wins edge step (absorbing at a path
     with no edge) — the node 5 pointer-doubling rounds reach; on a cycle it
     is read off the visited list instead of walked. ``content`` should be
-    cached — each hop scans it.
-    Output: a local 1-row (zim_path, url) frame with zim_path re-pointed when
-    a chain applies; 0 rows when ``main`` is empty."""
+    cached — each hop scans it."""
     from warc2zim_spark.operators.redirects import MAX_CHAIN, redirect_target
 
+    main = page_pair(main if main is not None else main_page_candidate(content))
     if main is None:
-        main = main_page_candidate(content)
-    schema = "zim_path string, url string"
-    spark = content.sparkSession
-    rows = main.select("zim_path", "url").limit(1).collect()
-    if not rows:
-        return spark.createDataFrame([], schema)
-    path, url = rows[0]
+        return None
+    path, url = main
     j5 = lambda s: s.isin(list(MAIN_PAGE_REDIRECT_STATUSES))  # noqa: E731
     walk = [path]  # walk[i] = f^i(main)
     while len(walk) <= MAX_CHAIN:
@@ -103,7 +110,48 @@ def main_page_resolved(
             walk.append(walk[mu + (MAX_CHAIN - mu) % (len(walk) - mu)])
             break
         walk.append(nxt)
-    return spark.createDataFrame([(walk[-1], url)], schema)
+    return walk[-1], url
+
+
+def main_page_resolved(
+    content: DataFrame, main: DataFrame | tuple[str, str] | None = None
+) -> DataFrame:
+    """``main_page`` as a local 1-row (zim_path, url) frame, 0 rows when
+    there is no starting page — for callers that join or union it. The
+    frame is RDD-backed: every read of it runs a job, so a caller that only
+    needs the values takes ``main_page``'s tuple instead."""
+    resolved = main_page(content, main)
+    return content.sparkSession.createDataFrame(
+        [resolved] if resolved else [], "zim_path string, url string"
+    )
+
+
+def main_page_meta(
+    content: DataFrame, records: DataFrame, zim_path: str, decode_options=None
+) -> dict | None:
+    """The main page's head — ``kernels.htmlmeta.extract_meta``'s dict
+    (title, lang_decl, icons, ...) — or None when no response record sits at
+    ``zim_path``. The one record the favicon discovery and the metadata
+    cascade both read: located on the narrow ``content`` stream (first
+    response in stream order), its (payload, http_charset) fetched from
+    ``records`` by position in one action, then decoded (html mode, the run's
+    ``decode_options``) and parsed once on the driver."""
+    from warc2zim_spark.kernels.decode import DecodeOptions
+    from warc2zim_spark.kernels.htmlmeta import extract_meta
+    from warc2zim_spark.operators.records import ORDER_COLS, fetch_payloads
+
+    pos = (
+        content.filter(F.col("zim_path") == zim_path)
+        .filter(F.col("rec_type") == "response")
+        .orderBy(*ORDER_COLS)
+        .limit(1)
+        .select(*ORDER_COLS)
+    )
+    rows = fetch_payloads(records, pos).select("payload", "http_charset").collect()
+    if not rows:
+        return None
+    opts = decode_options if decode_options is not None else DecodeOptions()
+    return extract_meta(opts.decode(rows[0].payload, rows[0].http_charset, "html"))
 
 
 def warcinfo_software(records: DataFrame) -> DataFrame:

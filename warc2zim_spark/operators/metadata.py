@@ -7,10 +7,13 @@ any work (converter.py:279-294), and unions the zimscraperlib static .js
 assets (wombat et al.) and an optional custom.css into the item stream as
 ``_zim_static/*`` paths (items.py:65-107).
 
-Spark shape: every derived entry is a 1-row aggregate (date range, warcinfo
-software, main-page title/lang) — they crossJoin into one row and unpivot to
-(name, value) with ``stack``; nothing wide is collected. Static assets are a
-constant-literal frame unioned into the items sink.
+Spark shape: the main page's title/lang come from its one record, read and
+parsed on the driver (``gather.main_page_meta``, the read the favicon
+discovery shares) and entered as literals; the other derived entries are
+one 1-row aggregate (the date range crossJoined with the warcinfo software)
+that unpivots to (name, value) with ``stack`` — one job collects the rows,
+nothing wide is collected. Static assets are a constant-literal frame
+unioned into the items sink.
 
 Environment seam: zimscraperlib's actual wombat.js bytes and image codecs are
 unavailable here, so asset CONTENT is a deterministic stand-in and the
@@ -26,10 +29,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from warc2zim_spark import __version__
+from warc2zim_spark.kernels.htmlmeta import truncated_title
 from warc2zim_spark.kernels.language import parse_language
 from warc2zim_spark.operators.gather import (
     date_range,
-    main_page_candidate,
+    main_page,
+    main_page_meta,
     warcinfo_software,
 )
 
@@ -150,8 +155,8 @@ def zim_metadata(
     scraper_suffix: str | None = None,
     date: str | None = None,
     illustration: bytes | None = None,
-    main: DataFrame | None = None,
-    main_path: str | None = None,
+    main: DataFrame | tuple[str, str] | None = None,
+    main_head: tuple[str | None, str | None] | None = None,
     validate: bool = True,
     decode_options=None,
 ) -> DataFrame:
@@ -170,105 +175,45 @@ def zim_metadata(
                  comma-joined, empties dropped (converter.py:366-377)
       X-ContentDate = warc_start or 'start,end' (converter.py:381-394)
 
-    All derived pieces are 1-row aggregates crossJoined then unpivoted with
-    stack() — nothing wide is collected, no wide shuffle. ``validate=False`` is the
-    reference's ``--disable-metadata-checks`` (main.py:105-111,
-    converter.py:279).
+    The main page's title and lang come from its one parsed record
+    (``main_page_meta``); everything else is a literal or a column of ONE
+    1-row aggregate (the date range crossJoined with the warcinfo software),
+    unpivoted with stack() — nothing wide is collected, no wide shuffle.
+    ``validate=False`` is the reference's ``--disable-metadata-checks``
+    (main.py:105-111, converter.py:279).
 
-    ``main``: the main page before the J5 redirect follow (default: A4
-    auto-selection), walked here with ``main_page_resolved``; ``main_path``:
-    the already-followed main path, for a caller that resolved it once —
-    skips the walk (``main`` is then ignored)."""
+    ``main``: the main page before the J5 redirect follow (a (zim_path, url)
+    tuple or a frame; default: A4 auto-selection), walked here with
+    ``main_page``; ``main_head``: the main page's (title, lang_decl), for a
+    caller that already read it — skips the walk and the read (``main`` is
+    then ignored)."""
     if validate:
         validate_metadata(
             title=title, description=description,
             long_description=long_description, language=language, tags=tags,
         )
 
-    from warc2zim_spark.functions import udfs
-    from warc2zim_spark.operators.gather import main_page_resolved
-    from warc2zim_spark.operators.records import fetch_payloads
-
-    if main_path is None:
-        mp = main_page_resolved(content, main).collect()
-        main_path = mp[0].zim_path if mp else None
-    # fetch the main page record's payload for title/lang extraction: the
-    # content stream is payload-free by design (column pruning), so locate
-    # the record's (file_seq, rec_seq) there and fetch its payload by
-    # position — never re-deriving the stream with payload
-    mp_pos = (
-        content.filter(F.col("zim_path") == F.lit(main_path))
-        .filter(F.col("rec_type") == "response")
-        .orderBy("file_seq", "rec_seq")
-        .limit(1)
-        .select("file_seq", "rec_seq")
-    )
-    mp_meta = (
-        fetch_payloads(records, mp_pos)
-        .select(
-            udfs.extract_meta(
-                (
-                    udfs.decode_payload
-                    if decode_options is None
-                    else udfs.make_decode_payload_udf(decode_options)
-                )(F.col("payload"), F.col("http_charset"), F.lit("html"))
-            ).alias("m")
+    if main_head is None:
+        resolved = main_page(content, main)
+        page = (
+            main_page_meta(content, records, resolved[0], decode_options)
+            if resolved else None
         )
-        .select(
-            F.col("m.title").alias("mp_title"),
-            F.col("m.lang_decl").alias("mp_lang_decl"),
-        )
-    )
+        main_head = (page["title"], page["lang_decl"]) if page else (None, None)
+    mp_title, mp_lang_decl = main_head
 
-    dates = date_range(content)
-    spark = dates.sparkSession
+    # the warcinfo record is optional per the WARC spec: the aggregate keeps
+    # the software frame at exactly one row (NULL without one), so the
+    # crossJoin can never empty the metadata frame
+    software = warcinfo_software(records).agg(F.min("software").alias("software"))
+    one = date_range(content).crossJoin(software)
 
-    # EXACTLY-1-row frames before the crossJoin of singletons. Two traps:
-    # (a) warcinfo records are optional per the WARC spec — a 0-row software
-    #     frame would crossJoin the whole metadata frame to empty; union a
-    #     null fallback row so the frame is never empty.
-    # (b) union + limit(1) without an order is not a guaranteed-deterministic
-    #     choice (AQE/repartition could pick the fallback) — an explicit
-    #     priority column + orderBy pins the real row over the fallback.
-    def _one_row(df: DataFrame, fallback_row, schema: str) -> DataFrame:
-        return (
-            df.withColumn("_prio", F.lit(0))
-            .unionByName(
-                spark.createDataFrame([fallback_row], schema).withColumn(
-                    "_prio", F.lit(1)
-                )
-            )
-            .orderBy("_prio")
-            .limit(1)
-            .drop("_prio")
-        )
-
-    software = _one_row(
-        warcinfo_software(records), (None,), "software string"
+    page_title = truncated_title(
+        title if title is not None else (mp_title or "Untitled"),
+        RECOMMENDED_MAX_TITLE_LENGTH,
     )
-    mp_meta = _one_row(
-        mp_meta, (None, None), "mp_title string, mp_lang_decl string"
-    )
-    one = dates.crossJoin(software).crossJoin(mp_meta)
-
-    title_expr = F.coalesce(
-        F.lit(title),
-        F.nullif(F.col("mp_title"), F.lit("")),
-        F.lit("Untitled"),
-    )
-    title_expr = F.when(
-        F.length(title_expr) > RECOMMENDED_MAX_TITLE_LENGTH,
-        F.concat(F.substring(title_expr, 1, RECOMMENDED_MAX_TITLE_LENGTH - 1),
-                 F.lit("…")),
-    ).otherwise(title_expr)
-
-    language_expr = (
-        F.lit(parse_language(language))
-        if language is not None
-        else F.coalesce(
-            udfs.parse_language_codes(F.col("mp_lang_decl")), F.lit("eng")
-        )
-    )
+    # parse_language falls back to 'eng' on a missing or unknown value
+    page_language = parse_language(language if language is not None else mp_lang_decl)
 
     date_expr = (
         F.lit(date) if date is not None
@@ -302,8 +247,8 @@ def zim_metadata(
 
     pairs: list = [
         (F.lit("Name"), F.lit(name)),
-        (F.lit("Language"), language_expr),
-        (F.lit("Title"), title_expr),
+        (F.lit("Language"), F.lit(page_language)),
+        (F.lit("Title"), F.lit(page_title)),
         (F.lit("Description"), F.lit(description)),
         (F.lit("Creator"), F.lit(creator)),
         (F.lit("Publisher"), F.lit(publisher)),

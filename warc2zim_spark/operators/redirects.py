@@ -107,32 +107,39 @@ def resolve_fixpoint(edges: DataFrame, expected: DataFrame) -> DataFrame:
       kept=false when the chain loops / exceeds MAX_CHAIN (final still movable)
       kept=true  when the chain's final node is expected
       kept=false otherwise (dangling final target)
-    """
-    expected = expected.select(F.col("zim_path").alias("exp_path")).distinct()
-    exp_marked = expected.withColumn("is_exp", F.lit(True))
 
+    The round-0 map f is the only join of nodes, expected set and edges; it
+    carries each node's facts (``is_exp``, ``is_src``), and the verdict
+    reads them back from it: the source's own through the doubling rounds,
+    the final node's by one join of the last round onto round 0. A final
+    node that is still movable (round-0 ``next != node``) is never expected
+    — expected nodes are absorbing — so kept ⇔ ¬src expected ∧ final
+    expected covers the loop and overlong-chain drops."""
+    exp = expected.select(
+        F.col("zim_path").alias("node"), F.lit(True).alias("is_exp")
+    ).distinct()
+    out_edge = edges.select(F.col("src_path").alias("node"), "tgt_path")
     # node universe: every chain node is an edge src or an edge tgt
     nodes = (
         edges.select(F.col("src_path").alias("node"))
         .union(edges.select(F.col("tgt_path").alias("node")))
         .distinct()
     )
-    mapping = (
-        nodes.join(exp_marked, nodes.node == exp_marked.exp_path, "left")
-        .join(
-            edges.select(F.col("src_path").alias("e_src"), "tgt_path"),
-            F.col("node") == F.col("e_src"),
-            "left",
-        )
+    round0 = (
+        nodes.join(exp, "node", "left")
+        .join(out_edge, "node", "left")
         .select(
             "node",
             F.when(F.col("is_exp").isNotNull(), F.col("node"))
             .when(F.col("tgt_path").isNotNull(), F.col("tgt_path"))
             .otherwise(F.col("node"))
             .alias("next"),
+            F.col("is_exp").isNotNull().alias("is_exp"),
+            F.col("tgt_path").isNotNull().alias("is_src"),
         )
         .localCheckpoint(eager=False)
     )
+    mapping = round0
     rounds = max(1, math.ceil(math.log2(MAX_CHAIN)))
     for _ in range(rounds):
         hop2 = mapping.select(
@@ -143,49 +150,21 @@ def resolve_fixpoint(edges: DataFrame, expected: DataFrame) -> DataFrame:
             .select(
                 "node",
                 F.coalesce(F.col("j_next"), F.col("next")).alias("next"),
+                "is_exp",
+                "is_src",
             )
             .localCheckpoint(eager=False)
         )
-    final_of = mapping.select(
-        F.col("node").alias("f_node"), F.col("next").alias("final_path")
-    )
-    # movable(final) ⇔ f(final) != final ⇔ chain still in a cycle after 2^K steps
-    step1 = (
-        nodes.join(exp_marked, nodes.node == exp_marked.exp_path, "left")
-        .join(
-            edges.select(F.col("src_path").alias("e_src"), "tgt_path"),
-            F.col("node") == F.col("e_src"),
-            "left",
-        )
-        .select(
-            F.col("node").alias("m_node"),
-            (
-                F.col("is_exp").isNull()
-                & F.col("tgt_path").isNotNull()
-                & (F.col("tgt_path") != F.col("node"))
-            ).alias("movable"),
-        )
+    final_exp = round0.select(
+        F.col("node").alias("f_node"), F.col("is_exp").alias("final_exp")
     )
     return (
-        edges.join(exp_marked, edges.src_path == exp_marked.exp_path, "left")
-        .withColumn("src_expected", F.col("is_exp").isNotNull())
-        .select("src_path", "src_expected")
-        .join(final_of, F.col("src_path") == F.col("f_node"), "left")
-        .join(step1, F.col("final_path") == F.col("m_node"), "left")
-        .withColumn("looped", F.coalesce(F.col("movable"), F.lit(False)))
-        .join(
-            exp_marked.select(F.col("exp_path").alias("fin_exp")),
-            F.col("final_path") == F.col("fin_exp"),
-            "left",
-        )
+        mapping.filter(F.col("is_src"))
+        .join(final_exp, F.col("next") == F.col("f_node"))
         .select(
-            "src_path",
-            "final_path",
-            (
-                ~F.col("src_expected")
-                & ~F.col("looped")
-                & F.col("fin_exp").isNotNull()
-            ).alias("kept"),
+            F.col("node").alias("src_path"),
+            F.col("next").alias("final_path"),
+            (~F.col("is_exp") & F.col("final_exp")).alias("kept"),
         )
     )
 

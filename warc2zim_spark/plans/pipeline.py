@@ -20,7 +20,6 @@ as concurrent threads rather than one after another.
 from __future__ import annotations
 
 import json
-import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
@@ -32,8 +31,8 @@ from pyspark.sql import functions as F
 from warc2zim_spark.kernels.surt import canonicalize
 from warc2zim_spark.operators.gather import (
     expected_items,
-    main_page_candidate,
-    main_page_resolved,
+    main_page,
+    main_page_meta,
 )
 from warc2zim_spark.operators.items import items_table, revisit_aliases
 from warc2zim_spark.operators.metadata import (
@@ -91,22 +90,28 @@ def run_pipeline(
       ``charsets_to_try``, or ``header_bytes`` > 1024) runs its own probe
       (``quarantined_records``), the one path that reads full payloads.
     * The redirect fixpoint runs once; both the redirects and the expected
-      sinks derive from its cached kept-source keys.
+      sinks (and the --url presence check) read its kept-source keys,
+      materialized by an eager local checkpoint inside branch (a), so no
+      reader ever triggers a checkpoint and no lock orders them.
     * The main page is redirect-followed once, by a bounded single-row
-      walk, and that resolved row feeds the favicon discovery and the
-      metadata; the few payloads those need (main page, icons) are located
-      on the cached stream and fetched from the raw records by
-      (file_seq, rec_seq).
+      walk, to a (zim_path, url) tuple; its one record is located on the
+      cached stream, fetched from the raw records by (file_seq, rec_seq),
+      decoded and parsed once on the driver, and that parse feeds both the
+      favicon candidates and the metadata title/lang cascade.
 
     Three branches run concurrently: (b) on the calling thread, (a) and (c)
     on a fixed 3-thread pool (the verdict and its sinks are separate tasks).
     The caller's job group and description reach every job.
 
-    (a) the redirect verdict, then the ``redirects`` and ``expected`` sinks;
+    (a) the redirect verdict (one eager checkpoint), then the ``redirects``
+        and ``expected`` sinks;
     (b) on the calling thread: the ``fails`` sink, the abort check, the
         ``items`` sink, then the ``aliases`` sink;
-    (c) the main-page walk, the illustration, then the metadata rows (at
-        most 12), collected.
+    (c) the A4 pick (or --url) and the J5 walk (one lookup job per hop),
+        the --url presence check, the main-page record read (one job), the
+        illustration (one action: capture, size, rank, convert), then the
+        metadata rows (at most 12;
+        one action collects them with the date range and warcinfo software).
 
     Only the verdict and (c) start before the abort check, and neither
     writes: no sink but ``fails`` is written before the check passes, and
@@ -256,25 +261,18 @@ def run_pipeline(
     obs_expected = Observation("expected_sink")
 
     def redirect_verdict():
-        """Branch (a), first half: ONE fixpoint — both sinks derive from the
-        same cached kept-source keys. Its shuffles run as it is planned
-        (adaptive execution materializes each pointer-doubling round)."""
-        return kept_sources(edges, expected).cache()
-
-    # The first job over the verdict checkpoints its last pointer-doubling
-    # round (a lazy localCheckpoint). When jobs from two threads reach an
-    # RDD that is being checkpointed, Spark's scheduler and its checkpoint
-    # lock can deadlock, so the two first readers (the redirects sink and
-    # the --url presence check) take turns.
-    verdict_first_read = threading.Lock()
+        """Branch (a), first half: ONE fixpoint, materialized here by an
+        eager local checkpoint — both sinks and the --url presence check
+        then read finished kept-source keys, never a checkpoint in
+        progress."""
+        return kept_sources(edges, expected).localCheckpoint(eager=True)
 
     def redirect_sinks() -> None:
         """Branch (a), second half: the two sinks of the verdict."""
         kept = verdict.result()
-        with verdict_first_read:
-            kept_redirects(edges, expected, kept).observe(
-                obs_redirects, F.count(F.lit(1)).alias("rows")
-            ).write.mode("overwrite").parquet(str(out / "redirects"))
+        kept_redirects(edges, expected, kept).observe(
+            obs_redirects, F.count(F.lit(1)).alias("rows")
+        ).write.mode("overwrite").parquet(str(out / "redirects"))
         expected_with_redirects(edges, expected, kept).observe(
             obs_expected, F.count(F.lit(1)).alias("rows")
         ).write.mode("overwrite").parquet(str(out / "expected"))
@@ -284,67 +282,66 @@ def run_pipeline(
         the collected metadata rows)."""
         # --url override or A4 auto-selection, then the J5 redirect follow —
         # Main-Path must point at the FINAL target when the landing path is
-        # a redirect source (converter.py:586-606). Walked ONCE here; the
-        # resolved 1-row frame feeds the favicon path and zim_metadata.
-        if main_url is not None:
-            main_df = spark.createDataFrame(
-                [(main_path, main_url)], "zim_path string, url string"
-            )
-        else:
-            main_df = main_page_candidate(content)
-        resolved = main_page_resolved(content, main_df)
-        resolved_rows = resolved.collect()  # local frame: no job
-        if not resolved_rows:
+        # a redirect source (converter.py:586-606). Walked ONCE here.
+        resolved = main_page(
+            content, (main_path, main_url) if main_url is not None else None
+        )
+        if resolved is None:
             # converter.py:315-316: "Unable to find main path, aborting" — a
             # ZIM without a main page is unusable; fail rather than emit one
             raise ValueError("Unable to find main path, aborting")
-        resolved_path = resolved_rows[0].zim_path
+        resolved_path, page_url = resolved
         if main_url is not None:
             # a user-specified main page must actually exist in the archive
             # (converter.py:612-614 "Unable to find main page")
             full_expected = expected_with_redirects(edges, expected, verdict.result())
-            with verdict_first_read:
-                present = (
-                    full_expected.filter(F.col("zim_path") == resolved_path)
-                    .limit(1)
-                    .count()
-                )
+            present = (
+                full_expected.filter(F.col("zim_path") == resolved_path)
+                .limit(1)
+                .count()
+            )
             if not present:
                 raise ValueError(
                     f"Unable to find main page {resolved_path!r} "
                     "(resolved from --url) among expected items, aborting"
                 )
-        # illustration: --favicon override, else discovery off the main page
-        # (J3 capture join + A9 ranking), both located on the cached narrow
-        # content stream with payloads fetched from ``records`` by position;
-        # 0 captured rows → the transparent fallback inside zim_metadata
-        # (converter.py:920-924)
+        # the main page's ONE record: read by position, decoded and parsed
+        # once; its icons feed the favicon discovery, its title/lang the
+        # metadata cascade
+        page = main_page_meta(content, records, resolved_path, downstream_decode)
         meta_args = dict(metadata_args or {})
         if scraper_suffix is not None:
             meta_args.setdefault("scraper_suffix", scraper_suffix)
         if disable_metadata_checks:
             meta_args["validate"] = False
+        # illustration: --favicon override, else discovery off the main page
+        # (J3 capture + A9 ranking), located on the cached narrow content
+        # stream with payloads fetched from ``records`` by position — one
+        # action; 0 captured rows → the transparent fallback inside
+        # zim_metadata (converter.py:920-924)
         if meta_args.get("illustration") is None:
             from warc2zim_spark.operators.favicon import (  # needs a session
-                best_illustration,
+                best_capture,
+                favicon_candidates,
                 illustration_from_url,
             )
 
             if favicon_url is not None:
                 best = illustration_from_url(content, favicon_url, records=records)
             else:
-                best = best_illustration(
-                    content, resolved, decode_options=downstream_decode,
-                    records=records,
-                )
+                candidates = favicon_candidates(page_url, page["icons"]) if page else []
+                best = best_capture(content, candidates, records)
             illu_rows = best.select("illustration").limit(1).collect()
             if illu_rows:
                 meta_args["illustration"] = bytes(illu_rows[0].illustration)
         # S7: the full metadata frame (validated fail-fast inside) — title/
         # lang cascade off the SAME main page the run selected (user --url
-        # or auto)
-        meta = zim_metadata(content, records, name=name, main_path=resolved_path,
-                            decode_options=downstream_decode, **meta_args)
+        # or auto); one action collects it
+        meta = zim_metadata(
+            content, records, name=name,
+            main_head=(page["title"], page["lang_decl"]) if page else (None, None),
+            **meta_args,
+        )
         return resolved_path, [tuple(r) for r in meta.collect()]
 
     # overlap the three independent branches (actions submitted from one
@@ -359,7 +356,7 @@ def run_pipeline(
             return pool.submit(inheritable_thread_target(spark)(fn))
 
         verdict = branch(redirect_verdict)
-        main_page = branch(main_page_rows)
+        metadata_rows = branch(main_page_rows)
         fails.observe(obs_fails, F.count(F.lit(1)).alias("rows")).write.mode(
             "overwrite"
         ).parquet(str(fails_dir))
@@ -394,7 +391,7 @@ def run_pipeline(
             obs_aliases, F.count(F.lit(1)).alias("rows")
         ).write.mode("overwrite").parquet(str(out / "aliases"))
         redirect_sinks_done.result()
-        resolved_path, meta_rows = main_page.result()
+        resolved_path, meta_rows = metadata_rows.result()
 
     # the engine's own operational entries close the metadata sink, once the
     # item count is known
@@ -418,6 +415,6 @@ def run_pipeline(
     (out / "metrics.json").write_text(json.dumps(metrics))
     written = int(n_all_items) + int(metrics["redirects"]) + int(metrics["aliases"])
     _progress(written, written)
-    for df in (items, verdict.result(), edges, expected, fails, content):
+    for df in (items, edges, expected, fails, content):
         df.unpersist()
     return metrics
