@@ -89,6 +89,34 @@ class TestStaticAssets:
         assert static_asset_items(spark).count() == len(STATIC_JS_ASSETS)
 
 
+class TestLiteralFrame:
+    """The JVM literal frames behind the S7/S8 sinks match ``createDataFrame``
+    over the same rows: same rows, same schema, every field nullable (a
+    ``string not null`` column would change the sinks' parquet schema)."""
+
+    @pytest.mark.parametrize(
+        "rows,ddl",
+        [
+            ([("Title", "t"), ("Tags", None)], "name string, value string"),
+            (
+                [("_zim_static/a.js", None, "text/javascript", None, 5, -1, 0, False)],
+                "zim_path string, url string, mime string, status int, "
+                "payload_len long, file_seq long, rec_seq long, is_front boolean",
+            ),
+            ([("u", "p", b"\x89PNG")], "icon_url string, icon_path string, payload binary"),
+            ([], "surt_key string"),
+        ],
+    )
+    def test_matches_create_data_frame(self, spark, rows, ddl):
+        from warc2zim_spark.functions.expressions import literal_frame
+
+        got = literal_frame(spark, rows, ddl)
+        want = spark.createDataFrame(rows, ddl)
+        assert got.schema == want.schema
+        assert all(f.nullable for f in got.schema.fields)
+        assert got.collect() == want.collect()
+
+
 class TestZimMetadata:
     def test_entries_and_cascades(self, spark, webdata):
         from warc2zim_spark.operators.records import content_records, load_records

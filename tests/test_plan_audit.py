@@ -110,7 +110,7 @@ class TestFrontierPlanSingleEval:
         seeds = spark.createDataFrame(
             [("https://a.example/p1", 0, 1.0)], "url string, hops int, score double"
         )
-        from warc2zim_spark.frontier.crawl import _normalize
+        from warc2zim_spark.frontier.crawl import _normalize_cols, _valid
 
         robots = spark.createDataFrame(
             [], "host string, rule_type string, path_prefix string, crawl_delay_ms int"
@@ -120,16 +120,21 @@ class TestFrontierPlanSingleEval:
         # next-frontier plan are the link-extraction chain itself
         from warc2zim_spark.frontier.crawl import page_lookup
 
-        frontier = _normalize(seeds).localCheckpoint(eager=True)
+        frontier = _normalize_cols(seeds).localCheckpoint(eager=True).filter(_valid())
         pages_keyed = page_lookup(pages).cache()
         pages_keyed.count()
-        scheduled, nxt = crawl_wave(
-            frontier,
-            spark.createDataFrame([], "surt_key string"),
-            pages,
-            robots,
-            pages_keyed=pages_keyed,
-        )
+        seen = spark.createDataFrame([], "surt_key string")
+        waves = []
+        schedule_plans = _executed_plans(spark, lambda: waves.append(crawl_wave(
+            frontier, seen, pages, robots, pages_keyed=pages_keyed,
+        )))
+        # the schedule's eager checkpoint ran inside the call: its dedup
+        # carries each url's host through the aggregate, so no host_of
+        # runs in the schedule plan
+        assert schedule_plans and not any(
+            "host_of" in p for p in schedule_plans
+        ), schedule_plans
+        scheduled, nxt = waves[0]
         nxt.count()
         evals = _arrow_evals(nxt)
         # r06: the whole link chain (decode + HTML parse + resolve + surt +
@@ -141,11 +146,10 @@ class TestFrontierPlanSingleEval:
         for name in ("extract_meta", "resolve_url", "decode_payload"):
             assert evals.count(name) == 0, (name, evals)
         # surt_key lives only inside the cached page_lookup build, whose
-        # subtree the plan toString prints (not a live eval — same artifact
-        # the old host_of bound documented); host_of survives only in the
-        # wave-dedup best frame
+        # subtree the plan toString prints (not a live eval); the wave
+        # dedup runs no host_of, so none reaches the link plan either
         assert evals.count("surt_key") <= 2, evals
-        assert evals.count("host_of") <= 1, evals
+        assert evals.count("host_of") == 0, evals
         pages_keyed.unpersist()
 
     def test_content_records_two_surt_evals_pinned(self, spark):
@@ -357,3 +361,51 @@ class TestFrontierPlanShapes:
         assert "pages.parquet" not in over_robots[0]
         # the wave plans (schedule and frontier checkpoints) did run
         assert sum("pages.parquet" in p for p in plans) >= 2
+
+
+class TestDriversBuildNoListFrames:
+    """Python workers run kernels only: neither driver builds a frame from
+    a Python list (``createDataFrame``, whose reads run Python tasks);
+    driver-side rows are JVM literal frames. The method is patched on the
+    class for the duration of the call, so the pools' threads are covered."""
+
+    @staticmethod
+    def _refuse(*args, **kwargs):
+        raise AssertionError("createDataFrame on a driver path")
+
+    @pytest.mark.parametrize("seen_mode", ["exact", "bloom"])
+    def test_run_crawl(self, spark, webdata, tmp_path, monkeypatch, seen_mode):
+        from pyspark.sql import SparkSession
+
+        from warc2zim_spark.frontier.crawl import run_crawl
+
+        read = spark.read.parquet
+        tables = [read(f"{webdata}/{t}.parquet") for t in ("seeds", "pages", "robots")]
+        with monkeypatch.context() as m:
+            m.setattr(SparkSession, "createDataFrame", self._refuse)
+            schedule = run_crawl(
+                spark, *tables, str(tmp_path / "crawl"), max_waves=3,
+                host_budget=4, wave_budget=50, seen_mode=seen_mode,
+            )
+        assert schedule.count() > 0
+
+    @pytest.mark.parametrize(
+        "option", ["default", "main_url", "favicon_url", "custom_css"]
+    )
+    def test_run_pipeline(self, spark, webdata, tmp_path, monkeypatch, option):
+        from pyspark.sql import SparkSession
+
+        from warc2zim_spark.plans.pipeline import run_pipeline
+
+        kwargs = {
+            "main_url": {"main_url": "https://redir.example/main-start"},
+            "favicon_url": {"favicon_url": "https://site3.example/alt.ico"},
+            "custom_css": {"custom_css": b"body{}"},
+        }.get(option, {})
+        with monkeypatch.context() as m:
+            m.setattr(SparkSession, "createDataFrame", self._refuse)
+            metrics = run_pipeline(
+                spark, webdata, str(tmp_path / "out"), name="n",
+                continue_on_error=True, **kwargs,
+            )
+        assert metrics["items"] > 0

@@ -42,18 +42,18 @@ def main() -> None:
         with open(f"{out_dir}/{name}_{suffix}.txt", "w") as fh:
             fh.write(plan_of(qs[name](spark, sf)))
 
-    # frontier decomposition (bench-scale budgets). The scheduling chain is
-    # rebuilt from the same operators crawl_wave composes, WITHOUT the final
-    # localCheckpoint — a checkpointed frame explains as a bare RDD scan and
-    # would hide the whole chain.
+    # frontier decomposition (bench-scale budgets, wave 0: its empty seen set
+    # is pruned at plan time). The scheduling chain is rebuilt from the same
+    # operators crawl_wave composes, WITHOUT the final localCheckpoint — a
+    # checkpointed frame explains as a bare RDD scan and would hide the chain.
     from warc2zim_spark.frontier.crawl import (
-        _normalize_cols, _valid, crawl_wave, page_lookup,
+        _normalize_cols, _valid, crawl_wave, dedup_frontier, page_lookup,
     )
     from warc2zim_spark.frontier.politeness import (
         politeness_budget, prioritize, robots_allowed,
     )
     from warc2zim_spark.frontier.seenfilter import unseen_exact
-    from warc2zim_spark.functions import udfs
+    from warc2zim_spark.functions.expressions import literal_frame
 
     pages = spark.read.parquet(f"{web}/pages.parquet")
     robots = spark.read.parquet(f"{web}/robots.parquet")
@@ -61,17 +61,11 @@ def main() -> None:
         "url", F.lit(1.0).alias("score"), F.lit(0).alias("hops")
     )
     frontier = _normalize_cols(seeds).localCheckpoint(eager=True).filter(_valid())
-    seen = spark.createDataFrame([], "surt_key string")
-    best = (
-        frontier.groupBy("surt_key")
-        .agg(F.min("hops").alias("hops"), F.max("score").alias("score"),
-             F.min("url").alias("url"))
-        .withColumn("host", udfs.host_of(F.col("url")))
-    )
-    seen_side = F.broadcast(seen) if suffix == "after" else seen
+    seen = literal_frame(spark, [], "surt_key string")
+    best = dedup_frontier(frontier)
     sched_chain = prioritize(
         politeness_budget(
-            robots_allowed(unseen_exact(best, seen_side), robots),
+            robots_allowed(unseen_exact(best, seen), robots),
             robots, host_budget=500,
         ),
         wave_budget=100_000,

@@ -4,7 +4,7 @@ Iterative batch (NOT Structured Streaming — SURVEY §2.8). Once per crawl,
 the page lookup and the per-host robots policy (``host_policy``) are built;
 then each wave
   1. candidates = frontier rows (url, surt_key, host, hops, score), deduped
-     per key and probed against the seen filter
+     per key, no UDF (``dedup_frontier``), and probed against the seen filter
   2. robots gate → politeness budget → global priority + wave budget; the
      schedule is materialized eagerly (one job)
   3. three independent jobs start from the finished schedule at once:
@@ -49,6 +49,7 @@ from warc2zim_spark.frontier.seenfilter import (
     unseen_exact,
 )
 from warc2zim_spark.functions import udfs
+from warc2zim_spark.functions.expressions import literal_frame
 
 SCORE_DECAY = 0.5
 
@@ -77,10 +78,6 @@ def _normalize_cols(frontier: DataFrame) -> DataFrame:
     )
 
 
-def _normalize(frontier: DataFrame) -> DataFrame:
-    return _normalize_cols(frontier).filter(_valid())
-
-
 def page_lookup(pages: DataFrame) -> DataFrame:
     """(surt_key, page_url) with exactly one page per canonical key — the
     lexicographically-first url wins (first-wins analogue of A2, needed
@@ -102,6 +99,18 @@ def page_lookup(pages: DataFrame) -> DataFrame:
         .groupBy("surt_key")
         .agg(F.min("page_url").alias("page_url"))
     )
+
+
+def dedup_frontier(frontier: DataFrame) -> DataFrame:
+    """One candidate per key: best (hops, score) and the least url with its
+    own host, ``min(struct(url, host))`` — every row's host is ``url_host``
+    of its url, so this is ``host_of(min(url))`` without a Python stage.
+    Deterministic: parallelism must not change the result (never F.first)."""
+    return frontier.groupBy("surt_key").agg(
+        F.min("hops").alias("hops"),
+        F.max("score").alias("score"),
+        F.min(F.struct("url", "host")).alias("_first"),
+    ).select("surt_key", "hops", "score", "_first.url", "_first.host")
 
 
 def crawl_wave(
@@ -135,21 +144,7 @@ def crawl_wave(
     consumer — the driver's write and seen update, and the link extraction
     behind ``next_frontier_candidates`` — reads finished blocks.
     """
-    # dedup in-wave candidates: best (hops, score) per surt_key, then anti-join
-    # seen. Deterministic everywhere: url = lexicographic min, host derived
-    # from it (never F.first — parallelism must not change the result).
-    best = (
-        frontier.groupBy("surt_key")
-        .agg(
-            F.min("hops").alias("hops"),
-            F.max("score").alias("score"),
-            F.min("url").alias("url"),
-        )
-        # no host-null filter needed: every url in the group passed _VALID,
-        # min(url) is one of them, and host_of is deterministic per url —
-        # a filter here would just double the host UDF over the wave
-        .withColumn("host", udfs.host_of(F.col("url")))
-    )
+    best = dedup_frontier(frontier)
     if seen_bloom is not None:
         # partitioned-bloom membership (the 10^10-key mode): candidates hash
         # to bitmap partitions, cogrouped probe, no exact key set anywhere.
@@ -265,10 +260,8 @@ def run_crawl(
     if initial_frontier is None:
         initial_frontier = _normalize_cols(seeds.repartition(n_parts))
     frontier = initial_frontier.localCheckpoint(eager=True).filter(_valid())
-    seen = (
-        initial_seen
-        if initial_seen is not None
-        else spark.createDataFrame([], "surt_key string")
+    seen = initial_seen if initial_seen is not None else literal_frame(
+        spark, [], "surt_key string"
     )
     # exact-mode seen keys are counted as they accumulate (each wave adds
     # exactly n_scheduled NEW keys — the anti-join guarantees disjointness),
@@ -401,7 +394,7 @@ def run_crawl(
     return (
         spark.read.parquet(*[str(ckpt / f"wave={w}") for w in waves])
         if waves
-        else spark.createDataFrame([], "wave int, url string, surt_key string, host string, hops int, score double")
+        else literal_frame(spark, [], "wave int, url string, surt_key string, host string, hops int, score double")
     )
 
 

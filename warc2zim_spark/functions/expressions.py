@@ -8,7 +8,7 @@ fully pushed down (SURVEY §4.2).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from warc2zim_spark.kernels.status import PROCESSABLE_STATUSES, REDIRECT_STATUSES
@@ -86,6 +86,17 @@ def rewrite_mode_expr(
         resourcetype.isNull() | (F.trim(resourcetype) == ""),
         _mime_mode(mime, zim_path, method),
     ).otherwise(by_resourcetype)
+
+
+def literal_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """``rows`` as a JVM literal frame (``ddl`` columns, all nullable): no
+    Python task reads it. No rows → ``limit(0)``, which the optimizer folds to
+    an empty relation, so a join or union against it runs no job."""
+    row_type = f"struct<{ddl}>"
+    structs = [F.struct(*map(F.lit, row)).cast(row_type) for row in rows]
+    inlined = F.inline(F.array(*structs).cast(f"array<{row_type}>"))
+    frame = spark.range(1, numPartitions=1).select(inlined)
+    return frame if rows else frame.limit(0)
 
 
 def token_count_ws(text: Column) -> Column:

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from warc2zim_spark.functions import udfs
+from warc2zim_spark.functions.expressions import literal_frame
 from warc2zim_spark.operators.records import fetch_payloads
 
 ZIM_ILLUSTRATION_SIZE = 48
@@ -101,8 +102,8 @@ def favicon_payloads(
     for icon_url, icon_path in candidates:
         urls_of.setdefault(icon_path, []).append(icon_url)
     if not urls_of:
-        return content.sparkSession.createDataFrame(
-            [], "icon_url string, icon_path string, payload binary"
+        return literal_frame(
+            content.sparkSession, [], "icon_url string, icon_path string, payload binary"
         )
     url_map = F.create_map(
         *[c for p, us in urls_of.items() for c in (F.lit(p), F.array(*map(F.lit, us)))]

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from warc2zim_spark.functions.expressions import (
     is_processable_status,
     is_redirect_status,
+    literal_frame,
 )
 from warc2zim_spark.kernels.status import MAIN_PAGE_REDIRECT_STATUSES
 
@@ -116,13 +117,11 @@ def main_page(
 def main_page_resolved(
     content: DataFrame, main: DataFrame | tuple[str, str] | None = None
 ) -> DataFrame:
-    """``main_page`` as a local 1-row (zim_path, url) frame, 0 rows when
-    there is no starting page — for callers that join or union it. The
-    frame is RDD-backed: every read of it runs a job, so a caller that only
-    needs the values takes ``main_page``'s tuple instead."""
+    """``main_page`` as a 1-row (zim_path, url) literal frame, 0 rows when
+    there is no starting page — for callers that join or union it."""
     resolved = main_page(content, main)
-    return content.sparkSession.createDataFrame(
-        [resolved] if resolved else [], "zim_path string, url string"
+    return literal_frame(
+        content.sparkSession, [resolved] if resolved else [], "zim_path string, url string"
     )
 
 

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from warc2zim_spark import __version__
+from warc2zim_spark.functions.expressions import literal_frame
 from warc2zim_spark.kernels.htmlmeta import truncated_title
 from warc2zim_spark.kernels.language import parse_language
 from warc2zim_spark.operators.gather import (
@@ -68,8 +69,8 @@ def static_asset_items(
 ) -> DataFrame:
     """S8 — the ``_zim_static/`` item rows to union into the items sink:
     every static .js (StaticArticle, items.py:65-89) plus custom.css when
-    given (StaticFile via --custom-css, converter.py:264-276). Schema matches
-    ``items_table``; file_seq = -1 marks non-record provenance."""
+    given (StaticFile via --custom-css, converter.py:264-276), as a JVM
+    literal frame; schema of ``items_table``, file_seq = -1 for non-records."""
     rows = [
         (
             f"_zim_static/{name}",
@@ -88,8 +89,8 @@ def static_asset_items(
             ("_zim_static/custom.css", None, "text/css", None,
              len(custom_css), -1, len(rows), False)
         )
-    return spark.createDataFrame(
-        rows,
+    return literal_frame(
+        spark, rows,
         "zim_path string, url string, mime string, status int, "
         "payload_len long, file_seq long, rec_seq long, is_front boolean",
     )

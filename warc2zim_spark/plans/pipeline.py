@@ -28,6 +28,7 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
+from warc2zim_spark.functions.expressions import literal_frame
 from warc2zim_spark.kernels.surt import canonicalize
 from warc2zim_spark.operators.gather import (
     expected_items,
@@ -395,10 +396,10 @@ def run_pipeline(
 
     # the engine's own operational entries close the metadata sink, once the
     # item count is known
-    spark.createDataFrame(
-        meta_rows + [("Main-Path", resolved_path), ("Counter-Items", str(n_all_items))],
-        "name string, value string",
-    ).write.mode("overwrite").parquet(str(out / "metadata"))
+    meta_rows += [("Main-Path", resolved_path), ("Counter-Items", str(n_all_items))]
+    literal_frame(spark, meta_rows, "name string, value string").write.mode(
+        "overwrite"
+    ).parquet(str(out / "metadata"))
 
     n_static = len(STATIC_JS_ASSETS) + (custom_css is not None)
     metrics = {

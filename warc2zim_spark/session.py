@@ -42,13 +42,13 @@ def get_spark(
         # pre-shuffle UDF stage; 16m ≈ cores×(file/16m) tasks. At cluster
         # scale with thousands of files, set this back via spark-submit conf.
         .config("spark.sql.files.maxPartitionBytes", "16m")
-        # floor scan parallelism at the core count (r06): the hot tables are
-        # single ~100 MB parquet files, so even 16m splits give only ~6-7
-        # scan tasks and every scan-stage Arrow UDF pass (surt over pages,
-        # posturl over records, html link extraction) ran at a fifth of the
-        # machine. Derived from the core count, not a constant — a cluster
-        # deployment with thousands of input files is already above this
-        # floor and is unaffected.
+        # at least core-count file splits (r06; the hot tables are single
+        # ~100 MB parquet files, 16m splits alone give ~6-7) — not a floor on
+        # scan parallelism: a split reads only the row groups whose midpoint
+        # it holds, so a file of ONE row group is read by one task however
+        # many splits it gets (perfbench's pages and warc_records files: the
+        # crawl's page lookup and link extraction, convert's record scan).
+        # Derived from the core count, not a constant.
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
