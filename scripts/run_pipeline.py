@@ -161,12 +161,12 @@ def main() -> None:
     print(json.dumps({"pipeline": metrics}))
 
     if args.crawl:
-        from warc2zim_spark.frontier.crawl import resume_crawl
+        from warc2zim_spark.frontier.crawl import run_crawl
 
         seeds = spark.read.parquet(f"{args.webdata}/seeds.parquet")
         robots = spark.read.parquet(f"{args.webdata}/robots.parquet")
         pages = spark.read.parquet(f"{args.webdata}/pages.parquet")
-        schedule = resume_crawl(
+        schedule = run_crawl(
             spark, seeds, pages, robots, f"{out_dir}/crawl",
             max_waves=args.max_waves,
             host_budget=args.host_budget,

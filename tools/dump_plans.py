@@ -43,16 +43,13 @@ def main() -> None:
             fh.write(plan_of(qs[name](spark, sf)))
 
     # frontier decomposition (bench-scale budgets, wave 0: its empty seen set
-    # is pruned at plan time). The scheduling chain is rebuilt from the same
-    # operators crawl_wave composes, WITHOUT the final localCheckpoint — a
-    # checkpointed frame explains as a bare RDD scan and would hide the chain.
+    # is pruned at plan time). The scheduling chain is dumped before the
+    # localCheckpoint crawl_wave puts on it — a checkpointed frame explains
+    # as a bare RDD scan and would hide the chain — and the link chain over
+    # that checkpoint, as the crawl runs it.
     from warc2zim_spark.frontier.crawl import (
-        _normalize_cols, _valid, crawl_wave, dedup_frontier, page_lookup,
+        _normalize_cols, _valid, page_lookup, schedule_wave, wave_links,
     )
-    from warc2zim_spark.frontier.politeness import (
-        politeness_budget, prioritize, robots_allowed,
-    )
-    from warc2zim_spark.frontier.seenfilter import unseen_exact
     from warc2zim_spark.functions.expressions import literal_frame
 
     pages = spark.read.parquet(f"{web}/pages.parquet")
@@ -62,20 +59,14 @@ def main() -> None:
     )
     frontier = _normalize_cols(seeds).localCheckpoint(eager=True).filter(_valid())
     seen = literal_frame(spark, [], "surt_key string")
-    best = dedup_frontier(frontier)
-    sched_chain = prioritize(
-        politeness_budget(
-            robots_allowed(unseen_exact(best, seen), robots),
-            robots, host_budget=500,
-        ),
-        wave_budget=100_000,
+    sched_chain = schedule_wave(
+        frontier, seen, robots, host_budget=500, wave_budget=100_000
     )
     with open(f"{out_dir}/w_frontier_schedule_{suffix}.txt", "w") as fh:
         fh.write(plan_of(sched_chain))
-    pages_keyed = page_lookup(pages)
-    _, next_frontier = crawl_wave(
-        frontier, seen, pages, robots, host_budget=500, wave_budget=100_000,
-        pages_keyed=pages_keyed,
+    next_frontier = wave_links(
+        sched_chain.localCheckpoint(eager=True), pages,
+        pages_keyed=page_lookup(pages), wave_budget=100_000,
     )
     with open(f"{out_dir}/w_frontier_links_{suffix}.txt", "w") as fh:
         fh.write(plan_of(next_frontier))

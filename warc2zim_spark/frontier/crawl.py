@@ -1,24 +1,29 @@
 """BFS crawl-wave loop: the north-star frontier driver.
 
-Iterative batch (NOT Structured Streaming — SURVEY §2.8). Once per crawl,
-the page lookup and the per-host robots policy (``host_policy``) are built;
-then each wave
+Iterative batch (NOT Structured Streaming — SURVEY §2.8). The checkpoint
+directory is the crawl's only state: ``run_crawl`` reads the waves committed
+there and starts at the next one, so a fresh, a resumed and an extended
+crawl run the same code. On entry the frontier is the seeds (nothing
+committed) or the links of the last committed wave — the next frontier is a
+function of a wave's scheduled rows and the page table alone, so no frontier
+snapshot is written. Once per crawl, the page lookup and the per-host robots
+policy (``host_policy``) are built; then each wave
   1. candidates = frontier rows (url, surt_key, host, hops, score), deduped
      per key, no UDF (``dedup_frontier``), and probed against the seen filter
-  2. robots gate → politeness budget → global priority + wave budget; the
-     schedule is materialized eagerly (one job)
+  2. robots gate → politeness budget → global priority + wave budget
+     (``schedule_wave``); the schedule is materialized eagerly (one job)
   3. three independent jobs start from the finished schedule at once:
      a. the wave write (parquet + metrics), then its commit marker;
      b. bloom mode: the seen-filter update — the wave's keys ORed into the
         prior bitmaps in one pass (``add_to_bloom``), persisted as
         ``seen_bloom_wave=N``;
-     c. "fetch" = join scheduled URLs against the page table (the sandbox's
-        stand-in for HTTP; at production scale this is the fetcher
-        boundary), extract links → next frontier (hops+1, inherited score
-        decayed), checkpointed.
-  4. exact mode: scheduled keys enter the seen set. Bloom mode: the next
+     c. ``wave_links``: "fetch" = join scheduled URLs against the page table
+        (the sandbox's stand-in for HTTP; at production scale this is the
+        fetcher boundary), extract links → next frontier (hops+1, inherited
+        score decayed), checkpointed. The last wave skips it.
+  4. exact mode: the seen set is the committed waves' ``surt_key`` columns,
+     so it grows by the scan of the wave just written. Bloom mode: the next
      wave's probe reads the filter file written by 3b, waiting for it first.
-Resumable: ``resume_crawl`` restarts from the last committed wave.
 
 Determinism contract (north_rule): the scheduled set + ordering per wave is
 a pure function of (seed list, politeness budget, page table) — independent
@@ -53,6 +58,10 @@ from warc2zim_spark.functions.expressions import literal_frame
 
 SCORE_DECAY = 0.5
 
+# one committed wave's rows, as written and read back (an explicit schema:
+# no schema-inference job per read)
+_WAVE_SCHEMA = "wave int, url string, surt_key string, host string, hops int, score double"
+
 # scale guards for the broadcast fast paths (r06), read per call with
 # env_cap: wave schedules (W2ZS_FETCH_BROADCAST_MAX) and exact-mode seen sets
 # (W2ZS_SEEN_BROADCAST_MAX) are broadcast-joined while they provably fit
@@ -72,7 +81,7 @@ def _valid():
 
 def _normalize_cols(frontier: DataFrame) -> DataFrame:
     """Attach surt_key + host (one UDF pass each, NO null filter — callers
-    filter ``_VALID`` after a materialization barrier)."""
+    filter ``_valid()`` after a materialization barrier)."""
     return frontier.withColumn("surt_key", udfs.surt_key(F.col("url"))).withColumn(
         "host", udfs.host_of(F.col("url"))
     )
@@ -88,7 +97,7 @@ def page_lookup(pages: DataFrame) -> DataFrame:
     ``min(page_url)`` over a map-side-aggregating groupBy is exactly the
     former window's first-wins pick, but the dedup shuffle and the per-crawl
     cache now carry ~100 B/row instead of the whole html payload.
-    ``crawl_wave`` re-attaches html at fetch time by streaming the page
+    ``wave_links`` re-attaches html at fetch time by streaming the page
     table through a broadcast probe of the scheduled keys, so the heavy
     bytes are never shuffled or cached at all."""
     return (
@@ -113,37 +122,26 @@ def dedup_frontier(frontier: DataFrame) -> DataFrame:
     ).select("surt_key", "hops", "score", "_first.url", "_first.host")
 
 
-def crawl_wave(
+def schedule_wave(
     frontier: DataFrame,
-    seen: DataFrame,
-    pages: DataFrame,
+    seen: DataFrame | None,
     robots: DataFrame,
     host_budget: int = 8,
     wave_budget: int = 1000,
-    pages_keyed: DataFrame | None = None,
     seen_bloom: DataFrame | None = None,
     bloom_partitions: int = 32,
     policy: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """One wave → (scheduled, next_frontier_candidates).
-
+) -> DataFrame:
+    """One wave's schedule, lazily: dedup → seen probe → robots →
+    politeness → global priority + wave budget.
     ``frontier``: (url, surt_key, host, hops, score) candidates.
-    ``seen``: one column ``surt_key``.
-    ``pages``: the web-page table (url, html, ...) standing in for fetches.
-    ``pages_keyed``: optional pre-built ``page_lookup(pages)`` — the NARROW
-    (surt_key, page_url) decision table (cached by the crawl driver so the
-    surt pass over the page table happens once, not per wave).
+    ``seen``: one column ``surt_key``; unused when ``seen_bloom`` is given.
     ``bloom_partitions`` must match the partition count ``seen_bloom`` was
     built with (probe_bloom validates against the filter rows and raises on
     mismatch — a silent mismatch would pair candidates with the wrong
     bitmaps and re-crawl seen URLs every wave).
     ``policy``: optional pre-built ``host_policy(robots)`` (checkpointed
-    once per crawl by the driver); derived from ``robots`` when absent.
-
-    ``scheduled`` comes back materialized (an eager checkpoint), so every
-    consumer — the driver's write and seen update, and the link extraction
-    behind ``next_frontier_candidates`` — reads finished blocks.
-    """
+    once per crawl by the driver); derived from ``robots`` when absent."""
     best = dedup_frontier(frontier)
     if seen_bloom is not None:
         # partitioned-bloom membership (the 10^10-key mode): candidates hash
@@ -158,17 +156,20 @@ def crawl_wave(
     polite = politeness_budget(
         allowed, robots, host_budget=host_budget, policy=policy
     )
-    scheduled = prioritize(polite, wave_budget=wave_budget).localCheckpoint(
-        eager=True
-    )
-    # ^ checkpoint: the wave output is consumed by up to three jobs — the
-    # driver's write and bloom update and the link extraction (whose result
-    # materializes one wave LATER) — without the barrier each would recompute
-    # the scheduling windows. Eager, because those jobs run concurrently: a
-    # lazy checkpoint whose first readers are two threads' jobs at once can
-    # deadlock the scheduler (one job marks the RDD checkpointed while the
-    # other's stage walk holds its lock)
+    return prioritize(polite, wave_budget=wave_budget)
 
+
+def wave_links(
+    scheduled: DataFrame,
+    pages: DataFrame,
+    pages_keyed: DataFrame | None = None,
+    wave_budget: int | None = None,
+) -> DataFrame:
+    """Next-frontier candidates of the ``scheduled`` rows (url, surt_key,
+    hops, score): fetched from the page table, links extracted (hops+1,
+    score decayed). ``pages_keyed``: optional pre-built (cached)
+    ``page_lookup(pages)``. The hit set is broadcast while ``wave_budget``,
+    which bounds the scheduled rows, is within W2ZS_FETCH_BROADCAST_MAX."""
     # "fetch": canonical-key join against the page table; extract links.
     # The scheduled keys pick their winning page_url on the NARROW lookup,
     # then html is attached by streaming the page table through a hash probe
@@ -185,7 +186,7 @@ def crawl_wave(
     fetched = hits.join(
         pages.select(F.col("url").alias("page_url"), "html"), "page_url"
     )
-    links = (
+    return (
         fetched.filter(F.col("html").isNotNull())
         .select(
             "hops", "score",
@@ -197,7 +198,7 @@ def crawl_wave(
             # *_outer: plain explode's implicit non-empty guard is a
             # predicate on the UDF output and made Catalyst run the parse
             # TWICE per page; a linkless page yields one null row that dies
-            # in the frontier's _VALID filter.
+            # in the frontier's _valid() filter.
             F.explode_outer(
                 udfs.extract_wave_links(F.col("html"), F.col("url"))
             ).alias("l"),
@@ -210,7 +211,56 @@ def crawl_wave(
             F.col("l.host").alias("host"),
         )
     )
-    return scheduled, links
+
+
+def crawl_wave(
+    frontier: DataFrame,
+    seen: DataFrame | None,
+    pages: DataFrame,
+    robots: DataFrame,
+    wave_budget: int = 1000,
+    pages_keyed: DataFrame | None = None,
+    **schedule_opts,
+) -> tuple[DataFrame, DataFrame]:
+    """One wave → (scheduled, next_frontier_candidates): ``schedule_wave``
+    materialized by an eager checkpoint, and its lazy ``wave_links``. The
+    schedule feeds up to three jobs — the driver's write and bloom update
+    and the link extraction — each of which would recompute the scheduling
+    windows without the barrier. Eager, because those jobs run concurrently:
+    a lazy checkpoint whose first readers are two threads' jobs at once can
+    deadlock the scheduler (one job marks the RDD checkpointed while the
+    other's stage walk holds its lock)."""
+    scheduled = schedule_wave(
+        frontier, seen, robots, wave_budget=wave_budget, **schedule_opts
+    ).localCheckpoint(eager=True)
+    return scheduled, wave_links(
+        scheduled, pages, pages_keyed=pages_keyed, wave_budget=wave_budget
+    )
+
+
+def committed_waves(checkpoint_dir: str) -> list[int]:
+    """Waves with a ``_SUCCESS_WAVE`` marker, ascending. A wave dir whose
+    write finished but whose marker never landed (crash in between) is not
+    part of the crawl; the next run overwrites it."""
+    marker = "._SUCCESS_WAVE"
+    return sorted(
+        int(p.name[len("wave="):-len(marker)])
+        for p in Path(checkpoint_dir).glob(f"wave=*{marker}")
+    )
+
+
+def last_committed_wave(checkpoint_dir: str) -> int:
+    """Resume point: highest wave with a success marker, or -1."""
+    done = committed_waves(checkpoint_dir)
+    return done[-1] if done else -1
+
+
+def _read_waves(spark: SparkSession, ckpt: Path, waves: list[int]) -> DataFrame:
+    if not waves:
+        return literal_frame(spark, [], _WAVE_SCHEMA)
+    return spark.read.schema(_WAVE_SCHEMA).parquet(
+        *[str(ckpt / f"wave={w}") for w in waves]
+    )
 
 
 def run_crawl(
@@ -222,24 +272,27 @@ def run_crawl(
     max_waves: int = 4,
     host_budget: int = 8,
     wave_budget: int = 1000,
-    start_wave: int = 0,
-    initial_seen: DataFrame | None = None,
-    initial_frontier: DataFrame | None = None,
     seen_mode: str = "exact",
     bloom_partitions: int = 32,
     bloom_m_bits: int = 1 << 20,
-    initial_bloom: DataFrame | None = None,
 ) -> DataFrame:
-    """Run (or resume) the BFS crawl; returns the full schedule
-    (wave, url, surt_key, host, hops, score) read back from the checkpoint
-    directory — the durable artifact, matching what a restarted job sees.
+    """Run the BFS crawl through wave ``max_waves - 1``; returns the full
+    schedule (wave, url, surt_key, host, hops, score) read back from the
+    checkpoint directory — the durable artifact, matching what a restarted
+    job sees. ``seeds``: (url, score double, hops int).
+
+    The directory is the crawl's state: a second call on it continues after
+    the last committed wave rather than restarting — a resumed crawl after a
+    crash, or an extended one with a larger ``max_waves`` — and ignores its
+    ``seeds``; a finished crawl (``max_waves`` reached, or a wave that
+    scheduled nothing) runs no job. A fresh crawl needs a fresh directory.
 
     ``seen_mode="bloom"`` drives the seen-filter as the partitioned bloom
     (north_star headline): each wave's scheduled keys are ORed into the
     running filter's per-partition bitmaps (``add_to_bloom``), and the
     filter persists to parquet next to each wave (the next wave's probe and
-    a resume read it back). The exact key set never materializes. A fresh
-    crawl has no filter before wave 0, whose seen set is empty.
+    a continued crawl read it back). The exact key set never materializes.
+    A fresh crawl has no filter before wave 0, whose seen set is empty.
     ``bloom_m_bits`` is the per-partition capacity plan: at 16 bits/key,
     2^20 bits ≈ 65k keys/partition — size it to (expected keys) × 16 /
     partitions at production scale.
@@ -250,31 +303,51 @@ def run_crawl(
         raise ValueError(f"seen_mode must be 'exact' or 'bloom', got {seen_mode!r}")
     ckpt = Path(checkpoint_dir)
     ckpt.mkdir(parents=True, exist_ok=True)
-    # spread the seed pass: seeds routinely arrive as ONE partition (a limit,
-    # a collected list, a tiny file), which would run the surt/host UDF pass
-    # — and everything until the first exchange — in a single task. A
-    # round-robin repartition of the (tiny, urls-only) seed rows costs
-    # nothing and restores wave-0 parallelism (r06; set identical, order
-    # explicitly re-established by every downstream sort key).
-    n_parts = spark.sparkContext.defaultParallelism
-    if initial_frontier is None:
-        initial_frontier = _normalize_cols(seeds.repartition(n_parts))
-    frontier = initial_frontier.localCheckpoint(eager=True).filter(_valid())
-    seen = initial_seen if initial_seen is not None else literal_frame(
-        spark, [], "surt_key string"
-    )
+    done = committed_waves(checkpoint_dir)
     # exact-mode seen keys are counted as they accumulate (each wave adds
     # exactly n_scheduled NEW keys — the anti-join guarantees disjointness),
     # so the wave can broadcast the probe side while it provably fits
-    seen_count = initial_seen.count() if initial_seen is not None else 0
-    # bloom mode starts from the persisted filter, or from one rebuilt from
-    # a resume's seen keys; a fresh crawl has none until wave 0's update
-    seen_bloom = initial_bloom
-    if seen_mode == "bloom" and seen_bloom is None and initial_seen is not None:
-        seen_bloom = build_bloom(
-            seen, num_partitions=bloom_partitions, m_bits=bloom_m_bits
-        ).localCheckpoint(eager=True)
+    scheduled_counts = [
+        json.loads((ckpt / f"wave={w}._metrics.json").read_text())["scheduled"]
+        for w in done
+    ]
+    start = done[-1] + 1 if done else 0
+    if start >= max_waves or (done and scheduled_counts[-1] == 0):
+        return _read_waves(spark, ckpt, done)
+    seen_count = sum(scheduled_counts)
     pages_keyed = page_lookup(pages).cache()
+    if done:
+        # the frontier the last committed wave produced: its links, derived
+        # from its rows as the run loop derives them from the schedule. This
+        # job fills the lookup cache, before any other reader exists
+        frontier = wave_links(
+            _read_waves(spark, ckpt, done[-1:]).drop("wave"), pages,
+            pages_keyed=pages_keyed, wave_budget=wave_budget,
+        )
+    else:
+        # spread the seed pass (r06): seeds routinely arrive as ONE
+        # partition (a limit, a list, a tiny file), which would run the UDF
+        # pass — and everything until the first exchange — in one task; a
+        # round-robin repartition of the tiny rows restores parallelism
+        # (order is re-established by every downstream sort key)
+        frontier = _normalize_cols(
+            seeds.repartition(spark.sparkContext.defaultParallelism)
+        )
+    frontier = frontier.localCheckpoint(eager=True).filter(_valid())
+    # bloom mode starts from the persisted filter — if completely written:
+    # the update runs beside the wave's write and marker, so a crash can
+    # leave it partial (no _SUCCESS), and it is then rebuilt from the
+    # committed keys. A fresh crawl has none until wave 0's update
+    seen_bloom = None
+    if seen_mode == "bloom" and done:
+        bloom_path = ckpt / f"seen_bloom_wave={done[-1]}"
+        if (bloom_path / "_SUCCESS").exists():
+            seen_bloom = read_bloom(spark, str(bloom_path))
+        else:
+            seen_bloom = build_bloom(
+                _read_waves(spark, ckpt, done).select("surt_key"),
+                num_partitions=bloom_partitions, m_bits=bloom_m_bits,
+            ).localCheckpoint(eager=True)
     # robots aggregated once per crawl: every wave's gates broadcast
     # projections of these finished blocks
     policy = host_policy(robots).localCheckpoint(eager=True)
@@ -290,10 +363,10 @@ def run_crawl(
     # nothing else of each other — the pool runs the write and the update
     # beside the checkpoint, so the link extraction back-fills the executor
     # slots their tails leave idle and the update leaves the wave's critical
-    # path. The lookup-cache build likewise overlaps wave-0's scheduling
-    # chain (it is first needed only at the mid-wave fetch join). Pool jobs
-    # carry the caller's job group and description, like the calling
-    # thread's.
+    # path. A fresh crawl's lookup-cache build likewise overlaps wave-0's
+    # scheduling chain, which does not read it; the first link extraction
+    # waits for it, so the cache has one filler. Pool jobs carry the
+    # caller's job group and description, like the calling thread's.
     with ThreadPoolExecutor(max_workers=3) as pool:
 
         def submit(fn):
@@ -306,18 +379,18 @@ def run_crawl(
             ).write.mode("overwrite").parquet(path)
             return read_bloom(spark, path)
 
-        warm_lookup = submit(pages_keyed.count)
+        warm_lookup = None if done else submit(pages_keyed.count)
         bloom_fut = None
-        for wave in range(start_wave, max_waves):
+        for wave in range(start, max_waves):
             if bloom_fut is not None:
                 seen_bloom = bloom_fut.result()
-            seen_for_wave = (
-                F.broadcast(seen)
-                if seen_count <= env_cap("W2ZS_SEEN_BROADCAST_MAX")
-                else seen
-            )
+            seen = None
+            if seen_bloom is None:  # exact mode, or bloom mode's wave 0
+                seen = _read_waves(spark, ckpt, done).select("surt_key")
+                if seen_count <= env_cap("W2ZS_SEEN_BROADCAST_MAX"):
+                    seen = F.broadcast(seen)
             scheduled, next_frontier = crawl_wave(
-                frontier, seen_for_wave, pages, robots,
+                frontier, seen, pages, robots,
                 host_budget=host_budget, wave_budget=wave_budget,
                 pages_keyed=pages_keyed, seen_bloom=seen_bloom,
                 bloom_partitions=bloom_partitions, policy=policy,
@@ -356,92 +429,27 @@ def run_crawl(
                     lambda prior=seen_bloom, keys=out.select("surt_key"), w=wave:
                     update_bloom(prior, keys, str(ckpt / f"seen_bloom_wave={w}"))
                 )
-            # eager checkpoint: one job (a lazy checkpoint + count is two
-            # under AQE), concurrent with the pool's jobs above
-            frontier = next_frontier.localCheckpoint(eager=True).filter(_valid())
+            if wave + 1 < max_waves:
+                # eager checkpoint: one job (a lazy checkpoint + count is two
+                # under AQE), concurrent with the pool's jobs above; the
+                # frontier is built from the unrounded in-memory schedule.
+                # The last wave's frontier has no reader: a later call with
+                # a larger max_waves derives it on entry
+                if warm_lookup is not None:
+                    warm_lookup.result()
+                frontier = next_frontier.localCheckpoint(eager=True).filter(_valid())
             write_fut.result()
             stats = obs.get
             n_scheduled = stats["n"]
-            metrics = {
-                "wave": wave,
-                "scheduled": n_scheduled,
-                "hosts": stats["hosts"],
-            }
+            metrics = {"wave": wave, "scheduled": n_scheduled, "hosts": stats["hosts"]}
             (ckpt / f"wave={wave}._metrics.json").write_text(json.dumps(metrics))
             (ckpt / f"wave={wave}._SUCCESS_WAVE").write_text("ok")
+            done.append(wave)
+            seen_count += n_scheduled
             if n_scheduled == 0:
                 break
-            if seen_mode == "exact":
-                # no distinct (r06): this wave's keys are disjoint from seen
-                # by construction (they survived the anti-join) and unique
-                # within the wave (dedup groupBy), so the union IS the exact
-                # seen set — the distinct was one full seen-set shuffle per
-                # wave for nothing
-                seen = seen.union(out.select("surt_key")).localCheckpoint(
-                    eager=True
-                )
-                seen_count += n_scheduled
-        if bloom_fut is not None:
-            bloom_fut.result()
-        warm_lookup.result()
+        for fut in (bloom_fut, warm_lookup):
+            if fut is not None:
+                fut.result()
     pages_keyed.unpersist()
-    # committed waves only: a wave dir whose write finished but whose marker
-    # never landed (crash in between) is not part of the crawl
-    waves = sorted(
-        int(p.name.split("=")[1]) for p in ckpt.glob("wave=*")
-        if p.is_dir() and (ckpt / f"{p.name}._SUCCESS_WAVE").exists()
-    )
-    return (
-        spark.read.parquet(*[str(ckpt / f"wave={w}") for w in waves])
-        if waves
-        else literal_frame(spark, [], "wave int, url string, surt_key string, host string, hops int, score double")
-    )
-
-
-def last_committed_wave(checkpoint_dir: str) -> int:
-    """Resume point: highest wave with a success marker, or -1."""
-    ckpt = Path(checkpoint_dir)
-    done = [
-        int(p.name.split("=")[1].split(".")[0])
-        for p in ckpt.glob("wave=*._SUCCESS_WAVE")
-    ]
-    return max(done) if done else -1
-
-
-def resume_crawl(
-    spark: SparkSession,
-    seeds: DataFrame,
-    pages: DataFrame,
-    robots: DataFrame,
-    checkpoint_dir: str,
-    max_waves: int = 4,
-    **kwargs,
-) -> DataFrame:
-    """Restart after interruption: rebuild seen-set + frontier from committed
-    waves, continue from the next wave (north_rule resumability)."""
-    last = last_committed_wave(checkpoint_dir)
-    if last < 0:
-        return run_crawl(spark, seeds, pages, robots, checkpoint_dir,
-                         max_waves=max_waves, **kwargs)
-    ckpt = Path(checkpoint_dir)
-    done = spark.read.parquet(*[str(ckpt / f"wave={w}") for w in range(last + 1)])
-    seen = done.select("surt_key").distinct()
-    # bloom mode: resume from the persisted FILTER (written beside each
-    # wave) instead of rebuilding it from every committed wave's keys — but
-    # only a completely written one: the update runs beside the wave's
-    # write and marker, so a crash can leave the directory partial (no
-    # _SUCCESS); run_crawl then rebuilds the filter from ``seen``
-    if kwargs.get("seen_mode") == "bloom":
-        bloom_path = ckpt / f"seen_bloom_wave={last}"
-        if (bloom_path / "_SUCCESS").exists():
-            kwargs = {**kwargs, "initial_bloom": read_bloom(spark, str(bloom_path))}
-    # recompute the frontier produced by the last committed wave
-    _, frontier = crawl_wave(
-        done.filter(F.col("wave") == last).select("url", "surt_key", "host", "hops", "score"),
-        seen.join(done.filter(F.col("wave") == last).select("surt_key"), "surt_key", "left_anti"),
-        pages, robots, **{k: v for k, v in kwargs.items() if k in ("host_budget", "wave_budget")},
-    )
-    return run_crawl(
-        spark, seeds, pages, robots, checkpoint_dir, max_waves=max_waves,
-        start_wave=last + 1, initial_seen=seen, initial_frontier=frontier, **kwargs,
-    )
+    return _read_waves(spark, ckpt, done)

@@ -83,17 +83,23 @@ def partition_of(col, num_partitions: int):
     return F.pmod(F.xxhash64(col), F.lit(num_partitions)).cast("int")
 
 
-def _set_bits(bitmap: np.ndarray, pdf: pd.DataFrame) -> None:
-    """OR the K_HASHES bits of every (_h1, _h2) row of ``pdf`` into
-    ``bitmap`` (writable uint8, power-of-two bit count) in place — the one
-    bit-setting step shared by ``build_bloom`` and ``add_to_bloom``."""
+def _bit_indexes(pdf: pd.DataFrame, bitmap: np.ndarray):
+    """The K_HASHES bits of every (_h1, _h2) row of ``pdf`` in ``bitmap``
+    (uint8, power-of-two bit count), one (byte index, bit in byte) array
+    pair per round: the one index walk shared by setting and probing."""
     h1 = _uint64(pdf["_h1"])
     h2 = _uint64(pdf["_h2"]) | np.uint64(1)  # odd stride covers 2^k bitmap
     mask = np.uint64(len(bitmap) * 8 - 1)
     for i in range(K_HASHES):
         idx = (h1 + np.uint64(i) * h2) & mask
-        np.bitwise_or.at(bitmap, (idx >> np.uint64(3)).astype(np.int64),
-                         (1 << (idx & np.uint64(7))).astype(np.uint8))
+        yield (idx >> np.uint64(3)).astype(np.int64), (idx & np.uint64(7)).astype(np.uint8)
+
+
+def _set_bits(bitmap: np.ndarray, pdf: pd.DataFrame) -> None:
+    """OR the bits of every row of ``pdf`` into ``bitmap`` (writable) in
+    place — shared by ``build_bloom`` and ``add_to_bloom``."""
+    for byte, bit in _bit_indexes(pdf, bitmap):
+        np.bitwise_or.at(bitmap, byte, (1 << bit).astype(np.uint8))
 
 
 def _check_m_bits(m_bits: int | None) -> None:
@@ -292,18 +298,9 @@ def probe_bloom(
                 f"built with {built_parts}"
             )
         bitmap = np.frombuffer(bloom_pdf["bitmap"].iloc[0], dtype=np.uint8)
-        m_bits = len(bitmap) * 8
-        mask = np.uint64(m_bits - 1)
-        h1 = _uint64(cand_pdf["_h1"])
-        h2 = _uint64(cand_pdf["_h2"]) | np.uint64(1)
         hit = np.ones(len(cand_pdf), dtype=bool)
-        for i in range(K_HASHES):
-            idx = (h1 + np.uint64(i) * h2) & mask
-            bits = (
-                bitmap[(idx >> np.uint64(3)).astype(np.int64)]
-                >> (idx & np.uint64(7)).astype(np.uint8)
-            ) & 1
-            hit &= bits.astype(bool)
+        for byte, bit in _bit_indexes(cand_pdf, bitmap):
+            hit &= ((bitmap[byte] >> bit) & 1).astype(bool)
         return cand_pdf[hit][cols] if keep_hits else cand_pdf[~hit][cols]
 
     return (
