@@ -28,6 +28,31 @@ def _arrow_evals(df) -> list[str]:
     return re.findall(r"ArrowEvalPython \[(?:pyUDF: )?([a-zA-Z_0-9]+)\(", plan)
 
 
+def _arrow_udf_calls(df) -> list[list[tuple[str, str, str]]]:
+    """Per ArrowEvalPython node of the EXECUTED plan, its UDF calls as
+    (name, argument text, result id): the same call in two nodes is one
+    UDF evaluated twice."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    nodes = []
+    for m in re.finditer(r"ArrowEvalPython \[", plan):
+        calls, depth, start, i = [], 0, m.end(), m.end()
+        while depth or plan[i] != "]":
+            if plan[i] == "(":
+                depth += 1
+            elif plan[i] == ")":
+                depth -= 1
+            elif plan[i] == "," and not depth:
+                calls.append(plan[start:i].strip())
+                start = i + 1
+            i += 1
+        calls.append(plan[start:i].strip())
+        nodes.append([
+            re.fullmatch(r"(?:pyUDF: )?(\w+)\((.*)\)#(\d+)", c, re.S).groups()
+            for c in calls
+        ])
+    return nodes
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     rows = [
@@ -152,31 +177,36 @@ class TestFrontierPlanSingleEval:
         assert evals.count("host_of") == 0, evals
         pages_keyed.unpersist()
 
-    def test_content_records_two_surt_evals_pinned(self, spark):
-        """content_records' zim_path null filter over the surt Project is a
-        KNOWN, A/B'd 2x-eval (records.py): asNondeterministic gives one eval
-        but blocks consumer predicates from pushing through to the scan, and
-        the measured bench delta is a wash because surt is a microsecond
-        kernel next to the pairing window. Pin the count at exactly 2: a
-        third eval means a new bug; a drop to 1 means the trade-off was
-        silently re-decided. Re-A/B trigger: if the fuzzy-rule battery in
-        kernels/surt.py grows materially, re-measure before keeping 2."""
+    def test_content_records_one_surt_eval_per_url(self, spark):
+        """content_records canonicalizes the record URL exactly once, before
+        the pairing shuffle, and evaluates each UDF call in one
+        ArrowEvalPython node: two nodes, one each side of the shuffle.
+        ``zim_path`` is a JVM pick of the pre-shuffle keys, so its null
+        filter re-runs nothing (SURVEY §4.2). A second surt_key evaluation
+        holds a second Python worker per task, whatever the kernel costs."""
         from warc2zim_spark.operators.records import content_records
 
         records = spark.createDataFrame(
             [
                 (0, 0, "response", "https://a.example/p1", 200, "text/html",
-                 None, None, None, None, None, None, 10),
+                 None, None, None, None, None, None, None, None, 10),
             ],
             "file_seq int, rec_seq long, rec_type string, url string, "
             "status int, mime string, record_id string, concurrent_to string, "
+            "http_location string, refers_to_url string, "
             "req_method string, req_mime string, req_body binary, "
             "req_content_length long, payload_len long",
         )
         df = content_records(records)
         df.count()
-        evals = _arrow_evals(df)
-        assert evals.count("surt_key") == 2, evals
+        nodes = _arrow_udf_calls(df)
+        calls = [c for node in nodes for c in node]
+        ids = [result_id for _, _, result_id in calls]
+        assert len(ids) == len(set(ids)), nodes  # each call in one node
+        surt_args = [args for name, args, _ in calls if name == "surt_key"]
+        assert sum(bool(re.search(r"\burl#", a)) for a in surt_args) == 1, nodes
+        assert not any("effective_url#" in a for a in surt_args), nodes
+        assert len(nodes) == 2, nodes  # one each side of the pairing shuffle
 
     def test_rewrite_distributed_single_eval_per_stage(self, spark):
         """rewritten_pages_distributed (the 10^10-path rewrite shape): the
@@ -238,9 +268,9 @@ def _ancestors(nodes, i) -> list[str]:
     return out
 
 
-def _executed_plans(spark, fn) -> list[str]:
-    """Formatted physical plans of the SQL executions ``fn()`` started, on
-    any thread, eager checkpoints included (Spark's SQL status store)."""
+def _executions(spark, fn) -> list:
+    """The SQL executions ``fn()`` started, on any thread, eager checkpoints
+    included (Spark's SQL status store)."""
     store = spark._jsparkSession.sharedState().statusStore()
 
     def executions():
@@ -250,9 +280,44 @@ def _executed_plans(spark, fn) -> list[str]:
     before = max((e.executionId() for e in executions()), default=-1)
     fn()
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    return [
-        e.physicalPlanDescription() for e in executions() if e.executionId() > before
-    ]
+    return [e for e in executions() if e.executionId() > before]
+
+
+def _executed_plans(spark, fn) -> list[str]:
+    """Formatted physical plans of the SQL executions ``fn()`` started."""
+    return [e.physicalPlanDescription() for e in _executions(spark, fn)]
+
+
+def _plan_graph(spark, execution) -> tuple[dict, dict, dict]:
+    """An execution's final physical plan as the SQL UI draws it → (node
+    names, children, parents) by node id. A cache scan's children are the
+    cached relation's build plan."""
+    graph = spark._jsparkSession.sharedState().statusStore().planGraph(
+        execution.executionId()
+    )
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    names = {n.id(): n.name() for n in seq(graph.allNodes())}
+    children, parents = {}, {}
+    for edge in seq(graph.edges()):  # child → parent
+        children.setdefault(edge.toId(), []).append(edge.fromId())
+        parents.setdefault(edge.fromId(), []).append(edge.toId())
+    return names, children, parents
+
+
+def _reaches(start, links, names, target, barrier=lambda name: False) -> bool:
+    """Whether a node named ``target`` is reachable from ``start`` along
+    ``links`` without passing through a node ``barrier`` accepts."""
+    stack = list(links.get(start, []))
+    while stack:
+        node = stack.pop()
+        if names[node] == target:
+            return True
+        if not barrier(names[node]):
+            stack.extend(links.get(node, []))
+    return False
 
 
 def _exchange_over_scan(plan: str, location: str) -> bool:
@@ -409,3 +474,46 @@ class TestDriversBuildNoListFrames:
                 continue_on_error=True, **kwargs,
             )
         assert metrics["items"] > 0
+
+
+class TestConvertPythonNodes:
+    """Python workers run kernels only, once per record: each
+    ArrowEvalPython node holds one worker per task, so a stage that chains
+    two holds two (a filter over a UDF column re-runs the UDF in a second
+    node, SURVEY §4.2). Every plan of a ``run_pipeline`` call is checked,
+    the branch threads' included."""
+
+    def test_run_pipeline_one_python_node_per_stage(self, spark, webdata, tmp_path):
+        from warc2zim_spark.plans.pipeline import run_pipeline
+
+        executions = _executions(spark, lambda: run_pipeline(
+            spark, webdata, str(tmp_path / "out"), name="n", continue_on_error=True,
+        ))
+
+        def stage_boundary(name):
+            return "Exchange" in name or name == "InMemoryTableScan"
+
+        sinks = {}
+        for e in executions:
+            names, children, parents = _plan_graph(spark, e)
+            python = [n for n, name in names.items() if name == "ArrowEvalPython"]
+            chained = [
+                n for n in python
+                if _reaches(n, children, names, "ArrowEvalPython", stage_boundary)
+            ]
+            assert not chained, e.physicalPlanDescription()
+            m = re.search(
+                r"^Arguments: file:\S*/(\w+), false, Parquet",
+                e.physicalPlanDescription(), re.M,
+            )
+            if m:
+                sinks[m.group(1)] = (names, children, parents, python)
+        assert {"redirects", "expected", "aliases"} <= set(sinks), sorted(sinks)
+        for sink in ("redirects", "expected", "aliases"):
+            names, children, parents, python = sinks[sink]
+            # any Python node in these plans is the record pass: inside the
+            # cached content stream's build, reading no cache itself
+            for n in python:
+                assert _reaches(n, parents, names, "InMemoryTableScan"), sink
+                assert not _reaches(n, children, names, "InMemoryTableScan"), sink
+

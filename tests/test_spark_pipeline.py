@@ -225,6 +225,95 @@ class TestPairing:
             assert got.get(key) == urlkey, key
 
 
+    def test_keys_derived_in_the_record_pass(self, spark):
+        """``zim_path`` is picked from the two pre-shuffle canonicalizations
+        (the record URL's, and the paired request's urlkey's), and
+        ``location_path`` / ``refers_to_path`` are derived after the
+        shuffle: per content row they equal the kernels applied to the
+        effective url, the Location and the Refers-To url. POST and PUT
+        pairs in both orders, an unpaired request, non-http rows, revisits
+        with and without Refers-To, and redirects with an empty Location."""
+        from urllib.parse import urljoin
+
+        from warc2zim_spark.kernels.posturl import canonical_request_url
+        from warc2zim_spark.kernels.surt import canonicalize
+
+        form = ("application/x-www-form-urlencoded", b"a=1&b=two")
+        rows = [
+            # POST: request before its response, which redirects
+            (0, 1, "request", "https://p.example/form", "q0", None, None, None, None, "POST", *form),
+            (0, 2, "response", "https://p.example/form", "r0", "q0", 302, "/done?x=1", None, None, None, None),
+            # PUT: response before its request
+            (1, 1, "response", "https://p.example/put", "r1", None, 200, None, None, None, None, None),
+            (1, 2, "request", "https://p.example/put", "q1", "r1", None, None, None, "PUT", "application/json", b'{"k": [1, 2]}'),
+            # an unpaired POST request, then a response it does not pair with
+            (2, 1, "request", "https://p.example/lonely", "q2", None, None, None, None, "POST", "text/plain", b"hello"),
+            (2, 2, "response", "https://p.example/other", "r2", "q9", 200, None, None, None, None, None),
+            # non-http and empty urls, a warcinfo row
+            (3, 1, "response", "ftp://p.example/file", "r3", None, 200, None, None, None, None, None),
+            (3, 2, "response", "intent://p.example/app", "r4", None, 301, "/x", None, None, None, None),
+            (3, 3, "response", "", "r5", None, 200, None, None, None, None, None),
+            (3, 4, "warcinfo", None, "w0", None, None, None, None, None, None, None),
+            # revisits: with, without and self Refers-To, non-http Refers-To
+            (4, 1, "revisit", "https://p.example/again", "v0", None, 200, None, "https://p.example/orig", None, None, None),
+            (4, 2, "revisit", "https://p.example/again2", "v1", None, 200, None, None, None, None, None),
+            (4, 3, "revisit", "https://p.example/self", "v2", None, 200, None, "https://p.example/self", None, None, None),
+            (4, 4, "revisit", "https://p.example/ftpref", "v3", None, 200, "/loc", "ftp://p.example/y", None, None, None),
+            # redirects, one with an empty Location, one with padding
+            (5, 1, "response", "http://p.example/a", "r6", None, 301, "/b", None, None, None, None),
+            (5, 2, "response", "http://p.example/c", "r7", None, 302, "", None, None, None, None),
+            (5, 3, "response", "http://p.example/d", "r8", None, 307, "  https://q.example/e  ", None, None, None, None),
+            (5, 4, "response", "http://p.example/f", "r9", None, 200, None, None, None, None, None),
+        ]
+        records = spark.createDataFrame(
+            rows,
+            "file_seq long, rec_seq long, rec_type string, url string, "
+            "record_id string, concurrent_to string, status int, "
+            "http_location string, refers_to_url string, req_method string, "
+            "req_mime string, req_body binary",
+        ).withColumn(
+            "req_content_length", F.length("req_body").cast("long")
+        ).withColumn("mime", F.lit("text/html")).withColumn("payload_len", F.lit(1).cast("long"))
+        got = {
+            (r.file_seq, r.rec_seq): r
+            for r in content_records(records).collect()
+        }
+
+        by_pos = {(r[0], r[1]): r for r in rows}
+        paired = {(0, 2): (0, 1), (1, 1): (1, 2)}
+        expected = {}
+        for pos, r in by_pos.items():
+            rec_type, url, location, refers = r[2], r[3], r[7], r[8]
+            if rec_type not in ("response", "revisit") or not url or not url.startswith(("http://", "https://")):
+                continue
+            eff = url
+            if pos in paired:
+                q = by_pos[paired[pos]]
+                eff = canonical_request_url(q[3], q[9], q[10], q[11], len(q[11]))
+            if canonicalize(eff) is None:
+                continue
+            loc = None
+            if rec_type == "response" and location:
+                loc = canonicalize(urljoin(eff, location.strip()))
+            expected[pos] = (
+                eff, canonicalize(eff), loc,
+                canonicalize(refers) if rec_type == "revisit" and refers else None,
+            )
+        assert set(got) == set(expected)
+        for pos, want in expected.items():
+            r = got[pos]
+            assert (r.effective_url, r.zim_path, r.location_path, r.refers_to_path) == want, pos
+        # the fixture exercises every branch of the derivation
+        assert got[(0, 2)].effective_url != got[(0, 2)].url
+        assert got[(1, 1)].effective_url != got[(1, 1)].url
+        assert got[(2, 2)].effective_url == got[(2, 2)].url
+        assert got[(0, 2)].location_path == "p.example/done?x=1"
+        assert got[(5, 2)].location_path is None
+        assert got[(4, 1)].refers_to_path == "p.example/orig"
+        assert got[(4, 2)].refers_to_path is None
+        assert got[(4, 4)].location_path is None and got[(4, 4)].refers_to_path is None
+
+
 class TestAliases:
     def test_revisit_aliases(self, content):
         items = items_table(content)
@@ -327,10 +416,14 @@ class TestMainPageRedirect:
             (0, 10, "response", 301, "https://m.example/ring-1", "m.example/ring-1", "/ring-2"),
             (0, 11, "response", 307, "https://m.example/ring-2", "m.example/ring-2", "/ring-1"),
         ]
-        return spark.createDataFrame(
-            rows,
-            "file_seq long, rec_seq long, rec_type string, status int, "
-            "effective_url string, zim_path string, http_location string",
+        from warc2zim_spark.operators.records import with_branch_paths
+
+        return with_branch_paths(
+            spark.createDataFrame(
+                rows,
+                "file_seq long, rec_seq long, rec_type string, status int, "
+                "effective_url string, zim_path string, http_location string",
+            ).withColumn("refers_to_url", F.lit(None).cast("string"))
         )
 
     def _main(self, spark, path, url):

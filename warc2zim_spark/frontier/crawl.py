@@ -73,8 +73,8 @@ _WAVE_SCHEMA = "wave int, url string, surt_key string, host string, hops int, sc
 
 # rows whose url failed canonicalization or host extraction (UDFs return
 # null) — applied AFTER each frontier checkpoint so the filter reads the
-# materialized columns: a Filter directly over a UDF Project makes Catalyst
-# evaluate the UDF once for the predicate and once for the projection
+# materialized columns (the UDF rule, SURVEY §4.2: a filter over a UDF
+# column re-runs the UDF in a second Python node)
 def _valid():
     return F.col("surt_key").isNotNull() & F.col("host").isNotNull()
 

@@ -1,9 +1,9 @@
 """JVM-side Column-expression builders — the no-UDF hot path.
 
 Everything here compiles to Catalyst expressions (whole-stage codegen):
-status gating, mime/charset projection, rewrite-mode classification, text
-quality features. Keeping these out of Python keeps the scan→filter pipeline
-fully pushed down (SURVEY §4.2).
+status gating, rewrite-mode classification, text quality features. Keeping
+these out of Python keeps the scan→filter pipeline fully pushed down
+(SURVEY §4.2).
 """
 
 from __future__ import annotations
@@ -29,21 +29,6 @@ def is_redirect_status(status: Column) -> Column:
 def is_http_url(url: Column) -> Column:
     """P6 — converter.py:501-503."""
     return url.startswith("http://") | url.startswith("https://")
-
-
-def mime_of(content_type: Column) -> Column:
-    """P3 — utils.py:136-138: Content-Type up to ';'."""
-    return F.split(F.coalesce(content_type, F.lit("")), ";").getItem(0)
-
-
-def charset_of(content_type: Column) -> Column:
-    """P4 — utils.py:14-17,149-152 (regex quirk [a-wA-Z0-9_\\-] preserved)."""
-    extracted = F.regexp_extract(
-        F.coalesce(content_type, F.lit("")),
-        r"(charset|encoding)=['\"]?([a-wA-Z0-9_\-]+)",
-        2,
-    )
-    return F.when(extracted != "", extracted)
 
 
 def _mime_mode(mime: Column, zim_path: Column, method: Column) -> Column:

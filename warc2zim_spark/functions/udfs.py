@@ -82,15 +82,18 @@ def resolve_url(base_urls: pd.Series, hrefs: pd.Series) -> pd.Series:
     return pd.Series([join_href(b, h) for b, h in zip(base_urls, hrefs)])
 
 
-@pandas_udf(StringType())
-def canonical_post_url(
+@pandas_udf(
+    StructType([StructField("urlkey", StringType()), StructField("zim_path", StringType())])
+)
+def canonical_post_keys(
     urls: pd.Series, methods: pd.Series, mimes: pd.Series,
     bodies: pd.Series, lengths: pd.Series,
-) -> pd.Series:
-    """POST/PUT urlkey synthesis — J2 (kernels/posturl.py)."""
-    out = []
+) -> pd.DataFrame:
+    """POST/PUT urlkey synthesis — J2 (kernels/posturl.py) — and the
+    urlkey's canonical ZimPath, each kernel once per row."""
+    keys = []
     for url, method, mime, body, length in zip(urls, methods, mimes, bodies, lengths):
-        out.append(
+        keys.append(
             _posturl.canonical_request_url(
                 url if url is not None else None,
                 method if method is not None else None,
@@ -99,7 +102,10 @@ def canonical_post_url(
                 int(length) if length is not None and not pd.isna(length) else None,
             )
         )
-    return pd.Series(out)
+    return pd.DataFrame({
+        "urlkey": keys,
+        "zim_path": [_surt.canonicalize(k) if k is not None else None for k in keys],
+    })
 
 
 @pandas_udf(StringType())

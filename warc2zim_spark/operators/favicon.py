@@ -45,6 +45,7 @@ from pyspark.sql.functions import pandas_udf
 
 from warc2zim_spark.functions import udfs
 from warc2zim_spark.functions.expressions import literal_frame
+from warc2zim_spark.operators.metadata import transparent_png
 from warc2zim_spark.operators.records import fetch_payloads
 
 ZIM_ILLUSTRATION_SIZE = 48
@@ -129,7 +130,10 @@ def favicon_payloads(
 
 def ranked_icons(captured: DataFrame) -> DataFrame:
     """(icon_url, fmt, width, height, pref_rank) — the A9 comparator over
-    sized captures; unparseable payloads drop (failed PIL open)."""
+    sized captures; unparseable payloads drop (failed PIL open). They are
+    ranked last and dropped after the ranking window: a filter over the
+    sizing UDF's output would run the UDF a second time, below the fetch
+    join, over every record's payload (SURVEY §4.2)."""
     sized = captured.select(
         "icon_url", "icon_path", "payload", _image_dims(F.col("payload")).alias("d")
     ).select(
@@ -137,37 +141,24 @@ def ranked_icons(captured: DataFrame) -> DataFrame:
         F.col("d.fmt").alias("fmt"),
         F.col("d.width").alias("width"),
         F.col("d.height").alias("height"),
-    ).filter(F.col("fmt").isNotNull() & F.col("width").isNotNull())
+    )
+    parsed = F.col("fmt").isNotNull() & F.col("width").isNotNull()
     m = F.least(F.col("width"), F.col("height"))
     tier = F.when(m == ZIM_ILLUSTRATION_SIZE, F.lit(2)).when(
         m > ZIM_ILLUSTRATION_SIZE, F.lit(1)
     ).otherwise(F.lit(0))
     within = F.when(m == ZIM_ILLUSTRATION_SIZE, F.lit(0)).otherwise(m)
-    w = Window.orderBy(F.desc("tier"), F.desc("within"), F.asc("icon_url"))
+    w = Window.orderBy(
+        F.desc("parsed"), F.desc("tier"), F.desc("within"), F.asc("icon_url")
+    )
     return (
-        sized.withColumn("tier", tier)
+        sized.withColumn("parsed", parsed)
+        .withColumn("tier", tier)
         .withColumn("within", within)
         .withColumn("pref_rank", F.row_number().over(w))
-        .drop("tier", "within")
+        .filter(F.col("parsed"))
+        .drop("parsed", "tier", "within")
     )
-
-
-@pandas_udf("binary")
-def _to_illustration(payloads: pd.Series, fmts: pd.Series, widths: pd.Series,
-                     heights: pd.Series) -> pd.Series:
-    """Conversion seam: PNG already 48×48 → byte-identical passthrough
-    (the reference's own passthrough branch); everything else would run
-    convert_svg2png/convert_image + resize + optimize (PIL/cairosvg —
-    absent) → deterministic transparent stand-in."""
-    from warc2zim_spark.operators.metadata import transparent_png
-
-    out = []
-    for p, f, w, h in zip(payloads, fmts, widths, heights):
-        if f == "PNG" and w == ZIM_ILLUSTRATION_SIZE and h == ZIM_ILLUSTRATION_SIZE:
-            out.append(bytes(p))
-        else:
-            out.append(transparent_png(ZIM_ILLUSTRATION_SIZE))
-    return pd.Series(out)
 
 
 def best_capture(
@@ -177,15 +168,25 @@ def best_capture(
 ) -> DataFrame:
     """The rank-1 capture among ``candidates`` (``favicon_payloads``) →
     1-row (icon_url, fmt, width, height, illustration); 0 rows when none is
-    captured or parses."""
+    captured or parses.
+
+    Conversion seam, a JVM expression: PNG already 48×48 → byte-identical
+    passthrough (the reference's own passthrough branch); everything else
+    would run convert_svg2png/convert_image + resize + optimize
+    (PIL/cairosvg — absent) → deterministic transparent stand-in."""
+    passthrough = (
+        (F.col("fmt") == "PNG")
+        & (F.col("width") == ZIM_ILLUSTRATION_SIZE)
+        & (F.col("height") == ZIM_ILLUSTRATION_SIZE)
+    )
     return (
         ranked_icons(favicon_payloads(content, candidates, records))
         .filter(F.col("pref_rank") == 1)
         .select(
             "icon_url", "fmt", "width", "height",
-            _to_illustration(
-                F.col("payload"), F.col("fmt"), F.col("width"), F.col("height")
-            ).alias("illustration"),
+            F.when(passthrough, F.col("payload"))
+            .otherwise(F.lit(transparent_png(ZIM_ILLUSTRATION_SIZE)))
+            .alias("illustration"),
         )
     )
 

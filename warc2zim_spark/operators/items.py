@@ -112,15 +112,17 @@ def items_table(content: DataFrame, include_domains: list[str] | None = None) ->
 
 def revisit_aliases(content: DataFrame, added_items: DataFrame) -> DataFrame:
     """J4/S6 — alias table: first revisit per path whose Refers-To differs
-    from its own URL, minus paths already added as items."""
+    from its own URL, minus paths already added as items. The target is
+    the stream's ``refers_to_path`` (``records.with_branch_paths``),
+    canonicalized in the record pass, so the sink runs no Python."""
     revisits = (
         content.filter(F.col("rec_type") == "revisit")
-        .filter(F.col("refers_to_url").isNotNull())
         .filter(F.col("refers_to_url") != F.col("url"))
-        .withColumn("target_path", udfs.surt_key(F.col("refers_to_url")))
-        .filter(F.col("target_path").isNotNull())
+        .filter(F.col("refers_to_path").isNotNull())
     )
-    deduped = first_wins(revisits).select("zim_path", "target_path")
+    deduped = first_wins(revisits).select(
+        "zim_path", F.col("refers_to_path").alias("target_path")
+    )
     return deduped.join(
         added_items.select("zim_path"), "zim_path", "left_anti"
     ).select(F.col("zim_path").alias("alias_path"), "target_path")

@@ -64,35 +64,42 @@ def pair_requests(records: DataFrame) -> DataFrame:
     Arrow round-trip) or joined a broadcast subquery back (recomputed the
     window twice); both were the pipeline's hottest stage.
 
-    Returns the input plus ``p_method`` / ``p_urlkey`` on response rows
-    (null when unpaired). Non-response rows pass through unchanged.
+    The same pre-shuffle Arrow pass canonicalizes: ``req_zim`` is the
+    urlkey's ZimPath (the same UDF call returns both), ``url_zim`` the
+    ZimPath of every row that can become a content row (response/revisit,
+    http(s) — every other row sends null to the kernel). So the canonical
+    path rides the shuffle as a string, like the urlkey, and no UDF runs
+    under the content filters (SURVEY §4.2: a filter over a UDF column
+    re-runs the UDF).
+
+    Returns the input plus ``url_zim``, and ``p_method`` / ``p_urlkey`` /
+    ``p_zim`` on response rows (null when unpaired). Non-response rows pass
+    through unchanged.
     """
     synth = (
         (F.col("rec_type") == "request")
         & F.col("req_method").isin("POST", "PUT")
         & F.col("url").isNotNull()
     )
-    records = records.withColumn(
-        "req_urlkey",
-        F.when(
-            synth,
-            udfs.canonical_post_url(
-                F.col("url"), F.col("req_method"), F.col("req_mime"),
+    keyable = F.col("rec_type").isin("response", "revisit") & is_http_url(F.col("url"))
+    records = (
+        records.withColumn(
+            "_post",
+            udfs.canonical_post_keys(
+                F.when(synth, F.col("url")), F.col("req_method"), F.col("req_mime"),
                 F.col("req_body"), F.col("req_content_length"),
             ),
-        ),
+        )
+        .withColumn("req_urlkey", F.col("_post.urlkey"))
+        .withColumn("req_zim", F.col("_post.zim_path"))
+        .withColumn("url_zim", udfs.surt_key(F.when(keyable, F.col("url"))))
+        .drop("_post")
     )
+    picked = ("rec_type", "url", "record_id", "concurrent_to",
+              "req_method", "req_urlkey", "req_zim")
     w = Window.partitionBy("file_seq").orderBy("rec_seq")
-    prev = {
-        c: F.lag(c).over(w)
-        for c in ("rec_type", "url", "record_id", "concurrent_to",
-                  "req_method", "req_urlkey")
-    }
-    nxt = {
-        c: F.lead(c).over(w)
-        for c in ("rec_type", "url", "record_id", "concurrent_to",
-                  "req_method", "req_urlkey")
-    }
+    prev = {c: F.lag(c).over(w) for c in picked}
+    nxt = {c: F.lead(c).over(w) for c in picked}
     prev_is_req = (
         (prev["rec_type"] == "request")
         & (prev["url"] == F.col("url"))
@@ -112,14 +119,46 @@ def pair_requests(records: DataFrame) -> DataFrame:
     return (
         records.withColumn("p_method", pick("req_method"))
         .withColumn("p_urlkey", pick("req_urlkey"))
+        .withColumn("p_zim", pick("req_zim"))
+        .drop("req_urlkey", "req_zim")
     )
 
 
 def with_effective_url(paired: DataFrame) -> DataFrame:
     """P1 — effective_url = paired urlkey if synthesized else
-    WARC-Target-URI (utils.py:52-57)."""
+    WARC-Target-URI (utils.py:52-57); ``zim_path`` is its canonical path,
+    picked from the two pre-shuffle canonicalizations (a JVM column)."""
     return paired.withColumn(
         "effective_url", F.coalesce(F.col("p_urlkey"), F.col("url"))
+    ).withColumn(
+        "zim_path",
+        F.when(F.col("p_urlkey").isNotNull(), F.col("p_zim")).otherwise(F.col("url_zim")),
+    ).drop("p_zim", "url_zim")
+
+
+def with_branch_paths(content: DataFrame) -> DataFrame:
+    """The canonical paths the redirect and alias branches key on, added to
+    a content stream: ``location_path`` = canonicalize(urljoin(effective_url,
+    Location)) on response rows with a non-empty Location (converter.py:
+    524-526), ``refers_to_path`` = canonicalize(refers_to_url) on revisit
+    rows (converter.py:446-457); null elsewhere. Neither input depends on
+    another UDF's output, so both kernels run in the record pass's one
+    post-shuffle Arrow node (beside the failure probe's), and
+    ``redirects._edge_rows`` and ``items.revisit_aliases`` run no Python.
+    A hand-built content frame gains the columns through this function."""
+    located = (
+        (F.col("rec_type") == "response")
+        & F.col("http_location").isNotNull()
+        & (F.col("http_location") != "")
+    )
+    return content.withColumn(
+        "location_path",
+        udfs.resolve_redirect_key(
+            F.when(located, F.col("effective_url")), F.when(located, F.col("http_location"))
+        ),
+    ).withColumn(
+        "refers_to_path",
+        udfs.surt_key(F.when(F.col("rec_type") == "revisit", F.col("refers_to_url"))),
     )
 
 
@@ -128,8 +167,10 @@ def content_records(
 ) -> DataFrame:
     """P5/P6/P12 — the processable record stream: response/revisit rows with a
     non-empty HTTP(S) URL (converter.py:943-956), effective url + canonical
-    ``zim_path`` attached. Filters are plain Catalyst predicates that push to
-    the scan; the surt UDF runs after the cheap filters only.
+    ``zim_path`` attached, plus ``with_branch_paths``' ``location_path`` and
+    ``refers_to_path``. Filters are plain Catalyst predicates that push to
+    the scan; every UDF input is a JVM column, so the UDFs run once per
+    record: one Arrow node before the pairing shuffle, one after it.
 
     ``payload_len`` is an ingest-time column (datagen writes it, like a real
     CDX index would) and the wide ``payload`` binary column is DROPPED unless
@@ -158,18 +199,10 @@ def content_records(
         if not with_head and "payload_head" in with_len.columns:
             with_len = with_len.drop("payload_head")
     paired = with_effective_url(pair_requests(with_len))
-    return (
+    return with_branch_paths(
         paired.filter(F.col("rec_type").isin("response", "revisit"))
         .filter(F.col("url").isNotNull() & (F.col("url") != ""))
         .filter(is_http_url(F.col("url")))
-        # known 2x-eval: this filter over the surt Project makes Catalyst run
-        # the UDF for predicate AND projection. Measured alternatives lose:
-        # asNondeterministic() gives one eval but blocks every consumer
-        # predicate from pushing through this Project to the scan (the
-        # operator's documented contract), and the A/B at bench scale is a
-        # wash (8.35 vs 8.48 s) because surt is a microsecond kernel — the
-        # pairing window + posturl dominate the stage.
-        .withColumn("zim_path", udfs.surt_key(F.col("effective_url")))
         .filter(F.col("zim_path").isNotNull())
     )
 

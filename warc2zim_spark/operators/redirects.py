@@ -24,7 +24,6 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from warc2zim_spark.functions import udfs
 from warc2zim_spark.functions.expressions import is_redirect_status
 
 MAX_CHAIN = 32  # chains longer than this are treated as loops and dropped
@@ -32,21 +31,18 @@ MAX_CHAIN = 32  # chains longer than this are treated as loops and dropped
 
 def _edge_rows(content_records: DataFrame, status_filter=None) -> DataFrame:
     """Every candidate edge row (src_path, tgt_path, file_seq, rec_seq),
-    before the first-wins pick."""
+    before the first-wins pick. The target is the stream's
+    ``location_path`` (``records.with_branch_paths``), resolved in the
+    record pass, so no edge derivation runs Python."""
     pred = status_filter if status_filter is not None else is_redirect_status
     return (
-        content_records.filter(F.col("rec_type") == "response")
-        .filter(pred(F.col("status")))
-        .filter(F.col("http_location").isNotNull() & (F.col("http_location") != ""))
-        .withColumn(
-            "tgt_path",
-            udfs.resolve_redirect_key(F.col("effective_url"), F.col("http_location")),
-        )
-        .filter(F.col("tgt_path").isNotNull())
-        .filter(F.col("tgt_path") != F.col("zim_path"))
+        content_records.filter(pred(F.col("status")))
+        .filter(F.col("location_path").isNotNull())
+        .filter(F.col("location_path") != F.col("zim_path"))
         .select(
             F.col("zim_path").alias("src_path"),
-            "tgt_path", "file_seq", "rec_seq",
+            F.col("location_path").alias("tgt_path"),
+            "file_seq", "rec_seq",
         )
     )
 

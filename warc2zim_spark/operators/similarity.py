@@ -183,9 +183,9 @@ def lsh_topk(
         F.col("_dvec").alias("c_vec"),
         F.col("_norm").alias("c_norm"),
         # *_outer: the signature array is fixed-length (one slot per table),
-        # and plain posexplode's implicit size>0 guard is a predicate on the
-        # UDF output — Catalyst then evaluates the UDF twice per side
-        # (measured: 4 ArrowEvalPython in the e_ann_lsh plan, 2 after this)
+        # and plain posexplode's implicit size>0 guard is a filter over the
+        # UDF column (the UDF rule, SURVEY §4.2) — measured: 4
+        # ArrowEvalPython in the e_ann_lsh plan, 2 after this
         F.posexplode_outer(sig_udf(F.col("_dvec"))).alias("table_no", "bucket"),
     )
     q_base = with_norm(queries, vec_col).select(

@@ -16,32 +16,6 @@ from warc2zim_spark.functions import udfs
 from warc2zim_spark.functions.expressions import quality_columns, token_count_ws
 
 
-def text_profile(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(doc_id, n_chars, n_tokens, punct_ratio, alpha_ratio) — JVM-only."""
-    q = quality_columns(F.col(text_col))
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        q["n_chars"].alias("n_chars"),
-        q["n_tokens"].alias("n_tokens"),
-        q["punct_ratio"].alias("punct_ratio"),
-        q["alpha_ratio"].alias("alpha_ratio"),
-    )
-
-
-def token_counts(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        token_count_ws(F.col(text_col)).cast("long").alias("n_tokens_ws"),
-    )
-
-
-def language_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        udfs.langid(F.col(text_col)).alias("lang_pred"),
-    )
-
-
 def repetition_columns(text_col) -> dict:
     """Gopher-style repetition signals as pure JVM array expressions (Rae
     et al. 2021 §A1.1 repetition filters, re-expressed over Spark arrays —

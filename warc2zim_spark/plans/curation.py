@@ -81,9 +81,8 @@ def curate_corpus(
     # Inner join (not semi) carries lang_pred forward for the sampler;
     # gated_ids has one row per doc_id so the row set is identical.
     # checkpoint the stats frame before gating: the gates are predicates
-    # over text_stats' outputs, and a Filter directly over the UDF-bearing
-    # Project would run the langid Arrow pass once for the predicate and
-    # once for the lang_pred projection carried to the sampler
+    # over text_stats' outputs, langid's among them (the UDF rule, SURVEY
+    # §4.2: a filter over a UDF column re-runs the UDF in a second node)
     stats = text_stats(docs).localCheckpoint(eager=False)
     gated_ids = stats.filter(
         (F.col("n_tokens_ws") >= min_quality_tokens)

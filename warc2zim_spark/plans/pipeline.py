@@ -87,7 +87,11 @@ def run_pipeline(
       a narrow content stream that is cached together with each record's
       failure ``stage``/``reason`` (``with_failure_reason`` over the 1-KiB
       ``payload_head``, which is dropped once probed); the fails sink is a
-      filter of it. Only a decode config fallible past the head (a narrowed
+      filter of it. Every Python kernel runs there, once per record, in
+      two Arrow nodes, one each side of the pairing shuffle: the stream
+      also carries each redirect's ``location_path`` and each revisit's
+      ``refers_to_path``, so branch (a) and the ``aliases`` sink run no
+      Python. Only a decode config fallible past the head (a narrowed
       ``charsets_to_try``, or ``header_bytes`` > 1024) runs its own probe
       (``quarantined_records``), the one path that reads full payloads.
     * The redirect fixpoint runs once; both the redirects and the expected
