@@ -5,7 +5,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from warc2zim_spark.frontier.crawl import last_committed_wave, run_crawl
+from warc2zim_spark.frontier.crawl import committed_waves, run_crawl
 
 
 @pytest.fixture(scope="module")
@@ -73,7 +73,7 @@ class TestResume:
             spark, seeds, pages, robots, str(tmp_path / "partial"),
             max_waves=2, host_budget=4, wave_budget=50,
         )
-        assert last_committed_wave(str(tmp_path / "partial")) == 1
+        assert committed_waves(str(tmp_path / "partial"))[-1] == 1
         resumed = run_crawl(
             spark, seeds, pages, robots, str(tmp_path / "partial"),
             max_waves=3, host_budget=4, wave_budget=50,
@@ -93,7 +93,7 @@ class TestResume:
             [(2, "https://stale.example/x", "stale.example/x", "stale.example", 9, 0.5)],
             "wave int, url string, surt_key string, host string, hops int, score double",
         ).write.parquet(str(ckpt / "wave=2"))
-        assert last_committed_wave(str(ckpt)) == 1
+        assert committed_waves(str(ckpt))[-1] == 1
         resumed = run_crawl(
             spark, seeds, pages, robots, str(ckpt),
             max_waves=2, host_budget=4, wave_budget=50,
@@ -131,7 +131,7 @@ class TestResume:
             "wave int, url string, surt_key string, host string, hops int, score double",
         ).write.parquet(str(ckpt / "wave=2"))
         resumed = run_crawl(spark, seeds, pages, robots, str(ckpt), **opts).collect()
-        assert last_committed_wave(str(ckpt)) == 2
+        assert committed_waves(str(ckpt))[-1] == 2
         assert all(r.surt_key != "stale.example/x" for r in resumed)
         assert schedule_key(resumed) == schedule_key(full)
 
@@ -162,11 +162,20 @@ def _analyzed(df) -> str:
     return df._jdf.queryExecution().analyzed().toString()
 
 
+def _physical(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+_TOPK_THRESHOLD = "spark.sql.execution.topKSortFallbackThreshold"
+_BROADCAST_THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
 class TestEnvCaps:
-    def test_caps_read_at_call_time(self, spark, monkeypatch):
-        """A changed cap takes effect on the next call, without a re-import:
-        the top-k leaves orderBy+limit for the windowed rank, and the fetch
-        join loses its broadcast hint."""
+    def test_caps_read_at_call_time(self, spark):
+        """The crawl's plan thresholds are the session's Spark confs, read
+        on each call: a lowered topKSortFallbackThreshold turns the next
+        top-k from TakeOrderedAndProject into Spark's sort fallback, and a
+        disabled autoBroadcastJoinThreshold drops the fetch join's hint."""
         from warc2zim_spark.frontier.crawl import _normalize_cols, _valid, crawl_wave
         from warc2zim_spark.frontier.politeness import prioritize
 
@@ -190,22 +199,27 @@ class TestEnvCaps:
             topk = prioritize(cands, wave_budget=1)
             _, nxt = crawl_wave(frontier, seen, pages, robots, wave_budget=1)
             return (
-                "GlobalLimit" in _analyzed(topk),
+                "TakeOrderedAndProject" in _physical(topk),
                 "strategy=broadcast" in _analyzed(nxt),
             )
 
-        monkeypatch.delenv("W2ZS_TOPK_LIMIT_MAX", raising=False)
-        monkeypatch.delenv("W2ZS_FETCH_BROADCAST_MAX", raising=False)
         assert shapes() == (True, True)
-        monkeypatch.setenv("W2ZS_TOPK_LIMIT_MAX", "0")
-        monkeypatch.setenv("W2ZS_FETCH_BROADCAST_MAX", "0")
-        assert shapes() == (False, False)
+        old = {k: spark.conf.get(k) for k in (_TOPK_THRESHOLD, _BROADCAST_THRESHOLD)}
+        try:
+            spark.conf.set(_TOPK_THRESHOLD, "1")
+            spark.conf.set(_BROADCAST_THRESHOLD, "-1")
+            assert shapes() == (False, False)
+        finally:
+            for key, value in old.items():
+                spark.conf.set(key, value)
+        assert shapes() == (True, True)
 
 
 class TestTopKFallback:
-    def test_windowed_rank_equals_take_ordered(self, spark, webdata, monkeypatch):
-        """Above W2ZS_TOPK_LIMIT_MAX the global top-k is a windowed rank
-        instead of orderBy+limit; both pick the same rows."""
+    def test_sort_fallback_equals_take_ordered(self, spark, webdata):
+        """At or above spark.sql.execution.topKSortFallbackThreshold Spark
+        plans the top-k's orderBy+limit as a sort and a limit instead of
+        TakeOrderedAndProject; both pick the same rows."""
         from warc2zim_spark.frontier.politeness import prioritize
         from warc2zim_spark.functions import udfs
 
@@ -221,15 +235,21 @@ class TestTopKFallback:
             .withColumn("score", (F.pmod(F.xxhash64("host", "surt_key"), F.lit(100)) / 100.0))
             .distinct()
         )
-        monkeypatch.delenv("W2ZS_TOPK_LIMIT_MAX", raising=False)
         take = prioritize(cands, wave_budget=37)
-        monkeypatch.setenv("W2ZS_TOPK_LIMIT_MAX", "0")
-        ranked = prioritize(cands, wave_budget=37)
-        assert "GlobalLimit" in _analyzed(take)
-        assert "GlobalLimit" not in _analyzed(ranked)
-        got_take, got_ranked = sorted(take.collect()), sorted(ranked.collect())
+        assert "TakeOrderedAndProject" in _physical(take)
+        got_take = sorted(take.collect())
+        old = spark.conf.get(_TOPK_THRESHOLD)
+        spark.conf.set(_TOPK_THRESHOLD, "10")
+        try:
+            fallback = prioritize(cands, wave_budget=37)
+            plan = _physical(fallback)
+            got_fallback = sorted(fallback.collect())
+        finally:
+            spark.conf.set(_TOPK_THRESHOLD, old)
+        assert "TakeOrderedAndProject" not in plan, plan
+        assert "Limit 37" in plan, plan
         assert len(got_take) == 37
-        assert got_ranked == got_take
+        assert got_fallback == got_take
 
 
 class TestPoliteness:

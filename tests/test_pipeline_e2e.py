@@ -85,6 +85,35 @@ class TestRunPipeline:
         assert len(fused) == 2
         assert sorted(fused) == sorted(standalone)
 
+    @pytest.mark.parametrize("option", ["charsets_to_try", "header_bytes"])
+    def test_narrowed_fails_sink_equals_standalone_probe(
+        self, spark, webdata, tmp_path, option
+    ):
+        """As above for a decode config fallible past the 1-KiB head: the
+        sink's full-payload probe rides the same record pass, and its rows
+        equal the standalone probe's over a payload-bearing frame."""
+        from warc2zim_spark.kernels.decode import DecodeOptions
+        from warc2zim_spark.operators.quarantine import quarantined_records
+        from warc2zim_spark.operators.records import content_records, load_records
+        from warc2zim_spark.plans.pipeline import run_pipeline
+
+        opts = {
+            "charsets_to_try": DecodeOptions(charsets_to_try=("utf-8", "ascii")),
+            "header_bytes": DecodeOptions(header_bytes=4096),
+        }[option]
+        out = tmp_path / "out_narrowed"
+        metrics = run_pipeline(
+            spark, webdata, str(out), name="n",
+            decode_options=opts, continue_on_error=True,
+        )
+        fused = spark.read.parquet(str(out / "fails")).collect()
+        standalone = quarantined_records(
+            content_records(load_records(spark, webdata), with_payload=True),
+            decode_options=opts,
+        ).collect()
+        assert metrics["failed_records"] == len(fused) >= 2
+        assert sorted(fused) == sorted(standalone)
+
     def test_aliased_fails_sink_equals_standalone_probe(self, spark, webdata, tmp_path):
         """As above with --encoding-aliases: mapping one poison charset
         leaves the other record in both the sink and the standalone probe."""
@@ -516,12 +545,13 @@ class TestMetadataCliFlags:
 
 
 class TestTwoPhaseNarrowedProbe:
-    """Narrowed --charsets-to-try with BOTH payload_head and payload
-    present runs the two-phase probe: head-only classification, full
-    payload shipped only for the tier-(c) residue. Must equal the
-    single-pass full-payload probe row-for-row."""
+    """A narrowed --charsets-to-try or a sniff window past the 1-KiB head
+    makes decode fallible past the head: the probe reads the full payload,
+    whatever other columns the frame carries."""
 
-    def test_two_phase_equals_single_pass(self, spark):
+    def test_head_and_payload_frame_finds_every_tier(self, spark):
+        """A frame carrying both payload_head and payload finds the tier
+        (a), (b) and (c) failures, the same rows as a payload-only frame."""
         from pyspark.sql import functions as F
 
         from warc2zim_spark.kernels.decode import DecodeOptions
@@ -559,23 +589,23 @@ class TestTwoPhaseNarrowedProbe:
             "payload_head", F.expr("substring(payload, 1, 1024)")
         )
         opts = DecodeOptions(charsets_to_try=("ascii",))
-        single = {
+        payload_only = {
             (r.zim_path, r.rec_seq, r.stage, r.reason.split(":")[0])
             for r in quarantined_records(base, decode_options=opts).collect()
         }
-        two = {
+        got = {
             (r.zim_path, r.rec_seq, r.stage, r.reason.split(":")[0])
             for r in quarantined_records(both, decode_options=opts).collect()
         }
-        assert two == single
-        assert {z for z, *_ in two} == {
+        assert got == payload_only
+        assert {z for z, *_ in got} == {
             "t.example/a.html", "t.example/b.css", "t.example/c.css"
         }
 
     def test_wide_sniff_window_falls_back_to_single_pass(self, spark):
-        """header_bytes beyond the 1-KiB ingest head cannot use the
-        two-phase head pass — declaration may sit past the column. Must
-        still find a >1KiB-deep declared failure."""
+        """header_bytes beyond the 1-KiB ingest head cannot be probed from
+        the head — the declaration may sit past the column. Must still find
+        a >1KiB-deep declared failure."""
         from pyspark.sql import functions as F
 
         from warc2zim_spark.kernels.decode import DecodeOptions

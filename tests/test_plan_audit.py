@@ -320,10 +320,10 @@ def _reaches(start, links, names, target, barrier=lambda name: False) -> bool:
     return False
 
 
-def _exchange_over_scan(plan: str, location: str) -> bool:
-    """Whether a formatted physical plan (AQE's final plan, when adaptive)
-    has an ``Exchange`` above a file scan whose location contains
-    ``location``."""
+def _scan_ancestors(plan: str, location: str) -> list[list[str]]:
+    """Per file scan whose location contains ``location``, in a formatted
+    physical plan (AQE's final plan, when adaptive), the node names above
+    it, nearest first (a join's name keeps its type and build side)."""
     tree, _, details = plan.partition("\n\n\n")
     tree = tree.split("== Initial Plan ==")[0]
     scans = set(re.findall(
@@ -332,13 +332,17 @@ def _exchange_over_scan(plan: str, location: str) -> bool:
     ))
     nodes, ids = [], []
     for line in tree.splitlines():
-        m = re.search(r"([A-Z][A-Za-z]*(?: [a-z]+)*) +\((\d+)\)", line)
+        m = re.search(r"([A-Z][A-Za-z]*(?: [A-Za-z]+)*) +\((\d+)\)", line)
         if m:
             nodes.append((m.start(1), m.group(1)))
             ids.append(m.group(2))
-    return any(
-        "Exchange" in _ancestors(nodes, i) for i, n in enumerate(ids) if n in scans
-    )
+    return [_ancestors(nodes, i) for i, n in enumerate(ids) if n in scans]
+
+
+def _exchange_over_scan(plan: str, location: str) -> bool:
+    """Whether a formatted physical plan has an ``Exchange`` above a file
+    scan whose location contains ``location``."""
+    return any("Exchange" in above for above in _scan_ancestors(plan, location))
 
 
 class TestFrontierPlanShapes:
@@ -407,6 +411,89 @@ class TestFrontierPlanShapes:
             assert any(
                 t.startswith("BroadcastExchange") for t in _ancestors(nodes, i)
             ), nodes[i]
+
+    @pytest.mark.parametrize("wave_budget", [3_000, 100_000])
+    def test_fetch_broadcasts_hit_set_not_pages(self, spark, webdata, wave_budget):
+        """At the budgets in use (perfbench 3,000, bench.py's heavy frontier
+        100,000) the checkpointed schedule's byte estimate is within
+        autoBroadcastJoinThreshold, so the fetch hints the hit set: it is
+        the broadcast side, and the page scan, which carries the html, sits
+        under no broadcast. (The hint is checked as such: on this small page
+        table Spark's own size rule may pick the same side without it.)"""
+        from warc2zim_spark.frontier.crawl import (
+            _normalize_cols, _valid, page_lookup, schedule_wave, wave_links,
+        )
+        from warc2zim_spark.functions.expressions import literal_frame
+
+        read = spark.read.parquet
+        pages = read(f"{webdata}/pages.parquet")
+        frontier = _normalize_cols(read(f"{webdata}/seeds.parquet"))
+        scheduled = schedule_wave(
+            frontier.localCheckpoint(eager=True).filter(_valid()),
+            literal_frame(spark, [], "surt_key string"),
+            read(f"{webdata}/robots.parquet"),
+            host_budget=4, wave_budget=wave_budget,
+        ).localCheckpoint(eager=True)
+        fetched = wave_links(scheduled, pages, page_lookup(pages))
+        analyzed = fetched._jdf.queryExecution().analyzed().toString()
+        assert "strategy=broadcast" in analyzed, analyzed
+        nodes = _plan_nodes(fetched)
+        # the leaves this plan runs: a cached table's build plan, printed
+        # under its InMemoryRelation, is not one of them
+        live = [
+            i for i in range(len(nodes))
+            if not any(t.startswith("InMemoryRelation") for t in _ancestors(nodes, i))
+        ]
+        schedule_scans = [i for i in live if nodes[i][1].startswith("Scan ExistingRDD")]
+        html_scans = [
+            i for i in live
+            if nodes[i][1].startswith(("FileScan", "InMemoryTableScan"))
+            and "html#" in nodes[i][1].split("]")[0]
+        ]
+        assert len(schedule_scans) == 1 and len(html_scans) == 1, nodes
+        assert any(
+            t.startswith("BroadcastExchange")
+            for t in _ancestors(nodes, schedule_scans[0])
+        ), nodes
+        assert not any(
+            t.startswith("BroadcastExchange")
+            for t in _ancestors(nodes, html_scans[0])
+        ), nodes
+
+    def test_exact_seen_probe_broadcast_by_threshold(self, spark, webdata, tmp_path):
+        """A 2-wave exact crawl's second seen probe (the first is pruned: its
+        seen set is empty) is a BroadcastHashJoin LeftAnti that builds the
+        waves scan, by the byte threshold alone: with the threshold
+        disabled, the waves scan is broadcast nowhere, so no hint forces it."""
+        from warc2zim_spark.frontier.crawl import run_crawl
+
+        read = spark.read.parquet
+
+        def seen_join(label):
+            """(the nodes between the wave-0 scan and its nearest join, that
+            join) over the crawl's executed plans."""
+            plans = _executed_plans(spark, lambda: run_crawl(
+                spark, read(f"{webdata}/seeds.parquet"),
+                read(f"{webdata}/pages.parquet"),
+                read(f"{webdata}/robots.parquet"), str(tmp_path / label),
+                max_waves=2, host_budget=4, wave_budget=50,
+            ))
+            probes = [a for p in plans for a in _scan_ancestors(p, f"{label}/wave=0")]
+            assert len(probes) == 1, probes
+            join = next(i for i, t in enumerate(probes[0]) if "Join" in t)
+            return probes[0][:join], probes[0][join]
+
+        between, join = seen_join("default")
+        assert join == "BroadcastHashJoin LeftAnti BuildRight", join
+        assert "BroadcastExchange" in between, between
+        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            between, join = seen_join("disabled")
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        assert join == "SortMergeJoin LeftAnti", join
+        assert "BroadcastExchange" not in between, between
 
     def test_crawl_waves_no_exchange_over_robots(self, spark, webdata, tmp_path):
         """Robots is aggregated once per crawl: of a 2-wave crawl's executed
@@ -484,10 +571,32 @@ class TestConvertPythonNodes:
     the branch threads' included."""
 
     def test_run_pipeline_one_python_node_per_stage(self, spark, webdata, tmp_path):
+        self._assert_one_python_node_per_stage(spark, webdata, tmp_path)
+
+    @pytest.mark.parametrize("option", ["charsets_to_try", "header_bytes"])
+    def test_narrowed_decode_one_python_node_per_stage(
+        self, spark, webdata, tmp_path, option
+    ):
+        """A decode config fallible past the 1-KiB head probes the full
+        payload in the same record pass: its fails sink is a filter of the
+        cached stream, so the probe runs once, in no chained node."""
+        from warc2zim_spark.kernels.decode import DecodeOptions
+
+        self._assert_one_python_node_per_stage(
+            spark, webdata, tmp_path,
+            decode_options={
+                "charsets_to_try": DecodeOptions(charsets_to_try=("utf-8", "ascii")),
+                "header_bytes": DecodeOptions(header_bytes=4096),
+            }[option],
+        )
+
+    @staticmethod
+    def _assert_one_python_node_per_stage(spark, webdata, tmp_path, **kwargs):
         from warc2zim_spark.plans.pipeline import run_pipeline
 
         executions = _executions(spark, lambda: run_pipeline(
-            spark, webdata, str(tmp_path / "out"), name="n", continue_on_error=True,
+            spark, webdata, str(tmp_path / "out"), name="n",
+            continue_on_error=True, **kwargs,
         ))
 
         def stage_boundary(name):

@@ -127,74 +127,6 @@ class TestStreamItems:
         assert paths_df.count() == paths_df.distinct().count()
 
 
-class TestHostBudgetGate:
-    """applyInPandasWithState politeness twin: cumulative per-host budgets
-    across micro-batches AND across restarts (state store checkpointing)."""
-
-    def _write_candidates(self, spark, path, rows):
-        spark.createDataFrame(
-            rows, "host string, surt_key string, hops int, score double"
-        ).coalesce(1).write.mode("append").parquet(path)
-
-    def test_budget_spans_batches_and_restarts(self, spark, tmp_path):
-        from warc2zim_spark.streaming.ratelimit import stream_host_gate
-
-        cand = str(tmp_path / "cand")
-        out = str(tmp_path / "gated")
-        ckpt = str(tmp_path / "ckpt")
-        # batch 1: host a has 2 candidates, host b has 1
-        self._write_candidates(spark, cand, [
-            ("a.example", "a.example/p1", 0, 1.0),
-            ("a.example", "a.example/p2", 1, 0.5),
-            ("b.example", "b.example/p1", 0, 1.0),
-        ])
-        n1 = stream_host_gate(spark, cand, out, ckpt, host_budget=3)
-        assert n1 >= 1
-        got1 = {(r.host, r.surt_key, r.fetch_seq)
-                for r in spark.read.parquet(out).collect()}
-        assert got1 == {
-            ("a.example", "a.example/p1", 1),
-            ("a.example", "a.example/p2", 2),
-            ("b.example", "b.example/p1", 1),
-        }
-        # RESTART with 3 more for host a: budget 3 means only ONE more slot,
-        # and priority order (hops asc, score desc, surt asc) picks p5
-        self._write_candidates(spark, cand, [
-            ("a.example", "a.example/p3", 2, 0.1),
-            ("a.example", "a.example/p4", 1, 0.2),
-            ("a.example", "a.example/p5", 1, 0.9),
-        ])
-        stream_host_gate(spark, cand, out, ckpt, host_budget=3)
-        got2 = {(r.host, r.surt_key, r.fetch_seq)
-                for r in spark.read.parquet(out).collect()}
-        assert got2 == got1 | {("a.example", "a.example/p5", 3)}
-
-    def test_slot_claim_is_chunk_boundary_independent(self, spark, tmp_path):
-        """applyInPandasWithState can split one host's micro-batch into
-        multiple Arrow chunks; slot claiming must rank the WHOLE group, not
-        each chunk (advisor r03). Force tiny chunks and plant the
-        highest-priority candidates late in insertion order: a per-chunk
-        sort would hand slots to early low-priority rows."""
-        from warc2zim_spark.streaming.ratelimit import stream_host_gate
-
-        cand = str(tmp_path / "cand_chunks")
-        out = str(tmp_path / "gated_chunks")
-        ckpt = str(tmp_path / "ckpt_chunks")
-        # insertion order: 40 low-priority rows first, then 5 high-priority
-        rows = [("h.example", f"h.example/low{i:03d}", 5, 0.0) for i in range(40)]
-        rows += [("h.example", f"h.example/top{i}", 0, 9.0) for i in range(5)]
-        self._write_candidates(spark, cand, rows)
-        old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "8")
-        try:
-            stream_host_gate(spark, cand, out, ckpt, host_budget=5)
-        finally:
-            if old is not None:
-                spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-        got = {(r.surt_key, r.fetch_seq) for r in spark.read.parquet(out).collect()}
-        assert got == {(f"h.example/top{i}", i + 1) for i in range(5)}
-
-
 class TestWatermarkMode:
     def test_shuffled_file_order_same_item_set(self, spark, webdata, split_records, tmp_path):
         """dedup_mode='watermark' (dropDuplicatesWithinWatermark on zim_path

@@ -601,85 +601,3 @@ class TestBoilerplate:
         )
         assert boilerplate_paragraphs(docs, min_docs=3).count() == 0
         assert boilerplate_paragraphs(docs, min_docs=2).count() == 1
-
-
-class TestCurationPipeline:
-    def test_end_to_end_counts_and_determinism(self, spark, docs):
-        from warc2zim_spark.plans.curation import curate_corpus
-
-        curated, counts = curate_corpus(
-            docs, min_quality_tokens=5, sample_per_language=10
-        )
-        assert counts["input"] == docs.count()
-        # monotone shrinkage through the gates
-        assert counts["after_quality_gate"] <= counts["input"]
-        assert counts["after_exact_dedup"] <= counts["after_quality_gate"]
-        assert counts["after_near_dedup"] <= counts["after_exact_dedup"]
-        assert counts["curated"] <= counts["after_near_dedup"]
-        assert counts["curated"] > 0
-        # per-language quota holds on the PREDICTED language — the column
-        # the gate filtered and the sampler stratified on
-        per_lang = {
-            r.lang_pred: r.n
-            for r in curated.groupBy("lang_pred").agg(F.count("*").alias("n")).collect()
-        }
-        assert all(n <= 10 for n in per_lang.values())
-        # deterministic: same inputs -> same doc ids
-        again, _ = curate_corpus(docs, min_quality_tokens=5, sample_per_language=10)
-        assert {r.doc_id for r in curated.collect()} == {
-            r.doc_id for r in again.collect()
-        }
-
-    def test_no_lang_column_corpus(self, spark):
-        """Real corpora usually have NO lang column (that is why lang-ID
-        exists): curation must stratify on the predicted language without
-        crashing, and the quota must hold per lang_pred."""
-        from warc2zim_spark.plans.curation import curate_corpus
-
-        docs = spark.createDataFrame(
-            [
-                (i, "the quick brown fox jumps over the lazy dog number %d" % i)
-                for i in range(30)
-            ]
-            + [
-                (100 + i, "le renard brun rapide saute par dessus le chien %d" % i)
-                for i in range(30)
-            ],
-            "doc_id long, text string",
-        )
-        curated, counts = curate_corpus(
-            docs, min_quality_tokens=3, sample_per_language=5
-        )
-        assert counts["curated"] > 0
-        per = {
-            r.lang_pred: r.n
-            for r in curated.groupBy("lang_pred").agg(F.count("*").alias("n")).collect()
-        }
-        assert all(n <= 5 for n in per.values())
-
-    def test_stage_boundaries_checkpointed(self, spark, docs):
-        """The returned frame's plan must NOT re-run the full lineage: the
-        boundary localCheckpoints truncate it, so text_stats' ArrowEvalPython
-        (langid) appears zero times in the final plan — each stage executed
-        exactly once for its boundary count."""
-        from warc2zim_spark.plans.curation import curate_corpus
-
-        curated, _ = curate_corpus(docs, min_quality_tokens=5)
-        plan = curated._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" not in plan
-        assert "ExistingRDD" in plan or "LogicalRDD" in plan or "Scan" in plan
-
-    def test_exact_duplicates_removed(self, spark, docs):
-        from warc2zim_spark.plans.curation import curate_corpus
-
-        copies = docs.limit(3).select(
-            (F.col("doc_id") + 90000).alias("doc_id"), "text", "lang",
-            "source", "n_chars",
-        )
-        curated, counts = curate_corpus(
-            docs.unionByName(copies), min_quality_tokens=0,
-            max_dup_line_frac=1.0,
-        )
-        ids = {r.doc_id for r in curated.select("doc_id").collect()}
-        # the lower-id originals win; the planted copies are gone
-        assert not (ids & {90000, 90001, 90002})

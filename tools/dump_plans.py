@@ -66,7 +66,7 @@ def main() -> None:
         fh.write(plan_of(sched_chain))
     next_frontier = wave_links(
         sched_chain.localCheckpoint(eager=True), pages,
-        pages_keyed=page_lookup(pages), wave_budget=100_000,
+        pages_keyed=page_lookup(pages),
     )
     with open(f"{out_dir}/w_frontier_links_{suffix}.txt", "w") as fh:
         fh.write(plan_of(next_frontier))

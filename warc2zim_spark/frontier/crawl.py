@@ -40,7 +40,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from warc2zim_spark.frontier.politeness import (
-    env_cap,
     host_policy,
     politeness_budget,
     prioritize,
@@ -62,13 +61,25 @@ SCORE_DECAY = 0.5
 # no schema-inference job per read)
 _WAVE_SCHEMA = "wave int, url string, surt_key string, host string, hops int, score double"
 
-# scale guards for the broadcast fast paths (r06), read per call with
-# env_cap: wave schedules (W2ZS_FETCH_BROADCAST_MAX) and exact-mode seen sets
-# (W2ZS_SEEN_BROADCAST_MAX) are broadcast-joined while they provably fit
-# (keys only, ~100 B/row → ≤ a few hundred MB at the default caps); beyond
-# them the plain shuffle joins (and, for seen, the partitioned-bloom mode —
-# the actual 10^10-key design point) take over. Env-overridable for cluster
-# tiers with more executor memory.
+# the broadcast fast paths are decided in bytes, by the session's
+# spark.sql.autoBroadcastJoinThreshold: the exact seen set (no hint — the
+# optimizer's estimate of the committed waves' scan decides) and the fetch's
+# hit set (hinted while the schedule's estimate fits, see _fits_broadcast).
+# Beyond it the shuffle joins (and, for seen, the partitioned-bloom mode —
+# the actual 10^10-key design point) take over. The seen scan's estimate
+# counts compressed parquet bytes, ~7.5 B per surt key against ~230 B per
+# key in the built hash relation, so the threshold admits millions of
+# exact keys before it switches.
+
+
+def _fits_broadcast(df: DataFrame) -> bool:
+    """Whether the optimizer's size estimate of ``df`` is within the
+    session's ``autoBroadcastJoinThreshold`` — Spark's own broadcast rule.
+    The threshold is read from the JVM SQLConf, so ``64m`` parses and
+    ``-1`` disables it. Reading the estimate runs no job."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return 0 <= size <= conf.autoBroadcastJoinThreshold()
 
 
 # rows whose url failed canonicalization or host extraction (UDFs return
@@ -163,13 +174,15 @@ def wave_links(
     scheduled: DataFrame,
     pages: DataFrame,
     pages_keyed: DataFrame | None = None,
-    wave_budget: int | None = None,
 ) -> DataFrame:
     """Next-frontier candidates of the ``scheduled`` rows (url, surt_key,
     hops, score): fetched from the page table, links extracted (hops+1,
     score decayed). ``pages_keyed``: optional pre-built (cached)
-    ``page_lookup(pages)``. The hit set is broadcast while ``wave_budget``,
-    which bounds the scheduled rows, is within W2ZS_FETCH_BROADCAST_MAX."""
+    ``page_lookup(pages)``. The hit set is broadcast while the optimizer's
+    size estimate of ``scheduled`` is within ``autoBroadcastJoinThreshold``
+    (a checkpointed schedule carries its limit's estimate, ~80 B × budget).
+    The hint is what keeps the html still: without it Spark's own size
+    rule can pick the page table as the build side."""
     # "fetch": canonical-key join against the page table; extract links.
     # The scheduled keys pick their winning page_url on the NARROW lookup,
     # then html is attached by streaming the page table through a hash probe
@@ -181,7 +194,7 @@ def wave_links(
     # one task — guide §8: decide with small rows, move big rows once).
     page_keyed = pages_keyed if pages_keyed is not None else page_lookup(pages)
     hits = scheduled.join(page_keyed, "surt_key")
-    if wave_budget is not None and wave_budget <= env_cap("W2ZS_FETCH_BROADCAST_MAX"):
+    if _fits_broadcast(scheduled):
         hits = F.broadcast(hits)
     fetched = hits.join(
         pages.select(F.col("url").alias("page_url"), "html"), "page_url"
@@ -233,9 +246,7 @@ def crawl_wave(
     scheduled = schedule_wave(
         frontier, seen, robots, wave_budget=wave_budget, **schedule_opts
     ).localCheckpoint(eager=True)
-    return scheduled, wave_links(
-        scheduled, pages, pages_keyed=pages_keyed, wave_budget=wave_budget
-    )
+    return scheduled, wave_links(scheduled, pages, pages_keyed=pages_keyed)
 
 
 def committed_waves(checkpoint_dir: str) -> list[int]:
@@ -247,12 +258,6 @@ def committed_waves(checkpoint_dir: str) -> list[int]:
         int(p.name[len("wave="):-len(marker)])
         for p in Path(checkpoint_dir).glob(f"wave=*{marker}")
     )
-
-
-def last_committed_wave(checkpoint_dir: str) -> int:
-    """Resume point: highest wave with a success marker, or -1."""
-    done = committed_waves(checkpoint_dir)
-    return done[-1] if done else -1
 
 
 def _read_waves(spark: SparkSession, ckpt: Path, waves: list[int]) -> DataFrame:
@@ -304,17 +309,13 @@ def run_crawl(
     ckpt = Path(checkpoint_dir)
     ckpt.mkdir(parents=True, exist_ok=True)
     done = committed_waves(checkpoint_dir)
-    # exact-mode seen keys are counted as they accumulate (each wave adds
-    # exactly n_scheduled NEW keys — the anti-join guarantees disjointness),
-    # so the wave can broadcast the probe side while it provably fits
-    scheduled_counts = [
-        json.loads((ckpt / f"wave={w}._metrics.json").read_text())["scheduled"]
-        for w in done
-    ]
     start = done[-1] + 1 if done else 0
-    if start >= max_waves or (done and scheduled_counts[-1] == 0):
+    # a committed wave that scheduled nothing ends the crawl
+    ended = done and json.loads(
+        (ckpt / f"wave={done[-1]}._metrics.json").read_text()
+    )["scheduled"] == 0
+    if start >= max_waves or ended:
         return _read_waves(spark, ckpt, done)
-    seen_count = sum(scheduled_counts)
     pages_keyed = page_lookup(pages).cache()
     if done:
         # the frontier the last committed wave produced: its links, derived
@@ -322,7 +323,7 @@ def run_crawl(
         # job fills the lookup cache, before any other reader exists
         frontier = wave_links(
             _read_waves(spark, ckpt, done[-1:]).drop("wave"), pages,
-            pages_keyed=pages_keyed, wave_budget=wave_budget,
+            pages_keyed=pages_keyed,
         )
     else:
         # spread the seed pass (r06): seeds routinely arrive as ONE
@@ -386,9 +387,8 @@ def run_crawl(
                 seen_bloom = bloom_fut.result()
             seen = None
             if seen_bloom is None:  # exact mode, or bloom mode's wave 0
+                # no hint: the byte threshold decides from the scan's estimate
                 seen = _read_waves(spark, ckpt, done).select("surt_key")
-                if seen_count <= env_cap("W2ZS_SEEN_BROADCAST_MAX"):
-                    seen = F.broadcast(seen)
             scheduled, next_frontier = crawl_wave(
                 frontier, seen, pages, robots,
                 host_budget=host_budget, wave_budget=wave_budget,
@@ -445,7 +445,6 @@ def run_crawl(
             (ckpt / f"wave={wave}._metrics.json").write_text(json.dumps(metrics))
             (ckpt / f"wave={wave}._SUCCESS_WAVE").write_text("ok")
             done.append(wave)
-            seen_count += n_scheduled
             if n_scheduled == 0:
                 break
         for fut in (bloom_fut, warm_lookup):

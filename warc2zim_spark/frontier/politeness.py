@@ -30,23 +30,11 @@ robots):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_HOST_BUDGET = 8       # fetches per host per wave when no crawl-delay
 WAVE_MS = 30_000              # nominal wall-clock per wave for delay budgeting
-
-
-def env_cap(name: str) -> int:
-    """A fast-path row cap from the environment (default 2,000,000), read at
-    call time so a changed value takes effect without a re-import.
-    ``W2ZS_TOPK_LIMIT_MAX``: largest wave budget served by orderBy+limit
-    (TakeOrderedAndProject) — the per-partition top-k queue holds `budget`
-    rows, so the cap bounds per-task memory at ~budget × rowsize; larger
-    budgets take the windowed-rank path (a single-partition sort)."""
-    return int(os.environ.get(name, "2000000"))
 
 
 def host_policy(robots: DataFrame) -> DataFrame:
@@ -170,26 +158,20 @@ def politeness_budget(
 
 def prioritize(candidates: DataFrame, wave_budget: int | None = None) -> DataFrame:
     """Global deterministic priority top-k (hops asc, score desc, surt asc),
-    truncated to the wave budget.
+    truncated to the wave budget: orderBy + limit. Same row set as a global
+    rank, because (hops, -score, surt_key) is a total order over per-wave
+    candidates.
 
-    Up to ``W2ZS_TOPK_LIMIT_MAX`` this is orderBy + limit, planned as
-    ``TakeOrderedAndProject``: every input partition keeps its own top-k in
-    a bounded priority queue and the single merge task sees ≤ partitions ×
-    k rows, so a hot host costs nothing extra here either. Same row set as
-    a global rank: (hops, -score, surt_key) is a total order over per-wave
-    candidates. Beyond the cap (the per-partition queue would pin ~GBs per
-    task) the fallback is a windowed global rank — an ``Exchange
-    SinglePartition`` and one full sort task, with no ``WindowGroupLimit``
-    (the budget is far above the inference threshold)."""
+    Spark picks the physical plan. Below
+    ``spark.sql.execution.topKSortFallbackThreshold`` (set in
+    ``session.py``) it is ``TakeOrderedAndProject``: every input partition
+    keeps its own top-k in a bounded priority queue and the single merge
+    task sees ≤ partitions × k rows, so a hot host costs nothing extra
+    here either. At or above it (the per-partition queue would pin ~GBs per
+    task) Spark plans a range-partitioned ``Sort``, then ``LocalLimit``,
+    ``Exchange SinglePartition`` and ``GlobalLimit``, with the same rows."""
     if wave_budget is None:
         return candidates
-    if wave_budget <= env_cap("W2ZS_TOPK_LIMIT_MAX"):
-        return candidates.orderBy(
-            F.asc("hops"), F.desc("score"), F.asc("surt_key")
-        ).limit(wave_budget)
-    w = Window.orderBy(F.asc("hops"), F.desc("score"), F.asc("surt_key"))
-    return (
-        candidates.withColumn("_rank", F.row_number().over(w))
-        .filter(F.col("_rank") <= wave_budget)
-        .drop("_rank")
-    )
+    return candidates.orderBy(
+        F.asc("hops"), F.desc("score"), F.asc("surt_key")
+    ).limit(wave_budget)

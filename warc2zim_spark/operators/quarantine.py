@@ -15,13 +15,12 @@ this environment is a declared/HTTP charset naming an unknown codec —
 ``LookupError`` through the decode cascade, the same exception the
 reference's errors=replace decode raises (utils.py:155-219).
 
-One probe, two shapes. ``with_failure_reason`` adds ``stage``/``reason``
-columns to a content stream in the same pass that pairs and canonicalizes
-it, reading the 1-KiB ``payload_head``; ``run_pipeline`` caches that stream
-and filters its fails sink from it (``failed_rows``). ``quarantined_records``
-is the standalone form over any content frame; it runs the same probe, or,
-for a narrowed try-list, a two-phase probe that ships full payloads only for
-the records that reach the strict try-list.
+One probe. ``with_failure_reason`` adds ``stage``/``reason`` columns to a
+content stream in the same pass that pairs and canonicalizes it, reading
+the 1-KiB ``payload_head``, or the full ``payload`` for a decode config
+fallible past the head (``needs_full_payload``); ``run_pipeline`` caches
+that stream and filters its fails sink from it (``failed_rows``).
+``quarantined_records`` is the standalone form over any content frame.
 """
 
 from __future__ import annotations
@@ -129,84 +128,6 @@ def make_decode_error_udf(options: "_decode.DecodeOptions | None" = None):
 
 decode_error = make_decode_error_udf()
 
-_TIER_C = "\x00tierc"  # phase-A sentinel: record reaches the strict try-list
-
-
-def make_head_phase_udf(options: "_decode.DecodeOptions"):
-    """Phase A of the two-phase narrowed-try-list probe: classify each
-    record from its FIRST-KiB head alone — tier (a)/(b) outcomes (ok or a
-    codec failure) are fully decidable from the declaration window + codec
-    name; records that fall through to tier (c) return the ``_TIER_C``
-    sentinel so only THAT subset's full payloads are ever shipped."""
-    opts = options
-
-    @pandas_udf(StringType())
-    def head_phase(
-        heads: pd.Series, http_charsets: pd.Series, modes: pd.Series
-    ) -> pd.Series:
-        out = []
-        for head, charset, mode in zip(heads, http_charsets, modes):
-            if head is None:
-                out.append(None)
-                continue
-            head = bytes(head)
-            try:
-                declared = (
-                    _decode.sniff_declared_charset(head, opts.header_bytes)
-                    if mode == "html" and not opts.ignore_content_header_charsets
-                    else None
-                )
-                if declared is not None:
-                    head.decode(
-                        _decode.resolve_encoding_alias(declared, opts.extra_aliases),
-                        errors="replace",
-                    )
-                    out.append(None)
-                    continue
-                if charset and not opts.ignore_http_header_charsets:
-                    head.decode(
-                        _decode.resolve_encoding_alias(charset, opts.extra_aliases),
-                        errors="replace",
-                    )
-                    out.append(None)
-                    continue
-                out.append(_TIER_C)
-            except Exception as exc:  # noqa: BLE001 — the guard IS the feature
-                out.append(f"{type(exc).__name__}: {exc}"[:200])
-        return pd.Series(out)
-
-    return head_phase
-
-
-def make_strict_decode_udf(options: "_decode.DecodeOptions"):
-    """Phase B: strict try-list decode of the FULL payload — only tier-(c)
-    rows reach this."""
-    opts = options
-
-    @pandas_udf(StringType())
-    def strict_decode(payloads: pd.Series) -> pd.Series:
-        out = []
-        for payload in payloads:
-            if payload is None:
-                out.append(None)
-                continue
-            try:
-                _decode.to_string(
-                    bytes(payload),
-                    None,
-                    opts.try_list(),
-                    opts.header_bytes,
-                    ignore_content_header_charsets=True,
-                    ignore_http_header_charsets=True,
-                    extra_aliases=opts.extra_aliases,
-                )
-                out.append(None)
-            except Exception as exc:  # noqa: BLE001
-                out.append(f"{type(exc).__name__}: {exc}"[:200])
-        return pd.Series(out)
-
-    return strict_decode
-
 
 def merged_options(
     encoding_aliases: dict[str, str] | None,
@@ -262,8 +183,8 @@ def with_failure_reason(
     the config is decided by the head (``needs_full_payload`` false), else
     the full ``payload``; only text-mode rows ship bytes to the UDF.
 
-    ``run_pipeline`` caches this over its content stream (with
-    ``payload_head`` dropped after the probe), so the fails sink is a
+    ``run_pipeline`` caches this over its content stream (with the payload
+    column it read dropped after the probe), so the fails sink is a
     filter of the stream every other sink reads and the records are paired
     and canonicalized once."""
     opts = merged_options(encoding_aliases, decode_options)
@@ -274,8 +195,7 @@ def with_failure_reason(
             "(narrowed charsets_to_try, or header_bytes wider than the 1 KiB "
             "ingest head), but this frame carries only payload_head — pass a "
             "frame with the payload column (content_records(..., "
-            "with_payload=True); add with_head=True to enable the two-phase "
-            "probe)"
+            "with_payload=True))"
         )
     err_udf = (
         decode_error
@@ -310,68 +230,23 @@ def quarantined_records(
     decode_options: "_decode.DecodeOptions | None" = None,
 ) -> DataFrame:
     """(zim_path, url, file_seq, rec_seq, stage, reason) — response records
-    whose text-rewrite stage fails. ``stage`` is the C1 rewrite mode (only
+    whose text-rewrite stage fails: ``failed_rows`` of the
+    ``with_failure_reason`` probe. ``stage`` is the C1 rewrite mode (only
     text modes decode; binary passthrough records cannot fail here).
 
-    Prefers the ``payload_head`` ingest column (first KiB) over the full
-    ``payload`` when the try-list is the default — the probe then only
-    needs the declaration window plus the codec name (the default list ends
-    in ISO-8859-1, so tier (c) cannot fail and head ≡ full for failure
-    detection). A user-NARROWED ``--charsets-to-try`` makes tier (c)
-    strict-decode fallible over the whole payload; when BOTH columns are
-    present (and the sniff window fits the head column) that case runs
-    TWO-PHASE: a head-only pass classifies every record (tier a/b outcomes
-    are head-decidable), and only the tier-(c) residue — records with no
-    declared and no usable HTTP charset, typically a small fraction of a
-    real corpus — ships its full payload through Arrow for the strict
-    decode. Every other case is the single-pass ``with_failure_reason``
-    probe.
+    The probe reads the ``payload_head`` ingest column (first KiB) when the
+    config is decided by the head — the default try-list ends in
+    ISO-8859-1, so tier (c) cannot fail and head ≡ full for failure
+    detection — and the full ``payload`` otherwise (a user-NARROWED
+    ``--charsets-to-try`` makes the tier-(c) strict decode fallible over the
+    whole payload; a ``header_bytes`` past the head sniffs bytes the head
+    does not hold).
 
     ``decode_options`` is the reference's decode-tuning CLI surface
     (main.py:113-143); ``encoding_aliases`` rows merge over its aliases."""
-    opts = merged_options(encoding_aliases, decode_options)
-    cols = content_with_payload.columns
-    two_phase = (
-        opts.charsets_to_try is not None
-        and "payload_head" in cols
-        and "payload" in cols
-        and opts.header_bytes <= 1024  # the ingest head column's width
+    return failed_rows(
+        with_failure_reason(content_with_payload, encoding_aliases, decode_options)
     )
-    if not two_phase:
-        return failed_rows(
-            with_failure_reason(content_with_payload, encoding_aliases, decode_options)
-        )
-
-    base = content_with_payload.withColumn("stage", _stage()).filter(
-        F.col("stage").isNotNull()
-    )
-    # phase A: head-only scan (payload pruned from this projection)
-    head_udf = make_head_phase_udf(opts)
-    phase_a = base.select(
-        "zim_path", "effective_url", "file_seq", "rec_seq", "stage",
-        head_udf(
-            F.col("payload_head"), F.col("http_charset"), F.col("stage")
-        ).alias("reason"),
-    ).persist()  # feeds BOTH fails_ab and tierc_keys: without this the
-    # head-classification scan (the pass the two-phase design exists to
-    # keep cheap) would evaluate twice
-    fails_ab = failed_rows(phase_a.filter(F.col("reason") != _TIER_C))
-    tierc_keys = phase_a.filter(F.col("reason") == _TIER_C).select(
-        "file_seq", "rec_seq"
-    )
-    # phase B: full payload only for the tier-(c) residue (broadcast
-    # semi-join keys against a payload-bearing scan)
-    strict_udf = make_strict_decode_udf(opts)
-    fails_c = failed_rows(
-        base.join(F.broadcast(tierc_keys), ["file_seq", "rec_seq"], "left_semi")
-        .withColumn("reason", strict_udf(F.col("payload")))
-    )
-    # materialize the (small) fails union so phase_a's cached head scan
-    # feeds both legs exactly once, then release it deterministically —
-    # the persist must not linger in executor storage after return
-    result = fails_ab.unionByName(fails_c).localCheckpoint(eager=True)
-    phase_a.unpersist()
-    return result
 
 
 def exclude_failed_records(content: DataFrame, fails: DataFrame) -> DataFrame:

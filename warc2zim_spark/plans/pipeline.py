@@ -48,7 +48,6 @@ from warc2zim_spark.operators.quarantine import (
     failed_rows,
     merged_options,
     needs_full_payload,
-    quarantined_records,
     with_failure_reason,
 )
 from warc2zim_spark.operators.records import content_records, load_records
@@ -83,17 +82,17 @@ def run_pipeline(
 
     Each intermediate is derived once and shared:
 
-    * One record pass. The records are paired and canonicalized once, into
-      a narrow content stream that is cached together with each record's
-      failure ``stage``/``reason`` (``with_failure_reason`` over the 1-KiB
-      ``payload_head``, which is dropped once probed); the fails sink is a
-      filter of it. Every Python kernel runs there, once per record, in
-      two Arrow nodes, one each side of the pairing shuffle: the stream
-      also carries each redirect's ``location_path`` and each revisit's
-      ``refers_to_path``, so branch (a) and the ``aliases`` sink run no
-      Python. Only a decode config fallible past the head (a narrowed
-      ``charsets_to_try``, or ``header_bytes`` > 1024) runs its own probe
-      (``quarantined_records``), the one path that reads full payloads.
+    * One record pass, for every decode config. The records are paired and
+      canonicalized once, into a narrow content stream that is cached
+      together with each record's failure ``stage``/``reason``
+      (``with_failure_reason`` over the 1-KiB ``payload_head``, or over the
+      full ``payload`` for a config fallible past the head: a narrowed
+      ``charsets_to_try``, or ``header_bytes`` > 1024; the payload column
+      is dropped once probed); the fails sink is a filter of it. Every
+      Python kernel runs there, once per record, in two Arrow nodes, one
+      each side of the pairing shuffle: the stream also carries each
+      redirect's ``location_path`` and each revisit's ``refers_to_path``,
+      so branch (a) and the ``aliases`` sink run no Python.
     * The redirect fixpoint runs once; both the redirects and the expected
       sinks (and the --url presence check) read its kept-source keys,
       materialized by an eager local checkpoint inside branch (a), so no
@@ -221,7 +220,7 @@ def run_pipeline(
     # the decode knobs drive EVERY decode, not only the quarantine probe —
     # a rescued/re-tuned record must decode the way the probe predicted;
     # --encoding-aliases rows merge into the downstream options the same
-    # way quarantined_records merges them internally
+    # way the failure probe merges them
     downstream_decode = (
         merged_options(encoding_aliases, decode_options)
         if encoding_aliases
@@ -230,27 +229,20 @@ def run_pipeline(
     records = load_records(spark, webdata_dir)
     # S10: per-record failure isolation. The probe rides the one record
     # pass: the cached content stream carries each record's failure reason
-    # (the 1-KiB head is dropped once probed), and the fails sink is a
-    # filter of it. A config fallible past the head keeps its own probe,
-    # the only pass that reads full payloads.
-    if needs_full_payload(decode_options):
-        content = content_records(records).cache()
-        fails = quarantined_records(
-            content_records(records, with_payload=True, with_head=True),
+    # (the payload column it read — the 1-KiB head, or the full payload for
+    # a config fallible past the head — is dropped once probed), and the
+    # fails sink is a filter of it, so each kernel runs once per record.
+    full = needs_full_payload(decode_options)
+    content = (
+        with_failure_reason(
+            content_records(records, with_head=not full, with_payload=full),
             encoding_aliases=encoding_aliases,
             decode_options=decode_options,
-        ).cache()
-    else:
-        content = (
-            with_failure_reason(
-                content_records(records, with_head=True),
-                encoding_aliases=encoding_aliases,
-                decode_options=decode_options,
-            )
-            .drop("payload_head")
-            .cache()
         )
-        fails = failed_rows(content)
+        .drop("payload_head", "payload")
+        .cache()
+    )
+    fails = failed_rows(content)
 
     # ---- pass 1: gather --------------------------------------------------
     expected = expected_items(content).cache()

@@ -4,6 +4,9 @@ Single place for the engine's Spark configuration so tests, bench, and the
 driver entry agree: AQE on (runtime re-plan + skew-join splitting), Arrow
 transfers on (all our UDFs are pandas UDFs), shuffle partitions sized with
 cores (local mode) — at cluster scale these come from spark-submit conf.
+The crawl's fast paths are decided by two Spark thresholds set here (the
+broadcast byte threshold and the top-k sort fallback), not by options of
+its own.
 """
 
 from __future__ import annotations
@@ -50,7 +53,17 @@ def get_spark(
         # crawl's page lookup and link extraction, convert's record scan).
         # Derived from the core count, not a constant.
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
+        # the crawl's plan choices are Spark's own thresholds. Broadcast: by
+        # the optimizer's byte estimate (the exact seen probe with no hint;
+        # wave_links gates its fetch hint on the same threshold)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # top-k (prioritize's orderBy + limit): TakeOrderedAndProject below
+        # this limit, a range-partitioned sort + limit at or above it. Spark's
+        # threshold counts ROWS and has no byte form; each task's priority
+        # queue holds `limit` rows, so this bounds per-task memory at
+        # ~limit × row size (keys only, ~100 B/row here). The default
+        # (2,147,483,632) would not bound it
+        .config("spark.sql.execution.topKSortFallbackThreshold", "2000000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

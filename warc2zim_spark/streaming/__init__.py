@@ -16,15 +16,8 @@ an anti-join against the already-materialized sink (or the persisted
 partitioned bloom, ``dedup_mode="bloom"``) → checkpointed ``foreachBatch``
 append, resumable mid-stream (Trigger.AvailableNow drains what exists and
 stops, the batch-friendly production pattern).
-
-The second streaming-shaped piece is PER-KEY STATE: a live fetcher's
-politeness accounting. ``host_budget_gate`` (ratelimit.py) is the batch
-politeness operator re-expressed with ``applyInPandasWithState`` — state =
-per-host consumed budget, persisted in the streaming state store across
-micro-batches AND restarts.
 """
 
 from warc2zim_spark.streaming.ingest import stream_items
-from warc2zim_spark.streaming.ratelimit import host_budget_gate, stream_host_gate
 
-__all__ = ["stream_items", "host_budget_gate", "stream_host_gate"]
+__all__ = ["stream_items"]
