@@ -340,9 +340,9 @@ class TestCrawlJobCount:
         once; the empty seen set of wave 0 is a JVM literal frame; exact
         mode's seen set is a scan of the written waves, copied never; waves
         are read with their schema, inferring none. A cold 3-wave crawl on
-        this fixture runs 34 (exact) / 44 (bloom) jobs, the pool threads'
-        wave writes, bloom updates and lookup warm-up included. Every job
-        carries the caller's job group, pool threads' too."""
+        this fixture runs 34 (exact) / 44 (bloom) jobs, the branches' wave
+        writes, bloom updates and lookup warm-up included. Every job
+        carries the caller's job group, the branch threads' too."""
         seeds = spark.read.parquet(f"{webdata}/seeds.parquet")
         robots = spark.read.parquet(f"{webdata}/robots.parquet")
         pages = spark.read.parquet(f"{webdata}/pages.parquet")

@@ -219,8 +219,9 @@ class TestRunPipeline:
         paths each read the main page and the verdict re-joined the edge
         graph; 127 when the fixpoint, the walk and the payload-carrying
         content stream were each derived twice); any re-derivation pushes
-        it over the ceiling. The count covers the branch threads' jobs,
-        which carry the caller's job group like the calling thread's."""
+        it over the ceiling. The count covers the jobs of both pool
+        branches, which carry the caller's job group like the calling
+        thread's."""
         from warc2zim_spark.plans.pipeline import run_pipeline
 
         n_group, n_jobs = count_jobs(

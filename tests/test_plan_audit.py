@@ -519,7 +519,7 @@ class TestDriversBuildNoListFrames:
     """Python workers run kernels only: neither driver builds a frame from
     a Python list (``createDataFrame``, whose reads run Python tasks);
     driver-side rows are JVM literal frames. The method is patched on the
-    class for the duration of the call, so the pools' threads are covered."""
+    class for the duration of the call, so the branch threads are covered."""
 
     @staticmethod
     def _refuse(*args, **kwargs):
@@ -626,3 +626,28 @@ class TestConvertPythonNodes:
                 assert _reaches(n, parents, names, "InMemoryTableScan"), sink
                 assert not _reaches(n, children, names, "InMemoryTableScan"), sink
 
+
+    @pytest.mark.parametrize("charsets", [None, ("utf-8", "ascii")])
+    def test_standalone_probe_one_decode_eval(self, spark, webdata, charsets):
+        """``quarantined_records`` (the ``w_fails`` query) filters a probe
+        that no cache sits under: its ``reason IS NOT NULL`` filter stays
+        above the probe's Project, so ``decode_error`` runs once, in one of
+        the two record-pass nodes. Pushed below it, the filter ran the UDF
+        a second time (2 calls in 3 nodes)."""
+        from warc2zim_spark.kernels.decode import DecodeOptions
+        from warc2zim_spark.operators.quarantine import quarantined_records
+        from warc2zim_spark.operators.records import content_records
+
+        content = content_records(
+            spark.read.parquet(f"{webdata}/warc_records.parquet"),
+            with_payload=True,
+        )
+        df = quarantined_records(
+            content,
+            decode_options=DecodeOptions(charsets_to_try=charsets) if charsets else None,
+        )
+        df.count()
+        nodes = _arrow_udf_calls(df)
+        calls = [name for node in nodes for name, _, _ in node]
+        assert calls.count("decode_error") == 1, nodes
+        assert len(nodes) == 2, nodes

@@ -12,7 +12,8 @@ policy (``host_policy``) are built; then each wave
      per key, no UDF (``dedup_frontier``), and probed against the seen filter
   2. robots gate → politeness budget → global priority + wave budget
      (``schedule_wave``); the schedule is materialized eagerly (one job)
-  3. three independent jobs start from the finished schedule at once:
+  3. three independent jobs start from the finished schedule at once, a
+     and b as branches (``plans.branches``), joined before the wave ends:
      a. the wave write (parquet + metrics), then its commit marker;
      b. bloom mode: the seen-filter update — the wave's keys ORed into the
         prior bitmaps in one pass (``add_to_bloom``), persisted as
@@ -23,7 +24,7 @@ policy (``host_policy``) are built; then each wave
         score decayed), checkpointed. The last wave skips it.
   4. exact mode: the seen set is the committed waves' ``surt_key`` columns,
      so it grows by the scan of the wave just written. Bloom mode: the next
-     wave's probe reads the filter file written by 3b, waiting for it first.
+     wave's probe reads the filter 3b returned.
 
 Determinism contract (north_rule): the scheduled set + ordering per wave is
 a pure function of (seed list, politeness budget, page table) — independent
@@ -36,7 +37,7 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from warc2zim_spark.frontier.politeness import (
@@ -54,6 +55,7 @@ from warc2zim_spark.frontier.seenfilter import (
 )
 from warc2zim_spark.functions import udfs
 from warc2zim_spark.functions.expressions import literal_frame
+from warc2zim_spark.plans.branches import branches
 
 SCORE_DECAY = 0.5
 
@@ -239,10 +241,10 @@ def crawl_wave(
     materialized by an eager checkpoint, and its lazy ``wave_links``. The
     schedule feeds up to three jobs — the driver's write and bloom update
     and the link extraction — each of which would recompute the scheduling
-    windows without the barrier. Eager, because those jobs run concurrently:
-    a lazy checkpoint whose first readers are two threads' jobs at once can
-    deadlock the scheduler (one job marks the RDD checkpointed while the
-    other's stage walk holds its lock)."""
+    windows without the barrier. Eager, because those jobs run concurrently
+    on branch threads: a lazy checkpoint whose first readers are two
+    threads' jobs at once can deadlock the scheduler (one job marks the RDD
+    checkpointed while the other's stage walk holds its lock)."""
     scheduled = schedule_wave(
         frontier, seen, robots, wave_budget=wave_budget, **schedule_opts
     ).localCheckpoint(eager=True)
@@ -317,138 +319,114 @@ def run_crawl(
     if start >= max_waves or ended:
         return _read_waves(spark, ckpt, done)
     pages_keyed = page_lookup(pages).cache()
-    if done:
-        # the frontier the last committed wave produced: its links, derived
-        # from its rows as the run loop derives them from the schedule. This
-        # job fills the lookup cache, before any other reader exists
-        frontier = wave_links(
-            _read_waves(spark, ckpt, done[-1:]).drop("wave"), pages,
-            pages_keyed=pages_keyed,
-        )
-    else:
-        # spread the seed pass (r06): seeds routinely arrive as ONE
-        # partition (a limit, a list, a tiny file), which would run the UDF
-        # pass — and everything until the first exchange — in one task; a
-        # round-robin repartition of the tiny rows restores parallelism
-        # (order is re-established by every downstream sort key)
-        frontier = _normalize_cols(
-            seeds.repartition(spark.sparkContext.defaultParallelism)
-        )
-    frontier = frontier.localCheckpoint(eager=True).filter(_valid())
-    # bloom mode starts from the persisted filter — if completely written:
-    # the update runs beside the wave's write and marker, so a crash can
-    # leave it partial (no _SUCCESS), and it is then rebuilt from the
-    # committed keys. A fresh crawl has none until wave 0's update
-    seen_bloom = None
-    if seen_mode == "bloom" and done:
-        bloom_path = ckpt / f"seen_bloom_wave={done[-1]}"
-        if (bloom_path / "_SUCCESS").exists():
-            seen_bloom = read_bloom(spark, str(bloom_path))
+    try:
+        if done:
+            # the frontier the last committed wave produced: its links,
+            # derived from its rows as the run loop derives them from the
+            # schedule. This job fills the lookup cache, before any other
+            # reader exists
+            frontier = wave_links(
+                _read_waves(spark, ckpt, done[-1:]).drop("wave"), pages,
+                pages_keyed=pages_keyed,
+            )
         else:
-            seen_bloom = build_bloom(
-                _read_waves(spark, ckpt, done).select("surt_key"),
-                num_partitions=bloom_partitions, m_bits=bloom_m_bits,
-            ).localCheckpoint(eager=True)
-    # robots aggregated once per crawl: every wave's gates broadcast
-    # projections of these finished blocks
-    policy = host_policy(robots).localCheckpoint(eager=True)
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-    from pyspark.sql import Observation
-
-    # overlap independent driver-submitted jobs (guide §2.6): actions are
-    # only sequential because the driver calls them sequentially. Per wave,
-    # the schedule's parquet write, the bloom update and the next frontier's
-    # checkpoint all read the SAME materialized schedule and depend on
-    # nothing else of each other — the pool runs the write and the update
-    # beside the checkpoint, so the link extraction back-fills the executor
-    # slots their tails leave idle and the update leaves the wave's critical
-    # path. A fresh crawl's lookup-cache build likewise overlaps wave-0's
-    # scheduling chain, which does not read it; the first link extraction
-    # waits for it, so the cache has one filler. Pool jobs carry the
-    # caller's job group and description, like the calling thread's.
-    with ThreadPoolExecutor(max_workers=3) as pool:
-
-        def submit(fn):
-            return pool.submit(inheritable_thread_target(spark)(fn))
-
-        def update_bloom(prior, keys, path):
-            add_to_bloom(
-                prior, keys,
-                num_partitions=bloom_partitions, m_bits=bloom_m_bits,
-            ).write.mode("overwrite").parquet(path)
-            return read_bloom(spark, path)
-
-        warm_lookup = None if done else submit(pages_keyed.count)
-        bloom_fut = None
-        for wave in range(start, max_waves):
-            if bloom_fut is not None:
-                seen_bloom = bloom_fut.result()
-            seen = None
-            if seen_bloom is None:  # exact mode, or bloom mode's wave 0
-                # no hint: the byte threshold decides from the scan's estimate
-                seen = _read_waves(spark, ckpt, done).select("surt_key")
-            scheduled, next_frontier = crawl_wave(
-                frontier, seen, pages, robots,
-                host_budget=host_budget, wave_budget=wave_budget,
-                pages_keyed=pages_keyed, seen_bloom=seen_bloom,
-                bloom_partitions=bloom_partitions, policy=policy,
+            # spread the seed pass (r06): seeds routinely arrive as ONE
+            # partition (a limit, a list, a tiny file), which would run the
+            # UDF pass — and everything until the first exchange — in one
+            # task; a round-robin repartition of the tiny rows restores
+            # parallelism (order is re-established by every downstream sort
+            # key)
+            frontier = _normalize_cols(
+                seeds.repartition(spark.sparkContext.defaultParallelism)
             )
-            out = scheduled.select(
-                F.lit(wave).alias("wave"), "url", "surt_key", "host", "hops",
-                F.round("score", 9).alias("score"),
-            )
-            # wave metrics ride the write job as an Observation (r06): count
-            # + distinct hosts (size(collect_set) ≡ countDistinct) are
-            # collected while the rows stream to parquet, replacing the
-            # separate aggregation job per wave; out needs no cache — its
-            # other consumers (the seen update) are column projections of
-            # the already-checkpointed schedule
+        frontier = frontier.localCheckpoint(eager=True).filter(_valid())
+        # bloom mode starts from the persisted filter — if completely
+        # written: the update runs beside the wave's write and marker, so a
+        # crash can leave it partial (no _SUCCESS); it is then rebuilt from
+        # the committed keys. A fresh crawl has none until wave 0's update
+        seen_bloom = None
+        if seen_mode == "bloom" and done:
+            bloom_path = ckpt / f"seen_bloom_wave={done[-1]}"
+            if (bloom_path / "_SUCCESS").exists():
+                seen_bloom = read_bloom(spark, str(bloom_path))
+            else:
+                seen_bloom = build_bloom(
+                    _read_waves(spark, ckpt, done).select("surt_key"),
+                    num_partitions=bloom_partitions, m_bits=bloom_m_bits,
+                ).localCheckpoint(eager=True)
+        # robots aggregated once per crawl: every wave's gates broadcast
+        # projections of these finished blocks
+        policy = host_policy(robots).localCheckpoint(eager=True)
+
+        def write_wave(out, wave):
+            """Idempotent wave write (overwrite → safe re-run after partial
+            failure), its metrics, then its commit marker → the scheduled
+            count. The metrics ride the write job as an Observation (r06):
+            count + distinct hosts (size(collect_set) ≡ countDistinct) are
+            collected while the rows stream to parquet."""
             obs = Observation(f"wave={wave}")
-            observed = out.observe(
+            out.observe(
                 obs,
                 F.count(F.lit(1)).alias("n"),
                 F.size(F.collect_set("host")).alias("hosts"),
-            )
-            # idempotent wave write (overwrite → safe re-run after partial
-            # failure), submitted to the pool so the next-frontier
-            # checkpoint below runs concurrently
-            write_fut = submit(
-                lambda df=observed, w=wave: df.write.mode("overwrite").parquet(
-                    str(ckpt / f"wave={w}")
-                )
-            )
-            if seen_mode == "bloom":
-                # the filter persists once per wave (north_rule: resumable
-                # without re-reading every wave's keys); an empty wave
-                # persists its unchanged filter. Submitted before the wave's
-                # size is known, so the update overlaps the write and the
-                # checkpoint below
-                bloom_fut = submit(
-                    lambda prior=seen_bloom, keys=out.select("surt_key"), w=wave:
-                    update_bloom(prior, keys, str(ckpt / f"seen_bloom_wave={w}"))
-                )
-            if wave + 1 < max_waves:
-                # eager checkpoint: one job (a lazy checkpoint + count is two
-                # under AQE), concurrent with the pool's jobs above; the
-                # frontier is built from the unrounded in-memory schedule.
-                # The last wave's frontier has no reader: a later call with
-                # a larger max_waves derives it on entry
-                if warm_lookup is not None:
-                    warm_lookup.result()
-                frontier = next_frontier.localCheckpoint(eager=True).filter(_valid())
-            write_fut.result()
+            ).write.mode("overwrite").parquet(str(ckpt / f"wave={wave}"))
             stats = obs.get
-            n_scheduled = stats["n"]
-            metrics = {"wave": wave, "scheduled": n_scheduled, "hosts": stats["hosts"]}
+            metrics = {"wave": wave, "scheduled": stats["n"], "hosts": stats["hosts"]}
             (ckpt / f"wave={wave}._metrics.json").write_text(json.dumps(metrics))
             (ckpt / f"wave={wave}._SUCCESS_WAVE").write_text("ok")
-            done.append(wave)
-            if n_scheduled == 0:
-                break
-        for fut in (bloom_fut, warm_lookup):
-            if fut is not None:
-                fut.result()
-    pages_keyed.unpersist()
+            return stats["n"]
+
+        def update_bloom(prior, keys, wave):
+            """The filter with the wave's keys ORed in, persisted once per
+            wave (north_rule); an empty wave persists it unchanged."""
+            path = str(ckpt / f"seen_bloom_wave={wave}")
+            add_to_bloom(
+                prior, keys, num_partitions=bloom_partitions, m_bits=bloom_m_bits,
+            ).write.mode("overwrite").parquet(path)
+            return read_bloom(spark, path)
+
+        # per wave, the write and the bloom update run as branches beside
+        # the next frontier's checkpoint here (guide §2.6): all three read
+        # the SAME materialized schedule and nothing else of each other, and
+        # both branches are joined before the wave ends. A fresh crawl's
+        # lookup-cache build overlaps wave 0's scheduling chain, which does
+        # not read it; the first link extraction waits for it
+        with branches(spark) as branch:
+            warm_lookup = None if done else branch(pages_keyed.count)
+            for wave in range(start, max_waves):
+                seen = None
+                if seen_bloom is None:  # exact mode, or bloom mode's wave 0
+                    # no hint: the byte threshold decides from the scan
+                    seen = _read_waves(spark, ckpt, done).select("surt_key")
+                scheduled, next_frontier = crawl_wave(
+                    frontier, seen, pages, robots,
+                    host_budget=host_budget, wave_budget=wave_budget,
+                    pages_keyed=pages_keyed, seen_bloom=seen_bloom,
+                    bloom_partitions=bloom_partitions, policy=policy,
+                )
+                # no cache: its readers project the checkpointed schedule
+                out = scheduled.select(
+                    F.lit(wave).alias("wave"), "url", "surt_key", "host", "hops",
+                    F.round("score", 9).alias("score"),
+                )
+                written = branch(write_wave, out, wave)
+                bloom = None
+                if seen_mode == "bloom":
+                    bloom = branch(update_bloom, seen_bloom, out.select("surt_key"), wave)
+                if wave + 1 < max_waves:
+                    # eager checkpoint: one job (a lazy one + count is two
+                    # under AQE), from the unrounded schedule. The last
+                    # wave's frontier has no reader: a later call with a
+                    # larger max_waves derives it on entry
+                    if warm_lookup is not None:
+                        warm_lookup.result()
+                    frontier = next_frontier.localCheckpoint(eager=True).filter(_valid())
+                if bloom is not None:
+                    seen_bloom = bloom.result()
+                n_scheduled = written.result()
+                done.append(wave)
+                if n_scheduled == 0:
+                    break
+    finally:
+        pages_keyed.unpersist()
     return _read_waves(spark, ckpt, done)

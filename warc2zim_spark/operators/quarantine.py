@@ -176,6 +176,7 @@ def with_failure_reason(
     content: DataFrame,
     encoding_aliases: dict[str, str] | None = None,
     decode_options: "_decode.DecodeOptions | None" = None,
+    deterministic: bool = True,
 ) -> DataFrame:
     """``content`` plus ``stage`` (see ``_stage``) and ``reason`` (null, or
     the ``ExceptionClass: message`` its decode would raise) on every row —
@@ -186,7 +187,11 @@ def with_failure_reason(
     ``run_pipeline`` caches this over its content stream (with the payload
     column it read dropped after the probe), so the fails sink is a
     filter of the stream every other sink reads and the records are paired
-    and canonicalized once."""
+    and canonicalized once.
+
+    ``deterministic=False`` keeps a filter on ``reason`` above the probe in
+    an uncached frame: pushed below a Project, which Catalyst does only when
+    every field is deterministic, it runs the UDF again (SURVEY §4.2)."""
     opts = merged_options(encoding_aliases, decode_options)
     use_head = "payload_head" in content.columns and not needs_full_payload(opts)
     if not use_head and "payload" not in content.columns:
@@ -199,9 +204,11 @@ def with_failure_reason(
         )
     err_udf = (
         decode_error
-        if encoding_aliases is None and decode_options is None
+        if encoding_aliases is None and decode_options is None and deterministic
         else make_decode_error_udf(options=opts)
     )
+    if not deterministic:
+        err_udf = err_udf.asNondeterministic()  # marks this fresh UDF only
     staged = content.withColumn("stage", _stage())
     return staged.withColumn(
         "reason",
@@ -245,7 +252,9 @@ def quarantined_records(
     ``decode_options`` is the reference's decode-tuning CLI surface
     (main.py:113-143); ``encoding_aliases`` rows merge over its aliases."""
     return failed_rows(
-        with_failure_reason(content_with_payload, encoding_aliases, decode_options)
+        with_failure_reason(
+            content_with_payload, encoding_aliases, decode_options, deterministic=False
+        )
     )
 
 

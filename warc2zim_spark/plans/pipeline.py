@@ -21,10 +21,8 @@ from __future__ import annotations
 
 import json
 import time
-from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -57,6 +55,7 @@ from warc2zim_spark.operators.redirects import (
     kept_sources,
     redirect_edges,
 )
+from warc2zim_spark.plans.branches import branches
 
 
 def run_pipeline(
@@ -93,43 +92,40 @@ def run_pipeline(
       each side of the pairing shuffle: the stream also carries each
       redirect's ``location_path`` and each revisit's ``refers_to_path``,
       so branch (a) and the ``aliases`` sink run no Python.
-    * The redirect fixpoint runs once; both the redirects and the expected
-      sinks (and the --url presence check) read its kept-source keys,
-      materialized by an eager local checkpoint inside branch (a), so no
-      reader ever triggers a checkpoint and no lock orders them.
+    * The redirect fixpoint runs once; its kept-source keys, materialized
+      by an eager local checkpoint in branch (a), feed the redirects and
+      expected sinks and the --url presence check.
     * The main page is redirect-followed once, by a bounded single-row
       walk, to a (zim_path, url) tuple; its one record is located on the
       cached stream, fetched from the raw records by (file_seq, rec_seq),
       decoded and parsed once on the driver, and that parse feeds both the
       favicon candidates and the metadata title/lang cascade.
 
-    Three branches run concurrently: (b) on the calling thread, (a) and (c)
-    on a fixed 3-thread pool (the verdict and its sinks are separate tasks).
-    The caller's job group and description reach every job.
+    Three branches run concurrently (``plans.branches``), each job under
+    the caller's job group and description:
 
-    (a) the redirect verdict (one eager checkpoint), then the ``redirects``
-        and ``expected`` sinks;
-    (b) on the calling thread: the ``fails`` sink, the abort check, the
-        ``items`` sink, then the ``aliases`` sink;
-    (c) the A4 pick (or --url) and the J5 walk (one lookup job per hop),
-        the --url presence check, the main-page record read (one job), the
-        illustration (one action: capture, size, rank, convert), then the
-        metadata rows (at most 12;
-        one action collects them with the date range and warcinfo software).
+    (c) first, on a pool thread: the main page (A4 pick or --url, J5 walk),
+        its record read, the illustration, then the metadata rows (at most
+        12). It reads the content stream and builds no cache over it;
+    (b) on the calling thread: the ``fails`` sink (its job fills the content
+        stream's cache), the abort check, the ``items`` sink, then the
+        ``aliases`` sink;
+    (a) on a pool thread once the abort check passes: the redirect verdict
+        (one eager checkpoint, building the ``edges`` and ``expected``
+        caches over the finished stream), then the ``redirects`` and
+        ``expected`` sinks.
 
-    Only the verdict and (c) start before the abort check, and neither
-    writes: no sink but ``fails`` is written before the check passes, and
-    (a)'s sinks are submitted once it has. The ``metadata`` sink
-    is written last, once ``Counter-Items`` is known. The call returns or
-    raises only after every branch has finished, so no job outlives it.
+    So no cache is built over one still being built, and no sink but
+    ``fails`` is written before the check passes. The ``metadata`` sink is
+    written last, once ``Counter-Items`` is known. The call returns or
+    raises once every branch has finished, releasing its caches either way.
 
-    Errors come in the order of the sequential plan: the metadata
-    validation, the failed-records abort, then (with the four data sinks
-    written) "Unable to find main path", the --url "Unable to find main
-    page", then illustration errors. One exception: a ``main_url`` that
-    does not canonicalize is rejected before any job runs, like the
-    metadata validation. A failed Spark job surfaces from branch (b) first,
-    then (a), then (c).
+    Errors: the metadata validation and a ``main_url`` that does not
+    canonicalize are raised before any job runs, the failed-records abort
+    before branch (a) starts, and "Unable to find main path" then the --url
+    "Unable to find main page" after the join, with the four data sinks
+    written. Any other failure (a failed job, an illustration error) is the
+    branches' first failure: it cancels the others' jobs and is raised.
 
     ``metadata_args``: keyword passthrough to ``zim_metadata`` (title,
     language, description, tags, ... — the reference's CLI flags).
@@ -257,26 +253,22 @@ def run_pipeline(
     obs_aliases = Observation("aliases_sink")
     obs_expected = Observation("expected_sink")
 
-    def redirect_verdict():
-        """Branch (a), first half: ONE fixpoint, materialized here by an
-        eager local checkpoint — both sinks and the --url presence check
-        then read finished kept-source keys, never a checkpoint in
-        progress."""
-        return kept_sources(edges, expected).localCheckpoint(eager=True)
-
-    def redirect_sinks() -> None:
-        """Branch (a), second half: the two sinks of the verdict."""
-        kept = verdict.result()
+    def redirect_branch():
+        """Branch (a): ONE fixpoint, materialized by an eager local
+        checkpoint, then its two sinks → the verdict (kept-source keys),
+        which the --url presence check reads after the join."""
+        kept = kept_sources(edges, expected).localCheckpoint(eager=True)
         kept_redirects(edges, expected, kept).observe(
             obs_redirects, F.count(F.lit(1)).alias("rows")
         ).write.mode("overwrite").parquet(str(out / "redirects"))
         expected_with_redirects(edges, expected, kept).observe(
             obs_expected, F.count(F.lit(1)).alias("rows")
         ).write.mode("overwrite").parquet(str(out / "expected"))
+        return kept
 
-    def main_page_rows() -> tuple[str, list]:
+    def main_page_rows() -> tuple[str, list] | None:
         """Branch (c): main page, illustration, metadata rows → (Main-Path,
-        the collected metadata rows)."""
+        the collected metadata rows), or None without a main path."""
         # --url override or A4 auto-selection, then the J5 redirect follow —
         # Main-Path must point at the FINAL target when the landing path is
         # a redirect source (converter.py:586-606). Walked ONCE here.
@@ -284,24 +276,8 @@ def run_pipeline(
             content, (main_path, main_url) if main_url is not None else None
         )
         if resolved is None:
-            # converter.py:315-316: "Unable to find main path, aborting" — a
-            # ZIM without a main page is unusable; fail rather than emit one
-            raise ValueError("Unable to find main path, aborting")
+            return None
         resolved_path, page_url = resolved
-        if main_url is not None:
-            # a user-specified main page must actually exist in the archive
-            # (converter.py:612-614 "Unable to find main page")
-            full_expected = expected_with_redirects(edges, expected, verdict.result())
-            present = (
-                full_expected.filter(F.col("zim_path") == resolved_path)
-                .limit(1)
-                .count()
-            )
-            if not present:
-                raise ValueError(
-                    f"Unable to find main page {resolved_path!r} "
-                    "(resolved from --url) among expected items, aborting"
-                )
         # the main page's ONE record: read by position, decoded and parsed
         # once; its icons feed the favicon discovery, its title/lang the
         # metadata cascade
@@ -341,54 +317,70 @@ def run_pipeline(
         )
         return resolved_path, [tuple(r) for r in meta.collect()]
 
-    # overlap the three independent branches (actions submitted from one
-    # thread run one after another): (b) runs here, (a) and (c) on the
-    # pool, the caller's job group and description inherited. Before the
-    # abort check only the verdict and (c) run, and neither writes a sink;
-    # (a)'s sinks are submitted once the check passes. Leaving the block
-    # waits for every branch, so no job outlives a raise.
-    with ThreadPoolExecutor(max_workers=3) as pool:
+    # (c) builds no cache over the content stream, so it starts first; (a)
+    # builds two, so it starts once the fails write has built the stream
+    cached = [content, edges, expected]
+    try:
+        with branches(spark) as branch:
+            metadata_rows = branch(main_page_rows)
+            fails.observe(obs_fails, F.count(F.lit(1)).alias("rows")).write.mode(
+                "overwrite"
+            ).parquet(str(fails_dir))
+            n_fails = obs_fails.get["rows"]
+            if n_fails and not continue_on_error:
+                sample = [r.url for r in fails.limit(3).collect()]
+                raise ValueError(
+                    f"{n_fails} record(s) failed processing (e.g. {sample}); "
+                    f"aborting — pass continue_on_error=True to skip them "
+                    f"(details in {fails_dir})"
+                )
+            verdict = branch(redirect_branch)
 
-        def branch(fn):
-            return pool.submit(inheritable_thread_target(spark)(fn))
+            # ---- pass 2: execute -----------------------------------------
+            # record-level exclusion BEFORE first-wins: a failing winner falls
+            # back to the next record for the same path, like the reference's
+            # skip loop
+            item_source = exclude_failed_records(content, fails) if n_fails else content
+            items = items_table(item_source, include_domains).cache()
+            cached.append(items)
+            # S8: static assets union into the item sink (converter.py:396-409)
+            all_items = items_with_static(items, static_asset_items(spark, custom_css))
+            all_items.observe(
+                obs_items,
+                F.count(F.lit(1)).alias("rows"),
+                F.sum("payload_len").alias("bytes"),
+                # DISTINCT aggregates are disallowed in observed metrics — HLL
+                F.approx_count_distinct("mime").alias("mimes"),
+            ).write.mode("overwrite").parquet(str(out / "items"))
+            n_all_items = obs_items.get["rows"]
+            _progress(int(n_all_items), int(n_all_items))
+            revisit_aliases(content, items).observe(
+                obs_aliases, F.count(F.lit(1)).alias("rows")
+            ).write.mode("overwrite").parquet(str(out / "aliases"))
 
-        verdict = branch(redirect_verdict)
-        metadata_rows = branch(main_page_rows)
-        fails.observe(obs_fails, F.count(F.lit(1)).alias("rows")).write.mode(
-            "overwrite"
-        ).parquet(str(fails_dir))
-        n_fails = obs_fails.get["rows"]
-        if n_fails and not continue_on_error:
-            sample = [r.url for r in fails.limit(3).collect()]
-            raise ValueError(
-                f"{n_fails} record(s) failed processing (e.g. {sample}); "
-                f"aborting — pass continue_on_error=True to skip them "
-                f"(details in {fails_dir})"
-            )
-        redirect_sinks_done = branch(redirect_sinks)
-
-        # ---- pass 2: execute ---------------------------------------------
-        # record-level exclusion BEFORE first-wins: a failing winner falls
-        # back to the next record for the same path, like the reference's
-        # skip loop
-        item_source = exclude_failed_records(content, fails) if n_fails else content
-        items = items_table(item_source, include_domains).cache()
-        # S8: static assets union into the item sink (converter.py:396-409)
-        all_items = items_with_static(items, static_asset_items(spark, custom_css))
-        all_items.observe(
-            obs_items,
-            F.count(F.lit(1)).alias("rows"),
-            F.sum("payload_len").alias("bytes"),
-            # DISTINCT aggregates are disallowed in observed metrics — HLL
-            F.approx_count_distinct("mime").alias("mimes"),
-        ).write.mode("overwrite").parquet(str(out / "items"))
-        n_all_items = obs_items.get["rows"]
-        _progress(int(n_all_items), int(n_all_items))
-        revisit_aliases(content, items).observe(
-            obs_aliases, F.count(F.lit(1)).alias("rows")
-        ).write.mode("overwrite").parquet(str(out / "aliases"))
-        redirect_sinks_done.result()
+        if metadata_rows.result() is None:
+            # converter.py:315-316: "Unable to find main path, aborting" — a
+            # ZIM without a main page is unusable; fail rather than emit one
+            raise ValueError("Unable to find main path, aborting")
         resolved_path, meta_rows = metadata_rows.result()
+        if main_url is not None:
+            # a user-specified main page must actually exist in the archive
+            # (converter.py:612-614 "Unable to find main page")
+            present = (
+                expected_with_redirects(edges, expected, verdict.result())
+                .filter(F.col("zim_path") == resolved_path)
+                .limit(1)
+                .count()
+            )
+            if not present:
+                raise ValueError(
+                    f"Unable to find main page {resolved_path!r} "
+                    "(resolved from --url) among expected items, aborting"
+                )
+    finally:
+        # dependents first: uncaching a cache recompiles unbuilt ones over it
+        for df in reversed(cached):
+            df.unpersist()
 
     # the engine's own operational entries close the metadata sink, once the
     # item count is known
@@ -412,6 +404,4 @@ def run_pipeline(
     (out / "metrics.json").write_text(json.dumps(metrics))
     written = int(n_all_items) + int(metrics["redirects"]) + int(metrics["aliases"])
     _progress(written, written)
-    for df in (items, edges, expected, fails, content):
-        df.unpersist()
     return metrics
